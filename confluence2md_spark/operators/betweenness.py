@@ -31,11 +31,13 @@ TOGETHER in one (seed, page)-keyed relation:
 
 Scale shape: each forward level is one edge join + groupBy-sum keyed on
 (seed, node) ids; each backward level the same; state is |S|·|V| rows of
-ids and two BIGINTs — the textbook distributed Brandes layout. Rounds
-are bounded by the BFS depth from the seeds; the loop RAISES if a
-frontier survives `max_depth` (a truncated BFS would silently corrupt
-sigma for longer paths), which also guarantees the unrolled DuckDB twin
-— same levels, same floor micros — matches bit-for-bit.
+ids and two BIGINTs — the textbook distributed Brandes layout. Both
+phases run through plans/iterate.fixpoint with a checkpoint every level
+(each level reads the previous state twice). Rounds are bounded by the
+BFS depth from the seeds; the forward loop RAISES if a frontier survives
+`max_depth` (a truncated BFS would silently corrupt sigma for longer
+paths), which also guarantees the unrolled DuckDB twin — same levels,
+same floor micros — matches bit-for-bit.
 """
 
 from __future__ import annotations
@@ -43,9 +45,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from confluence2md_spark.operators.graph import _release_local_checkpoint
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 MICROS = 1_000_000
+
+
+def _int64_guard(bfs: DataFrame) -> None:
+    """Magnitude guard: the backward step computes sigma·(10^6+delta)
+    in BIGINT. delta itself is bounded by 10^6 per reachable successor,
+    so delta ≤ 10^6·R where R = max nodes reachable from one seed; with
+    sigma ≤ 10^6 the product stays under 10^6·10^6·(1+R), which fits
+    int64 iff R ≲ 9.2·10^6. Guard BOTH factors — sigma alone is not
+    enough on a large-diameter graph with millions of reachable nodes per
+    seed — and RAISE with the DECIMAL(38,0) ladder advice (the
+    stats_extendedprice lesson) rather than silently wrap. One pass over
+    the checkpointed BFS relation yields both values."""
+    guard = (
+        bfs.groupBy("seed")
+        .agg(F.count(F.lit(1)).alias("r"), F.max("sigma").alias("ms"))
+        .agg(F.max("r").alias("mr"), F.max("ms").alias("msig"))
+        .first()
+    )
+    max_sigma = guard["msig"] or 0
+    max_reach = guard["mr"] or 0
+    if max_sigma > MICROS:
+        raise RuntimeError(
+            f"betweenness sigma overflow guard: max sigma "
+            f"{max_sigma} > 1e6; re-run with use_decimal=True "
+            "(exact DECIMAL(38,0) ladder) for this graph"
+        )
+    if max_reach > 9_000_000:
+        raise RuntimeError(
+            f"betweenness delta overflow guard: {max_reach} nodes "
+            "reachable from one seed bounds delta at "
+            f"~{max_reach}e6, overflowing sigma*(1e6+delta) in "
+            "BIGINT; re-run with use_decimal=True"
+        )
 
 
 def betweenness_micros(
@@ -85,101 +120,67 @@ def betweenness_micros(
     try:
         nodes = adj.select(F.col("v").alias("page")).distinct()
         s = seeds.select("page").distinct().join(nodes, "page", "semi")
-        # bfs: (seed, page, dist, sigma) for settled nodes; frontier = rows
-        # at the current level. sigma sums ride in DECIMAL(38,0) on the
-        # ladder path so the FORWARD accumulation cannot wrap either.
+        # bfs: (seed, page, dist, sigma) for settled nodes; the frontier is
+        # the rows at the deepest level. sigma sums ride in DECIMAL(38,0)
+        # on the ladder path so the FORWARD accumulation cannot wrap either.
         sigma_t = "decimal(38,0)" if use_decimal else "bigint"
-        bfs = s.select(
-            F.col("page").alias("seed"),
-            F.col("page").alias("page"),
-            F.lit(0).cast("bigint").alias("dist"),
-            F.lit(1).cast(sigma_t).alias("sigma"),
-        ).localCheckpoint(eager=True)
-        frontier = bfs
-        depth = 0
-        while True:
+        level = 0  # the level the last forward step settled
+
+        def expand(bfs: DataFrame) -> DataFrame:
+            nonlocal level
+            level += 1
+            frontier = bfs.filter(F.col("dist") == level - 1)
             cand = (
                 frontier.join(adj, frontier["page"] == adj["v"])
                 .select("seed", F.col("u").alias("page"), "sigma")
                 .groupBy("seed", "page")
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            nxt = (
-                cand.join(bfs.select("seed", "page"), ["seed", "page"], "anti")
-                .select(
+            nxt = cand.join(bfs.select("seed", "page"), ["seed", "page"], "anti")
+            return bfs.unionByName(
+                nxt.select(
                     "seed",
                     "page",
-                    F.lit(depth + 1).cast("bigint").alias("dist"),
+                    F.lit(level).cast("bigint").alias("dist"),
                     "sigma",
                 )
-                .localCheckpoint(eager=True)
             )
-            if nxt.count() == 0:
-                _release_local_checkpoint(nxt)
-                break
-            depth += 1
-            if depth > max_depth:
-                raise RuntimeError(
-                    f"betweenness BFS exceeded max_depth={max_depth}"
-                )
-            nbfs = bfs.unionByName(nxt).localCheckpoint(eager=True)
-            _release_local_checkpoint(bfs)
-            if frontier is not bfs:
-                _release_local_checkpoint(frontier)
-            _release_local_checkpoint(nxt)
-            bfs, frontier = nbfs, nbfs.filter(F.col("dist") == depth)
-        # Magnitude guard: the backward step computes sigma·(10^6+delta)
-        # in BIGINT. delta itself is bounded by 10^6 per reachable
-        # successor, so delta ≤ 10^6·R where R = max nodes reachable from
-        # one seed; with sigma ≤ 10^6 the product stays under
-        # 10^6·10^6·(1+R), which fits int64 iff R ≲ 9.2·10^6. Guard BOTH
-        # factors — sigma alone is not enough on a large-diameter graph
-        # with millions of reachable nodes per seed — and RAISE with the
-        # DECIMAL(38,0) ladder advice (the stats_extendedprice lesson)
-        # rather than silently wrap.
-        if not use_decimal:
-            # one pass over the checkpointed BFS relation for BOTH guard
-            # values (was two separate driver actions — review finding)
-            guard = (
-                bfs.groupBy("seed")
-                .agg(F.count(F.lit(1)).alias("r"), F.max("sigma").alias("ms"))
-                .agg(F.max("r").alias("mr"), F.max("ms").alias("msig"))
-                .first()
-            )
-            max_sigma = guard["msig"] or 0
-            max_reach = guard["mr"] or 0
-            if max_sigma > MICROS:
-                raise RuntimeError(
-                    f"betweenness sigma overflow guard: max sigma "
-                    f"{max_sigma} > 1e6; re-run with use_decimal=True "
-                    "(exact DECIMAL(38,0) ladder) for this graph"
-                )
-            if max_reach > 9_000_000:
-                raise RuntimeError(
-                    f"betweenness delta overflow guard: {max_reach} nodes "
-                    "reachable from one seed bounds delta at "
-                    f"~{max_reach}e6, overflowing sigma*(1e6+delta) in "
-                    "BIGINT; re-run with use_decimal=True"
-                )
-        # backward: delta at the deepest level is 0; walk levels down.
-        acc: DataFrame | None = None  # settled deltas for levels > current
-        for lvl in range(depth - 1, -1, -1):
+
+        # a level that settles nothing is the fixpoint; one past max_depth
+        # must be it, or the BFS is deeper than max_depth
+        bfs = fixpoint(
+            expand,
+            s.select(
+                F.col("page").alias("seed"),
+                F.col("page").alias("page"),
+                F.lit(0).cast("bigint").alias("dist"),
+                F.lit(1).cast(sigma_t).alias("sigma"),
+            ),
+            max_iter=max_depth + 1,
+            converged=lambda _, bfs: bfs.filter(F.col("dist") == level).count()
+            == 0,
+            checkpoint_every=1,
+            what=f"betweenness BFS (max_depth={max_depth})",
+        )
+        depth = level - 1
+        # backward: delta at the deepest level is 0; walk levels down,
+        # accumulating (seed, page, delta) for every level settled so far.
+        lvl = depth
+
+        def accumulate(acc: DataFrame) -> DataFrame:
+            nonlocal lvl
+            lvl -= 1
             cur = bfs.filter(F.col("dist") == lvl)
-            succ = bfs.filter(F.col("dist") == lvl + 1).select(
-                "seed", F.col("page").alias("w"), F.col("sigma").alias("sw")
-            )
-            if acc is not None:
-                succ = succ.join(
+            succ = (
+                bfs.filter(F.col("dist") == lvl + 1)
+                .select("seed", F.col("page").alias("w"), F.col("sigma").alias("sw"))
+                .join(
                     acc.select("seed", F.col("page").alias("w"), "delta"),
                     ["seed", "w"],
                     "left",
-                ).select(
-                    "seed", "w", "sw", F.coalesce("delta", F.lit(0)).alias("dw")
                 )
-            else:
-                succ = succ.select(
-                    "seed", "w", "sw", F.lit(0).cast("bigint").alias("dw")
-                )
+                .select("seed", "w", "sw", F.coalesce("delta", F.lit(0)).alias("dw"))
+            )
             contrib = (
                 cur.join(adj, cur["page"] == adj["v"])
                 .select("seed", "page", "sigma", F.col("u").alias("w"))
@@ -202,46 +203,48 @@ def betweenness_micros(
                 .groupBy("seed", "page")
                 .agg(F.sum("c").alias("delta"))
             )
-            lvl_delta = (
+            return acc.unionByName(
                 cur.select("seed", "page")
                 .join(contrib, ["seed", "page"], "left")
                 .select(
                     "seed", "page", F.coalesce("delta", F.lit(0)).alias("delta")
                 )
             )
-            nacc = (
-                lvl_delta
-                if acc is None
-                else acc.unionByName(lvl_delta)
-            ).localCheckpoint(eager=True)
-            if acc is not None:
-                _release_local_checkpoint(acc)
-            acc = nacc
-        if acc is None:  # no levels at all (seeds isolated or absent)
-            out = nodes.select(
-                "page", F.lit(0).cast("bigint").alias("betweenness_micros")
-            )
-        else:
+
+        def betweenness(acc: DataFrame) -> DataFrame:
             per_node = (
                 acc.filter(F.col("page") != F.col("seed"))
                 .groupBy("page")
                 .agg(F.sum("delta").alias("bc"))
             )
-            out = nodes.join(per_node, "page", "left").select(
-                "page",
-                F.coalesce("bc", F.lit(0))
-                .cast("bigint")
-                .alias("betweenness_micros"),
+            return (
+                nodes.join(per_node, "page", "left")
+                .select(
+                    "page",
+                    F.coalesce("bc", F.lit(0))
+                    .cast("bigint")
+                    .alias("betweenness_micros"),
+                )
+                .orderBy(F.desc("betweenness_micros"), F.asc("page"))
             )
-        out = out.orderBy(
-            F.desc("betweenness_micros"), F.asc("page")
-        ).localCheckpoint(eager=True)
-        if acc is not None:
-            _release_local_checkpoint(acc)
-        _release_local_checkpoint(bfs)
-        return out
+
+        try:
+            if not use_decimal:
+                _int64_guard(bfs)
+            return fixpoint(
+                accumulate,
+                bfs.filter(F.col("dist") == depth).select(
+                    "seed", "page", F.lit(0).cast("bigint").alias("delta")
+                ),
+                max_iter=depth,
+                checkpoint_every=1,
+                what="betweenness backward walk",
+                finish=betweenness,
+            )
+        finally:
+            release(bfs)
     finally:
-        _release_local_checkpoint(adj)
+        release(adj)
 
 
 def betweenness_sql_duck(

@@ -30,10 +30,10 @@ the old minimum), so a lazy loop DOUBLES the logical plan per round —
 2^iters subtree copies, and Catalyst analysis time, not execution,
 dominated the whole query (measured ~2 min at iters=6 on a 461-node
 graph; the same trap hits_micros documents for its per-half-step
-normalization). `checkpoint_every` therefore defaults to 1: one eager
-node-sized materialization per round, the same per-round state HITS
-and hash-min CC already accept, with superseded checkpoints released
-as soon as the next round lands.
+normalization). The rounds therefore run through plans/iterate.fixpoint
+with a checkpoint every round: one eager node-sized materialization per
+round, the same per-round state HITS and star-contraction CC accept,
+with superseded checkpoints released as soon as the next round lands.
 """
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from confluence2md_spark.operators.graph import _release_local_checkpoint
+from confluence2md_spark.plans.iterate import fixpoint
 
 
 def seed_distance(
@@ -50,7 +50,6 @@ def seed_distance(
     src: str = "subj",
     dst: str = "obj",
     iters: int = 6,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(page, dist) for every node of the undirected simple graph induced
     by `edges`; dist = BFS hops to the nearest row of `seeds` (a `page`
@@ -68,6 +67,29 @@ def seed_distance(
         .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
         .persist()
     )
+
+    def step(dist: DataFrame) -> DataFrame:
+        cand = (
+            adj.join(
+                dist.filter(F.col("d").isNotNull()).select(
+                    F.col("page").alias("u"), F.col("d").alias("du")
+                ),
+                "u",
+            )
+            .groupBy("v")
+            .agg((F.min("du") + 1).alias("cand"))
+        )
+        return dist.join(cand.withColumnRenamed("v", "page"), "page", "left").select(
+            "page",
+            F.expr(
+                "CASE WHEN d IS NULL THEN cand "
+                "WHEN cand IS NULL THEN d "
+                "ELSE LEAST(d, cand) END"
+            )
+            .cast("bigint")
+            .alias("d"),
+        )
+
     try:
         nodes = adj.select(F.col("v").alias("page")).distinct()
         dist = nodes.join(
@@ -78,44 +100,18 @@ def seed_distance(
             "page",
             F.when(F.col("_s") == 1, F.lit(0)).cast("bigint").alias("d"),
         )
-        prev_ckpt: DataFrame | None = None
-        for i in range(iters):
-            cand = (
-                adj.join(
-                    dist.filter(F.col("d").isNotNull()).select(
-                        F.col("page").alias("u"), F.col("d").alias("du")
-                    ),
-                    "u",
-                )
-                .groupBy("v")
-                .agg((F.min("du") + 1).alias("cand"))
-            )
-            dist = (
-                dist.join(cand.withColumnRenamed("v", "page"), "page", "left")
-                .select(
-                    "page",
-                    F.expr(
-                        "CASE WHEN d IS NULL THEN cand "
-                        "WHEN cand IS NULL THEN d "
-                        "ELSE LEAST(d, cand) END"
-                    )
-                    .cast("bigint")
-                    .alias("d"),
-                )
-            )
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-                dist = dist.localCheckpoint(eager=True)
-                if prev_ckpt is not None:
-                    _release_local_checkpoint(prev_ckpt)
-                prev_ckpt = dist
-        out = dist.select(
-            "page", F.coalesce("d", F.lit(-1)).cast("bigint").alias("dist")
-        ).localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
+        return fixpoint(
+            step,
+            dist,
+            max_iter=iters,
+            checkpoint_every=1,
+            what="seed distance",
+            finish=lambda dist: dist.select(
+                "page", F.coalesce("d", F.lit(-1)).cast("bigint").alias("dist")
+            ),
+        )
     finally:
         adj.unpersist()
-    return out
 
 
 def seed_distance_sql_duck(

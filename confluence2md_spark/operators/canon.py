@@ -29,7 +29,7 @@ def build_canonical_map(
     Alias edges come from the deterministic df-capped token inverted index
     over page titles (I2's short-string path; `linking.token_block_pairs` —
     documents use MinHash/LSH); components from the hybrid CC operator (I3:
-    driver union-find under the pair cap, iterative hash-min above it);
+    driver union-find under the pair cap, star contraction above it);
     canonical id = min doc_id in the component.
 
     `num_partitions` should track the TITLE volume, not the cluster width —

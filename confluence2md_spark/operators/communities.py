@@ -25,9 +25,10 @@ each round is one shuffle keyed on (node, label) for the vote count
 plus one keyed on node for the argmax — both keys are node ids, never
 document text. min_by(label, struct(-c, label)) does the
 (count desc, label asc) pick inside the aggregate, so no window/sort
-over the full node set is needed. Lineage is localCheckpoint-truncated
-every `checkpoint_every` rounds, the same discipline as the PageRank
-and connected-components loops — an iters=20 run on a 10^12-edge graph
+over the full node set is needed. The rounds run through
+plans/iterate.fixpoint, which localCheckpoints the labels every 5 rounds
+(each round reads the previous labels once, so the plan between
+checkpoints stays 5 joins deep) — an iters=20 run on a 10^12-edge graph
 must not carry a 20-join plan into every stage resubmission.
 
 Reference parity note: the reference CLI (aqueeb/confluence2md) stops
@@ -41,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from confluence2md_spark.operators.graph import _release_local_checkpoint
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 
 def label_propagation(
@@ -49,7 +50,6 @@ def label_propagation(
     src: str = "subj",
     dst: str = "obj",
     iters: int = 4,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(page, community) after `iters` synchronous LPA rounds over the
     undirected simple graph induced by `edges`. Deterministic: max
@@ -69,38 +69,34 @@ def label_propagation(
         .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
         .persist()
     )
-    try:
-        labels = adj.select(F.col("v").alias("page")).distinct().select(
-            "page", F.col("page").alias("label")
-        )
-        prev_ckpt: DataFrame | None = None
-        for i in range(iters):
-            votes = (
-                adj.join(
-                    labels.select(
-                        F.col("page").alias("u"), F.col("label")
-                    ),
-                    "u",
-                )
-                .groupBy("v", "label")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+
+    def step(labels: DataFrame) -> DataFrame:
+        votes = (
+            adj.join(
+                labels.select(F.col("page").alias("u"), F.col("label")), "u"
             )
-            labels = votes.groupBy("v").agg(
-                F.expr("min_by(label, struct(-c, label))").alias("label")
-            ).select(F.col("v").alias("page"), "label")
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-                labels = labels.localCheckpoint(eager=True)
-                if prev_ckpt is not None:
-                    _release_local_checkpoint(prev_ckpt)
-                prev_ckpt = labels
-        labels = labels.select(
-            "page", F.col("label").alias("community")
-        ).localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
+            .groupBy("v", "label")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        )
+        return votes.groupBy("v").agg(
+            F.expr("min_by(label, struct(-c, label))").alias("label")
+        ).select(F.col("v").alias("page"), "label")
+
+    try:
+        return fixpoint(
+            step,
+            adj.select(F.col("v").alias("page"))
+            .distinct()
+            .select("page", F.col("page").alias("label")),
+            max_iter=iters,
+            checkpoint_every=5,
+            what="label propagation",
+            finish=lambda labels: labels.select(
+                "page", F.col("label").alias("community")
+            ),
+        )
     finally:
         adj.unpersist()
-    return labels
 
 
 def modularity_micros(
@@ -138,6 +134,7 @@ def modularity_micros(
         .distinct()
         .persist()
     )
+    comm = None
     try:
         comm = label_propagation(und, src="a", dst="b", iters=iters)
         m_rel = und.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
@@ -184,10 +181,11 @@ def modularity_micros(
             )
             .orderBy("community")
         )
-        out = out.localCheckpoint(eager=True)
+        return out.localCheckpoint(eager=True)
     finally:
+        if comm is not None:
+            release(comm)
         und.unpersist()
-    return out
 
 
 def modularity_sql_duck(edges_cte_body: str, iters: int = 4) -> str:

@@ -1,21 +1,24 @@
-"""Connected components I3 (SURVEY.md §2.I) — hash-min label propagation as
-iterative DataFrame joins (no GraphFrames jar in this sandbox or guaranteed
-on a customer cluster).
+"""Connected components I3 (SURVEY.md §2.I) as iterative DataFrame joins
+(no GraphFrames jar in this sandbox or guaranteed on a customer cluster).
 
-Each iteration: every vertex takes min(own label, neighbors' labels); stop at
-fixpoint. Converges in O(graph diameter) iterations (alias graphs from
-title/LSH linking are near-cliques — diameter 1-2; `max_iter` bounds
-pathological chains). `localCheckpoint()` after every iteration truncates
-lineage so the DAG stays O(1) deep regardless of iteration count
-(SURVEY.md §4.3).
+Two paths, picked by the edge count: under `driver_max_edges` a driver
+union-find labels the (small) alias graph in one collect; past it,
+alternating large-star / small-star contraction runs distributed. Star
+contraction converges in O(log n) rounds on ANY graph, including long
+chains, where label propagation (hash-min) needs O(diameter). Its rounds
+run through plans/iterate.fixpoint, which checkpoints every round (each
+round reads the previous edge set several times), frees superseded
+rounds, and raises if `max_iter` rounds do not reach the fixpoint.
 """
 
 from __future__ import annotations
 
-import warnings
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 
 def _driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -23,7 +26,7 @@ def _driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
     broadcast the labels back. The alias graph is SPARSE relative to the
     corpus (pairs ∝ duplicated pages, ~0.1-10% of rows — 3.1k pairs at 36k
     docs, ~128k at 1.28M): under `driver_max_edges` a driver pass replaces
-    O(diameter) iterative join jobs (each a full shuffle + fixpoint-probe
+    O(log n) iterative join rounds (each full shuffles + a fixpoint-probe
     job) with ONE collect over an already-materialized relation. Same
     contract: component = min vertex id, every vertex labeled."""
     spark = edges.sparkSession
@@ -60,13 +63,12 @@ def _driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def _star_contraction(
-    edges: DataFrame, src: str, dst: str, max_iter: int, on_max_iter: str
+    edges: DataFrame, src: str, dst: str, max_iter: int
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.,
     'Connected Components in MapReduce and Beyond' — public algorithm):
-    converges in O(log n) ROUNDS on ANY graph, including long chains where
-    hash-min needs O(diameter). Each round is two phases; each phase is one
-    groupBy + one join over the (shrinking) edge set:
+    converges in O(log n) ROUNDS on ANY graph. Each round is two phases;
+    each phase is one groupBy + one join over the (shrinking) edge set:
 
       large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u})
       small-star(u): connect every neighbor v ≤ u, and u itself, to m
@@ -79,12 +81,8 @@ def _star_contraction(
     e0 = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-    )
-    vertices = (
-        e0.select(F.col("u").alias("id"))
-        .unionByName(e0.select(F.col("v").alias("id")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=True)
     )
 
     def sym(df: DataFrame) -> DataFrame:
@@ -108,39 +106,48 @@ def _star_contraction(
         ).first()
         return (row["n"], row["h"])
 
-    e = e0.distinct().localCheckpoint()
-    sig = signature(e)
-    converged = False
-    for _ in range(max_iter):
+    def contract(e: DataFrame) -> DataFrame:
         sm = with_min(e)
         large = sm.filter(F.col("v") > F.col("u")).select(
             F.col("v").alias("u"), F.col("m").alias("v")
         )
-        e_l = large.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
-        sm2 = with_min(e_l)
+        sm2 = with_min(large.filter(F.col("u") != F.col("v")).distinct())
         small = sm2.filter(F.col("v") <= F.col("u")).select(
             F.col("v").alias("u"), F.col("m").alias("v")
         ).unionByName(sm2.select("u", F.col("m").alias("v")))
-        e = small.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
-        new_sig = signature(e)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        msg = (
-            f"star-contraction did not stabilize within max_iter={max_iter} "
-            f"rounds; components converge in O(log n) rounds, so this "
-            f"indicates an input far larger than max_iter accounts for."
+        return small.filter(F.col("u") != F.col("v")).distinct()
+
+    sig = None
+
+    def stable(_: DataFrame, e: DataFrame) -> bool:
+        nonlocal sig
+        prev, sig = sig, signature(e)
+        return sig == prev
+
+    def labels(e: DataFrame) -> DataFrame:
+        vertices = (
+            e0.select(F.col("u").alias("id"))
+            .unionByName(e0.select(F.col("v").alias("id")))
+            .distinct()
         )
-        if on_max_iter == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        else:
-            raise RuntimeError(msg)
-    child_root = e.groupBy("u").agg(F.min("v").alias("root"))
-    return vertices.join(
-        child_root.withColumnRenamed("u", "id"), "id", "left"
-    ).select("id", F.coalesce("root", F.col("id")).alias("component"))
+        child_root = e.groupBy("u").agg(F.min("v").alias("root"))
+        return vertices.join(
+            child_root.withColumnRenamed("u", "id"), "id", "left"
+        ).select("id", F.coalesce("root", F.col("id")).alias("component"))
+
+    try:
+        sig = signature(e0)
+        return fixpoint(
+            contract,
+            e0,
+            max_iter=max_iter,
+            converged=stable,
+            checkpoint_every=1,
+            what="star contraction",
+            finish=labels,
+        )
+    finally:
+        release(e0)
 
 
 def connected_components(
@@ -148,9 +155,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    on_max_iter: str = "raise",
     driver_max_edges: int | None = None,
-    distributed_algorithm: str | None = None,
 ) -> DataFrame:
     """(id, component) for every vertex appearing in `edges`;
     component = min vertex id in the component.
@@ -158,86 +163,24 @@ def connected_components(
     Hybrid strategy: alias graphs are tiny relative to the corpus, so when
     the edge count is under `driver_max_edges` (~32 MB of id pairs) the
     labels come from a driver-side union-find — one collect job instead of
-    O(diameter) shuffle+probe iterations (measured 2.6-3.3 s -> ~0.4 s at
-    3.1k pairs on a fresh JVM). Past the cap — a corpus whose DUPLICATE
-    set alone is tens of millions of pages — a distributed algorithm takes
-    over (`driver_max_edges=0` forces it): `distributed_algorithm=
-    "hashmin"` (default; O(diameter) iterations — right for the near-clique
-    alias graphs this pipeline produces) or `"starstar"` (alternating
-    large-star/small-star contraction, O(log n) rounds on ANY graph — the
-    choice when the diameter is unknown or adversarial).
+    O(log n) shuffle+probe rounds (measured 2.6-3.3 s -> ~0.4 s at 3.1k
+    pairs on a fresh JVM). Past the cap — a corpus whose DUPLICATE set
+    alone is tens of millions of pages — star contraction takes over
+    (`driver_max_edges=0` forces it).
 
-    Fixpoint guard (distributed path): hash-min needs O(diameter)
-    iterations; if labels are STILL changing when `max_iter` is exhausted
-    the result would be silently wrong (some vertices not yet carrying
-    their component's min). That case `raise`s by default
-    (`on_max_iter="warn"` downgrades to a warning for exploratory use).
-    Alias graphs from title/LSH linking are near-cliques (diameter 1-2),
-    so hitting the guard means the input is not the graph this operator
-    was sized for — fail loudly, never return a wrong map.
+    Fixpoint guard (distributed path): if the edge set is STILL changing
+    when `max_iter` rounds are exhausted the labels would be silently
+    wrong, so it raises. Star contraction converges in O(log n) rounds, so
+    hitting the guard means the input is far larger than `max_iter`
+    accounts for — fail loudly, never return a wrong map.
 
-    `driver_max_edges` / `distributed_algorithm` default from the env
-    (KG_CC_DRIVER_MAX_EDGES / KG_CC_ALGO) so an end-to-end job can be forced
-    onto a specific path without threading parameters through every caller
-    — how the x256 stress exercises the distributed paths (BASELINE.md).
+    `driver_max_edges` defaults from the env (KG_CC_DRIVER_MAX_EDGES) so an
+    end-to-end job can be forced onto the distributed path without
+    threading parameters through every caller — how the x256 stress
+    exercises it (BASELINE.md).
     """
-    import os
-
     if driver_max_edges is None:
         driver_max_edges = int(os.environ.get("KG_CC_DRIVER_MAX_EDGES", 2_000_000))
-    if distributed_algorithm is None:
-        distributed_algorithm = os.environ.get("KG_CC_ALGO", "hashmin")
     if driver_max_edges and edges.limit(driver_max_edges + 1).count() <= driver_max_edges:
         return _driver_union_find(edges, src, dst)
-    if distributed_algorithm == "starstar":
-        # O(log n)-round star contraction — the choice for graphs whose
-        # diameter is unknown or adversarial (hash-min is O(diameter))
-        return _star_contraction(edges, src, dst, max_iter, on_max_iter)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()  # reused every iteration; materializes with the first job
-    )
-
-    labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-
-    converged = False
-    for _ in range(max_iter):
-        msgs = sym.join(labels, sym.src == labels.id).select(
-            F.col("dst").alias("id"), F.col("component")
-        )
-        # eager=False: the checkpoint materializes as part of the
-        # convergence-check job below — ONE job per iteration, not two.
-        new_labels = (
-            labels.select("id", "component")
-            .unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        ).localCheckpoint(eager=False)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        msg = (
-            f"connected_components did not reach fixpoint within "
-            f"max_iter={max_iter} iterations (labels were still changing); "
-            f"the component labels would be WRONG for long-chain graphs. "
-            f"Raise max_iter (components converge in O(graph diameter))."
-        )
-        if on_max_iter == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        else:
-            raise RuntimeError(msg)
-    return labels
+    return _star_contraction(edges, src, dst, max_iter)

@@ -264,8 +264,8 @@ def ngram_cluster_census(
     (a 1000-doc template family is 499,500 pairs but ONE cluster).
 
     Composition of two already-verified operators: ngram_jaccard_pairs
-    (oracle-exact pair set) -> connected_components (hybrid driver/hash-min/
-    star-contraction; components.py). Only docs appearing in >= 1 pair are
+    (oracle-exact pair set) -> connected_components (hybrid driver
+    union-find / star contraction; components.py). Only docs appearing in >= 1 pair are
     clustered, so every census row has size >= 2; the DuckDB oracle states
     the same census independently via a recursive transitive closure."""
     pairs = ngram_jaccard_pairs(docs, text_col=text_col, n=n, threshold=threshold)

@@ -18,11 +18,10 @@ Scale shape: each iteration is (edges ⋈ ranks on src) -> groupBy(dst) —
 one shuffle per iteration keyed on node ids (never strings longer than the
 id), with edges/outdeg persisted once and reused across iterations (and
 unpersisted before returning — long-lived sessions like the contract driver
-would otherwise leak cached blocks across queries). Lineage is truncated
-with localCheckpoint every `checkpoint_every` iterations, the same
-discipline as the connected-components loop — without it an iters=20 run
-on a 10^12-edge graph carries an unbounded 20-join plan into every stage
-resubmission.
+would otherwise leak cached blocks across queries). The iterations run
+through plans/iterate.fixpoint, which localCheckpoints the ranks every 5
+iterations (each reads the previous ranks once, so the plan between
+checkpoints stays 5 joins deep) and frees every superseded checkpoint.
 """
 
 from __future__ import annotations
@@ -30,19 +29,65 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.plans.iterate import fixpoint, release
+
 DAMPING_MICROS = 850_000
 BASE_MICROS = 1_000_000 - DAMPING_MICROS  # (1 - d) in micros
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Drop the cached blocks behind a localCheckpoint-ed DataFrame.
-    Dataset.unpersist only covers CacheManager entries; a local checkpoint
-    registers its RDD directly, reachable via the LogicalRDD node. Only
-    call on checkpoints that nothing downstream will read again."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort: a leaked cache block is preferable to a crash
+def _rank_iterate(
+    e: DataFrame,
+    norm: DataFrame,
+    contrib: str,
+    base: DataFrame,
+    iters: int,
+    topk: int | None,
+    what: str,
+) -> DataFrame:
+    """The power iteration the three PageRank variants share: `e` holds
+    (src, dst[, w]), `norm` (src, <out-normalizer>), `base` (page,
+    base_micros, init_micros); `contrib` is the per-edge SQL contribution.
+        rank'(v) = base_micros(v) + (Σ contrib) * 850_000 DIV 1_000_000
+    With `topk`, the result is the top-k by (rank desc, page asc)."""
+
+    def step(ranks: DataFrame) -> DataFrame:
+        sums = (
+            e.join(ranks.withColumnRenamed("page", "src"), "src")
+            .join(norm, "src")
+            .select(F.col("dst").alias("page"), F.expr(contrib).alias("c"))
+            .groupBy("page")
+            .agg(F.sum("c").alias("c"))
+        )
+        return base.join(sums, "page", "left").select(
+            "page",
+            (
+                F.col("base_micros")
+                + F.expr(f"coalesce(c, 0) * {DAMPING_MICROS} DIV 1000000")
+            )
+            .cast("bigint")
+            .alias("rank_micros"),
+        )
+
+    return fixpoint(
+        step,
+        base.select("page", F.col("init_micros").alias("rank_micros")),
+        max_iter=iters,
+        checkpoint_every=5,
+        what=what,
+        finish=(
+            None
+            if topk is None
+            else lambda r: r.orderBy(F.desc("rank_micros"), F.asc("page")).limit(topk)
+        ),
+    )
+
+
+def _uniform_base(nodes: DataFrame) -> DataFrame:
+    return nodes.select(
+        "page",
+        F.lit(BASE_MICROS).alias("base_micros"),
+        F.lit(1_000_000).cast("bigint").alias("init_micros"),
+    )
 
 
 def pagerank_micros(
@@ -51,15 +96,11 @@ def pagerank_micros(
     dst: str = "obj",
     iters: int = 5,
     topk: int | None = None,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(page, rank_micros) after `iters` exact-integer power iterations.
 
     `edges` is any (src, dst) relation; duplicates are dropped. If `topk`
-    is set, returns the top-k by (rank desc, page asc). Every
-    `checkpoint_every` iterations the ranks relation is localCheckpoint-ed
-    (eager) so the logical plan stays O(checkpoint_every) joins deep no
-    matter how many iterations run.
+    is set, returns the top-k by (rank desc, page asc).
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -74,45 +115,13 @@ def pagerank_micros(
     )
     try:
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        ranks = nodes.select(
-            "page", F.lit(1_000_000).cast("bigint").alias("rank_micros")
+        return _rank_iterate(
+            e, outdeg, "rank_micros DIV d", _uniform_base(nodes), iters, topk,
+            "pagerank",
         )
-        prev_ckpt: DataFrame | None = None
-        for i in range(iters):
-            contrib = (
-                e.join(ranks.withColumnRenamed("page", "src"), "src")
-                .join(outdeg, "src")
-                .select(
-                    F.col("dst").alias("page"),
-                    F.expr("rank_micros DIV d").alias("c"),
-                )
-            )
-            sums = contrib.groupBy("page").agg(F.sum("c").alias("c"))
-            ranks = nodes.join(sums, "page", "left").select(
-                "page",
-                (
-                    F.lit(BASE_MICROS)
-                    + F.expr(f"coalesce(c, 0) * {DAMPING_MICROS} DIV 1000000")
-                )
-                .cast("bigint")
-                .alias("rank_micros"),
-            )
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-                ranks = ranks.localCheckpoint(eager=True)
-                if prev_ckpt is not None:  # superseded — release its blocks
-                    _release_local_checkpoint(prev_ckpt)
-                prev_ckpt = ranks
-        if topk is not None:
-            ranks = ranks.orderBy(F.desc("rank_micros"), F.asc("page")).limit(topk)
-        # materialize before dropping the caches the plan depends on; this
-        # final checkpoint is the RESULT and stays alive for the consumer
-        ranks = ranks.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
     finally:
         e.unpersist()
         nodes.unpersist()
-    return ranks
 
 
 def pagerank_sql_duck(
@@ -158,7 +167,6 @@ def weighted_pagerank_micros(
     weight: str = "w",
     iters: int = 5,
     topk: int | None = None,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """PageRank with integer edge weights (e.g. the canonical edge
     table's n_sources multiplicity — a link asserted by more source
@@ -171,8 +179,8 @@ def weighted_pagerank_micros(
     mass leaks, bit-identical under any aggregation order); per-edge
     multiplication keeps int64 headroom (rank ~1e6-scale × bounded
     multiplicity). Duplicate (src, dst) rows are summed into one weighted
-    edge. One node-id-keyed shuffle per iteration; localCheckpoint
-    lineage discipline as the unweighted loop."""
+    edge. One node-id-keyed shuffle per iteration, iterated like the
+    unweighted loop."""
     e = (
         edges.select(
             F.col(src).alias("src"),
@@ -191,43 +199,13 @@ def weighted_pagerank_micros(
     )
     try:
         outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
-        ranks = nodes.select(
-            "page", F.lit(1_000_000).cast("bigint").alias("rank_micros")
+        return _rank_iterate(
+            e, outw, "rank_micros * w DIV tw", _uniform_base(nodes), iters,
+            topk, "weighted pagerank",
         )
-        prev_ckpt: DataFrame | None = None
-        for i in range(iters):
-            contrib = (
-                e.join(ranks.withColumnRenamed("page", "src"), "src")
-                .join(outw, "src")
-                .select(
-                    F.col("dst").alias("page"),
-                    F.expr("rank_micros * w DIV tw").alias("c"),
-                )
-            )
-            sums = contrib.groupBy("page").agg(F.sum("c").alias("c"))
-            ranks = nodes.join(sums, "page", "left").select(
-                "page",
-                (
-                    F.lit(BASE_MICROS)
-                    + F.expr(f"coalesce(c, 0) * {DAMPING_MICROS} DIV 1000000")
-                )
-                .cast("bigint")
-                .alias("rank_micros"),
-            )
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-                ranks = ranks.localCheckpoint(eager=True)
-                if prev_ckpt is not None:
-                    _release_local_checkpoint(prev_ckpt)
-                prev_ckpt = ranks
-        if topk is not None:
-            ranks = ranks.orderBy(F.desc("rank_micros"), F.asc("page")).limit(topk)
-        ranks = ranks.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
     finally:
         e.unpersist()
         nodes.unpersist()
-    return ranks
 
 
 def weighted_pagerank_sql_duck(
@@ -301,8 +279,10 @@ def hits_micros(
     half-step
     (2^(2·iters) subtree copies — measured minutes of Catalyst time at
     iters=4 on a 6-edge graph). Superseded checkpoints are released as
-    soon as the next half-step materializes past them, so peak cache is
-    two node-sized relations."""
+    soon as the next half-step materializes past them (through
+    plans/iterate.release), so peak cache is two node-sized relations.
+    This loop stays outside plans/iterate.fixpoint: a step carries two
+    relations and materializes twice, once per half-step."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
@@ -322,7 +302,7 @@ def hits_micros(
         # the two live checkpoints are the current auth and hub; anything
         # older has been folded into a newer materialization
         while len(ckpts) > 2:
-            _release_local_checkpoint(ckpts.pop(0))
+            release(ckpts.pop(0))
         mx = rel.agg(F.max(col).alias("_mx"))
         # max_raw >= 1e6 always (the previous argmax has an incident
         # edge), so `_mx DIV 1e6` is never 0 — same flooring order as the
@@ -375,13 +355,12 @@ def hits_micros(
             out = out.orderBy(
                 F.desc("auth_micros"), F.asc("page")
             ).limit(topk)
-        out = out.localCheckpoint(eager=True)
-        for c in ckpts:
-            _release_local_checkpoint(c)
+        return out.localCheckpoint(eager=True)
     finally:
+        for c in ckpts:
+            release(c)
         e.unpersist()
         nodes.unpersist()
-    return out
 
 
 def hits_sql_duck(edges_cte_body: str, iters: int = 4, topk: int = 20) -> str:
@@ -439,7 +418,6 @@ def personalized_pagerank_micros(
     dst: str = "obj",
     iters: int = 5,
     topk: int | None = None,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Personalized PageRank: restart mass goes only to `seeds` (a
     DataFrame with a `page` column) instead of uniformly to every node —
@@ -453,7 +431,7 @@ def personalized_pagerank_micros(
     N and |S| enter via a broadcast 1-row stats relation (no driver
     collect). Dangling mass leaks, duplicates dropped — mirrored exactly
     in the unrolled-CTE DuckDB twin. One node-id-keyed shuffle per
-    iteration; lineage localCheckpoint-ed every `checkpoint_every`."""
+    iteration, iterated like the uniform loop."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
@@ -502,47 +480,15 @@ def personalized_pagerank_micros(
             )
             .persist()
         )
-        ranks = base_rel.select(
-            "page", F.col("init_micros").alias("rank_micros")
+        return _rank_iterate(
+            e, outdeg, "rank_micros DIV d", base_rel, iters, topk,
+            "personalized pagerank",
         )
-        prev_ckpt: DataFrame | None = None
-        for i in range(iters):
-            contrib = (
-                e.join(ranks.withColumnRenamed("page", "src"), "src")
-                .join(outdeg, "src")
-                .select(
-                    F.col("dst").alias("page"),
-                    F.expr("rank_micros DIV d").alias("c"),
-                )
-            )
-            sums = contrib.groupBy("page").agg(F.sum("c").alias("c"))
-            ranks = base_rel.join(sums, "page", "left").select(
-                "page",
-                (
-                    F.col("base_micros")
-                    + F.expr(f"coalesce(c, 0) * {DAMPING_MICROS} DIV 1000000")
-                )
-                .cast("bigint")
-                .alias("rank_micros"),
-            )
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-                ranks = ranks.localCheckpoint(eager=True)
-                if prev_ckpt is not None:
-                    _release_local_checkpoint(prev_ckpt)
-                prev_ckpt = ranks
-        if topk is not None:
-            ranks = ranks.orderBy(F.desc("rank_micros"), F.asc("page")).limit(
-                topk
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
     finally:
         e.unpersist()
         nodes.unpersist()
         if base_rel is not None:
             base_rel.unpersist()
-    return ranks
 
 
 def personalized_pagerank_sql_duck(

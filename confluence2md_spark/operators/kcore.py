@@ -12,11 +12,11 @@ Algorithm: synchronous peeling. Repeat until fixpoint: compute degrees
 over the surviving edge set, drop nodes with degree < k, drop edges with a
 dropped endpoint. Each round is ONE groupBy (degree count, node-id key)
 plus two semi-joins (edge filter) — all shuffles keyed on node ids only,
-nothing collected to the driver. Rounds are bounded by `max_rounds`; the
-loop localCheckpoints every `checkpoint_every` rounds so lineage stays
-bounded at any depth (same discipline as components.py / graph.py), and
-raises if the peel has not converged — a silent truncation would return a
-superset of the k-core.
+nothing collected to the driver. The rounds run through
+plans/iterate.fixpoint, bounded by `max_rounds`: it localCheckpoints every
+2 rounds so lineage stays bounded at any depth, and raises if the peel has
+not converged — a silent truncation would return a superset of the
+k-core.
 
 Why this survives 100 TB: each round's work is O(|E_alive|) with
 monotonically shrinking E; worst-case round count is the graph's
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 
 def _degrees(und: DataFrame) -> DataFrame:
@@ -47,7 +49,6 @@ def kcore(
     src: str = "subj",
     dst: str = "obj",
     max_rounds: int = 12,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Nodes of the k-core of the undirected simple view of `edges`.
 
@@ -59,9 +60,9 @@ def kcore(
 
     Each round references `alive` three times (degree census + two semi
     joins), so the un-truncated logical plan grows 3^rounds between
-    checkpoints — `checkpoint_every=2` caps that at 9 subtree copies
-    (the seed_distance/hits lineage lesson; the per-round count() forces
-    execution but not plan truncation).
+    checkpoints — a checkpoint every 2 rounds caps that at 9 subtree
+    copies (the seed_distance/hits lineage lesson; the per-round count()
+    forces execution but not plan truncation).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -70,44 +71,32 @@ def kcore(
         edges.filter(a != b)
         .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
 
-    alive = und.localCheckpoint(eager=True)
-    prev_checkpoint = None
-    for rnd in range(1, max_rounds + 1):
-        deg = _degrees(alive)
-        keep = deg.filter(F.col("d") >= k).select("n")
-        nxt = (
+    def peel(alive: DataFrame) -> DataFrame:
+        keep = _degrees(alive).filter(F.col("d") >= k).select("n")
+        return (
             alive.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
             .select("a", "b")
         )
-        # Converged when no edge was peeled this round. Count is one cheap
-        # job over the (possibly checkpointed) alive relation.
-        n_alive, n_next = alive.count(), nxt.count()
-        if n_next == n_alive:
-            break
-        if rnd % checkpoint_every == 0:
-            new_cp = nxt.localCheckpoint(eager=True)
-            if prev_checkpoint is not None:
-                prev_checkpoint.unpersist()
-            prev_checkpoint, alive = new_cp, new_cp
-        else:
-            alive = nxt
-    else:
-        raise RuntimeError(
-            f"k-core peel did not converge in {max_rounds} rounds (k={k})"
-        )
 
-    out = (
-        _degrees(alive)
-        .select(F.col("n").alias("node"), F.col("d").alias("core_degree"))
-        .orderBy(F.desc("core_degree"), F.asc("node"))
-        .localCheckpoint(eager=True)
-    )
-    if prev_checkpoint is not None:
-        prev_checkpoint.unpersist()
-    return out
+    try:
+        return fixpoint(
+            peel,
+            und,
+            max_iter=max_rounds,
+            # converged when no edge was peeled this round
+            converged=lambda alive, nxt: alive.count() == nxt.count(),
+            checkpoint_every=2,
+            what=f"k-core peel (k={k})",
+            finish=lambda alive: _degrees(alive)
+            .select(F.col("n").alias("node"), F.col("d").alias("core_degree"))
+            .orderBy(F.desc("core_degree"), F.asc("node")),
+        )
+    finally:
+        release(und)
 
 
 def kcore_sql_duck(

@@ -30,21 +30,26 @@ subgraph:
      shrunken graph.
 
 Every inner iteration is one node-id-keyed join + groupBy-min (the
-hash-min CC / seed-distance loop shape); nothing but (id, id) pairs ever
-shuffles and nothing is collected to the driver. Each outer round
-removes at least the SCC of the minimum active node (it is always a
-root), and on real link graphs — shallow, with many independent root
-color classes per round — the peel finishes in a handful of outer
-rounds. `max_rounds` bounds the TOTAL inner-iteration budget and the
-loop RAISES if unconverged: a silent truncation would mislabel nodes,
-and the DuckDB twin (exact transitive closure + mutual-reach minimum via
-one recursive CTE) is exact at any depth, so a converged Spark answer
-must match it bit-for-bit.
+seed-distance loop shape) over the full edge set: the joins against the
+active nodes' colors restrict it to the active subgraph, so no per-round
+edge relation is built. Nothing but (id, id) pairs ever shuffles and
+nothing is collected to the driver. Each outer round removes at least
+the SCC of the minimum active node (it is always a root), and on real
+link graphs — shallow, with many independent root color classes per
+round — the peel finishes in a handful of outer rounds. `max_rounds`
+bounds the TOTAL inner-iteration budget and the loop RAISES if
+unconverged: a silent truncation would mislabel nodes, and the DuckDB
+twin (exact transitive closure + mutual-reach minimum via one recursive
+CTE) is exact at any depth, so a converged Spark answer must match it
+bit-for-bit.
 
-Lineage discipline: every inner step localCheckpoints eagerly (each
-fixpoint references the previous relation twice, so a lazy loop doubles
-the logical plan per step — the seed_distance/hits lesson), and
-superseded checkpoints are released immediately.
+Lineage discipline: both inner loops run through plans/iterate.fixpoint
+with a checkpoint every step (each step references the previous relation
+twice, so a lazy loop doubles the logical plan per step — the
+seed_distance/hits lesson). The backward mark's result is the next
+round's (page, scc_id) assignment, so each outer round materializes
+exactly one node-sized relation besides the inner loops' own; the outer
+loop frees the superseded one through plans/iterate.release.
 """
 
 from __future__ import annotations
@@ -52,14 +57,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from confluence2md_spark.operators.graph import _release_local_checkpoint
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 
-def _ckpt_swap(df: DataFrame, prev: DataFrame | None) -> tuple[DataFrame, DataFrame]:
-    new = df.localCheckpoint(eager=True)
-    if prev is not None:
-        _release_local_checkpoint(prev)
-    return new, new
+def _unchanged(col: str):
+    """Convergence probe: no row's `col` differs between two states."""
+
+    def probe(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "page")
+            .filter(F.col(f"n.{col}") != F.col(f"o.{col}"))
+            .count()
+            == 0
+        )
+
+    return probe
 
 
 def scc(
@@ -77,130 +90,102 @@ def scc(
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .persist()
     )
-    nodes = (
-        e_all.select(F.col("s").alias("page"))
-        .unionByName(e_all.select(F.col("t").alias("page")))
-        .distinct()
-    )
-    active, _ = _ckpt_swap(nodes, None)
-    done: DataFrame | None = None
     budget = max_rounds
+
+    def color_step(color: DataFrame) -> DataFrame:
+        # color(v) = min(color(v), colors of active in-neighbors)
+        nonlocal budget
+        budget -= 1
+        cand = (
+            e_all.join(
+                color.select(F.col("page").alias("s"), F.col("color").alias("cu")),
+                "s",
+            )
+            .groupBy("t")
+            .agg(F.min("cu").alias("cand"))
+        )
+        return color.join(
+            cand.withColumnRenamed("t", "page"), "page", "left"
+        ).select(
+            "page",
+            F.least(F.col("color"), F.coalesce("cand", F.col("color"))).alias(
+                "color"
+            ),
+        )
+
+    def mark_step(mark: DataFrame) -> DataFrame:
+        # m(v) |= v has an edge to a marked node of its own color
+        nonlocal budget
+        budget -= 1
+        cand = (
+            e_all.join(
+                mark.filter(F.col("m")).select(
+                    F.col("page").alias("t"), F.col("color").alias("ct")
+                ),
+                "t",
+            )
+            .select(F.col("s").alias("page"), F.col("ct").alias("color"))
+            .distinct()
+            .withColumn("_hit", F.lit(True))
+        )
+        return mark.join(cand, ["page", "color"], "left").select(
+            "page",
+            "color",
+            (F.col("m") | F.coalesce("_hit", F.lit(False))).alias("m"),
+        )
+
+    labels = None
     try:
+        labels = (
+            e_all.select(F.col("s").alias("page"))
+            .unionByName(e_all.select(F.col("t").alias("page")))
+            .distinct()
+            .select("page", F.lit(None).cast(dict(e_all.dtypes)["s"]).alias("scc_id"))
+            .localCheckpoint(eager=True)
+        )
         while True:
+            active = labels.filter(F.col("scc_id").isNull()).select("page")
             if active.count() == 0:
-                break
-            ae = (
-                e_all.join(active.withColumnRenamed("page", "s"), "s", "semi")
-                .join(active.withColumnRenamed("page", "t"), "t", "semi")
-                .select("s", "t")
-                .localCheckpoint(eager=True)
-            )
+                return labels.orderBy("page").localCheckpoint(eager=True)
             # 1. forward min-color fixpoint over the active subgraph.
-            color = active.select("page", F.col("page").alias("color"))
-            color, cprev = _ckpt_swap(color, None)
-            while True:
-                budget -= 1
-                if budget < 0:
-                    raise RuntimeError(
-                        f"scc coloring did not converge in {max_rounds} "
-                        "total inner iterations"
-                    )
-                cand = (
-                    ae.join(
-                        color.select(
-                            F.col("page").alias("s"), F.col("color").alias("cu")
-                        ),
-                        "s",
-                    )
-                    .groupBy("t")
-                    .agg(F.min("cu").alias("cand"))
-                )
-                nxt = color.join(
-                    cand.withColumnRenamed("t", "page"), "page", "left"
-                ).select(
-                    "page",
-                    F.least(
-                        F.col("color"), F.coalesce("cand", F.col("color"))
-                    ).alias("color"),
-                )
-                nxt, _ = _ckpt_swap(nxt, None)
-                changed = (
-                    nxt.alias("n")
-                    .join(color.alias("o"), "page")
-                    .filter(F.col("n.color") != F.col("o.color"))
-                    .count()
-                )
-                _release_local_checkpoint(color)
-                color, cprev = nxt, nxt
-                if changed == 0:
-                    break
-            # 2. backward mark within the color class, seeded at roots.
-            mark = color.select(
-                "page", "color", (F.col("page") == F.col("color")).alias("m")
+            color = fixpoint(
+                color_step,
+                active.select("page", F.col("page").alias("color")),
+                max_iter=budget,
+                converged=_unchanged("color"),
+                checkpoint_every=1,
+                what=f"scc coloring (max_rounds={max_rounds} in total)",
             )
-            mark, mprev = _ckpt_swap(mark, None)
-            while True:
-                budget -= 1
-                if budget < 0:
-                    raise RuntimeError(
-                        f"scc backward mark did not converge in {max_rounds} "
-                        "total inner iterations"
-                    )
-                cand = (
-                    ae.join(
+            # 2. backward mark within the color class, seeded at roots;
+            # 3. the marked nodes take their color as scc_id.
+            done = labels
+            try:
+                labels = fixpoint(
+                    mark_step,
+                    color.select(
+                        "page", "color", (F.col("page") == F.col("color")).alias("m")
+                    ),
+                    max_iter=budget,
+                    converged=_unchanged("m"),
+                    checkpoint_every=1,
+                    what=f"scc backward mark (max_rounds={max_rounds} in total)",
+                    finish=lambda mark: done.join(
                         mark.filter(F.col("m")).select(
-                            F.col("page").alias("t"), F.col("color").alias("ct")
+                            "page", F.col("color").alias("_id")
                         ),
-                        "t",
-                    )
-                    .select(F.col("s").alias("page"), F.col("ct").alias("color"))
-                    .distinct()
-                    .withColumn("_hit", F.lit(True))
+                        "page",
+                        "left",
+                    ).select("page", F.coalesce("scc_id", "_id").alias("scc_id")),
                 )
-                nxt = mark.join(cand, ["page", "color"], "left").select(
-                    "page",
-                    "color",
-                    (F.col("m") | F.coalesce("_hit", F.lit(False))).alias("m"),
-                )
-                nxt, _ = _ckpt_swap(nxt, None)
-                changed = (
-                    nxt.alias("n")
-                    .join(mark.alias("o"), "page")
-                    .filter(F.col("n.m") != F.col("o.m"))
-                    .count()
-                )
-                _release_local_checkpoint(mark)
-                mark, mprev = nxt, nxt
-                if changed == 0:
-                    break
-            emitted = (
-                mark.filter(F.col("m"))
-                .select("page", F.col("color").alias("scc_id"))
-                .localCheckpoint(eager=True)
-            )
-            done = emitted if done is None else done.unionByName(emitted)
-            done, _ = _ckpt_swap(done, None)
-            nxt_active = active.join(emitted, "page", "anti")
-            nxt_active, _ = _ckpt_swap(nxt_active, None)
-            _release_local_checkpoint(active)
-            _release_local_checkpoint(ae)
-            _release_local_checkpoint(color)
-            _release_local_checkpoint(mark)
-            _release_local_checkpoint(emitted)
-            active = nxt_active
-        if done is None:
-            # no non-self-loop edges: the induced graph has no nodes, so
-            # the answer is the empty relation (matches the DuckDB twin,
-            # whose recursive CTE yields nothing) — typed off the input.
-            return nodes.select("page", F.col("page").alias("scc_id")).limit(0)
-        out = done.orderBy("page").localCheckpoint(eager=True)
-        _release_local_checkpoint(done)
-        return out
+            finally:
+                release(color)
+            release(done)
     finally:
-        _release_local_checkpoint(e_all)
-        _release_local_checkpoint(active)
+        if labels is not None:
+            release(labels)
+        e_all.unpersist()
 
 
 def scc_sql_duck(edges_cte_body: str) -> str:

@@ -21,11 +21,12 @@ round — the inner join IS the filter.
 Scale shape (100 TB): each round is one orientation (two node-keyed
 degree joins), one wedge equi-join keyed on the spoke node, one closing
 join keyed on the (y, z) pair, and one (a, b)-keyed support aggregation
-— all skinny integer keys, |E| monotonically shrinking, lineage
-localCheckpoint-ed every round (each round re-reads `alive` many times;
-the kcore 3^rounds lesson applies with a larger fan-in here). Rounds are
-bounded by `max_rounds` and non-convergence RAISES — a silent truncation
-would return a superset of the truss (the kcore discipline).
+— all skinny integer keys, |E| monotonically shrinking. The rounds run
+through plans/iterate.fixpoint with a checkpoint every round (each round
+re-reads `alive` many times; the kcore 3^rounds lesson applies with a
+larger fan-in here). Rounds are bounded by `max_rounds` and
+non-convergence RAISES — a silent truncation would return a superset of
+the truss (the kcore discipline).
 
 The DuckDB twin unrolls the same rounds; it enumerates each triangle
 {p<q<r} once in plain id order (x=(p,q), y=(p,r), closing (q,r)) — a
@@ -39,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 
 def _support(alive: DataFrame) -> DataFrame:
@@ -103,46 +106,34 @@ def ktruss(
         edges.filter(a != b)
         .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
 
-    alive = und.localCheckpoint(eager=True)
-    prev = None
-    converged = False
-    for _ in range(1, max_rounds + 1):
-        sup = _support(alive)
-        nxt = (
-            alive.join(sup, ["a", "b"])
+    def peel(alive: DataFrame) -> DataFrame:
+        return (
+            alive.join(_support(alive), ["a", "b"])
             .filter(F.col("sup") >= k - 2)
             .select("a", "b")
         )
-        # every round builds a wedge join over `alive` — checkpoint each
-        # round, not every other one (the fan-in is larger than kcore's)
-        new_cp = nxt.localCheckpoint(eager=True)
-        n_alive, n_next = alive.count(), new_cp.count()
-        if prev is not None:
-            prev.unpersist()
-        prev, alive = new_cp, new_cp
-        if n_next == n_alive:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"k-truss peel did not converge in {max_rounds} rounds (k={k})"
-        )
 
-    out = (
-        alive.join(_support(alive), ["a", "b"], "left")
-        .select(
-            "a",
-            "b",
-            F.coalesce(F.col("sup"), F.lit(0)).cast("bigint").alias("support"),
+    try:
+        return fixpoint(
+            peel,
+            und,
+            max_iter=max_rounds,
+            converged=lambda alive, nxt: alive.count() == nxt.count(),
+            checkpoint_every=1,
+            what=f"k-truss peel (k={k})",
+            finish=lambda alive: alive.join(_support(alive), ["a", "b"], "left")
+            .select(
+                "a",
+                "b",
+                F.coalesce(F.col("sup"), F.lit(0)).cast("bigint").alias("support"),
+            )
+            .orderBy(F.desc("support"), F.asc("a"), F.asc("b")),
         )
-        .orderBy(F.desc("support"), F.asc("a"), F.asc("b"))
-        .localCheckpoint(eager=True)
-    )
-    if prev is not None:
-        prev.unpersist()
-    return out
+    finally:
+        release(und)
 
 
 def ktruss_sql_duck(edges_cte: str, k: int = 4, rounds: int = 12) -> str:

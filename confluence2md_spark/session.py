@@ -14,13 +14,34 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(24g, half of physical memory). Local mode is a driver-only JVM:
+    its heap IS the whole cluster memory, so it is sized like the
+    executors it stands in for (24g: 32 concurrent tasks' hash maps and
+    sorts plus cached broadcasts OOM'd at 8g on a 1.28M-doc run) — but
+    never past half the machine, or the kernel's OOM killer takes the JVM
+    down mid-run. SPARK_GRAFT_DRIVER_MEM overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(24 * 1024, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "24g"
+
+
 def get_spark(
     app_name: str = "confluence2md-kg",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = (
+        master
+        or os.environ.get("SPARK_GRAFT_MASTER")
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count() or 1}]"
+    )
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     b = (
@@ -38,11 +59,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only JVM: its heap IS the whole cluster memory.
-        # 32 concurrent tasks × execution memory (hash maps, sorts) + cached
-        # broadcasts OOM'd at 8g on a 1.28M-doc run; the sandbox has 128 GiB,
-        # so size the single JVM like the N executors it stands in for.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

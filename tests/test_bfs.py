@@ -77,7 +77,7 @@ def test_seed_distance_depth_truncation(spark):
 def test_seed_distance_deep_iters_checkpointed(spark):
     edges = spark.createDataFrame(_EDGES, ["subj", "obj"])
     seeds = spark.createDataFrame([(s,) for s in _SEEDS], ["page"])
-    out = seed_distance(edges, seeds, iters=25, checkpoint_every=4)
+    out = seed_distance(edges, seeds, iters=25)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
     assert {r["page"]: r["dist"] for r in out.collect()} == _bfs(

@@ -69,12 +69,12 @@ def test_lpa_matches_python_mirror(spark):
 
 
 def test_lpa_deep_iteration_checkpoints_lineage(spark):
-    """iters=25 with checkpoint_every=4 must return a checkpointed scan,
+    """iters=25 must return a checkpointed scan,
     not a 25-round join tower, and still match the mirror (same lineage
     discipline the PageRank and CC loops carry)."""
     edges = spark.createDataFrame(_EDGES, ["subj", "obj"])
     cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    out = label_propagation(edges, iters=25, checkpoint_every=4)
+    out = label_propagation(edges, iters=25)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
     got = {r["page"]: r["community"] for r in out.collect()}

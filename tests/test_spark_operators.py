@@ -157,9 +157,7 @@ def test_synth_raw_files_tolerates_braces_in_text(spark, tmp_path):
 
 def test_cc_fixpoint_guard_fires_on_long_chain(spark):
     """A path graph with diameter > max_iter must NOT return silently wrong
-    labels: raise by default, warn when asked (VERDICT r1 item 7)."""
-    import warnings
-
+    labels: raise (VERDICT r1 item 7)."""
     import pytest
 
     path_edges = spark.createDataFrame(
@@ -167,13 +165,6 @@ def test_cc_fixpoint_guard_fires_on_long_chain(spark):
     )
     with pytest.raises(RuntimeError, match="fixpoint"):
         connected_components(path_edges, max_iter=2, driver_max_edges=0)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        labels = connected_components(
-            path_edges, max_iter=2, on_max_iter="warn", driver_max_edges=0
-        )
-        labels.collect()
-    assert any("fixpoint" in str(w.message) for w in caught)
     # enough iterations -> converges, no guard
     comp = {
         r["id"]: r["component"]
@@ -734,8 +725,8 @@ def test_multimodal_features_feed_ann(spark, sf_dir):
 
 def test_cc_driver_union_find_matches_distributed(spark):
     """The small-graph driver union-find path must produce exactly the
-    labels of the distributed hash-min path, long chains included (the
-    driver path has no diameter limit)."""
+    labels of the distributed star-contraction path, long chains included
+    (the driver path has no diameter limit)."""
     edges = [(i, i + 1) for i in range(10)]          # path 0..10
     edges += [(20, 21), (21, 22), (20, 22)]          # triangle
     edges += [(30, 31)]                              # isolated pair
@@ -752,8 +743,8 @@ def test_cc_driver_union_find_matches_distributed(spark):
 
 
 def test_cc_star_contraction_matches_other_paths(spark):
-    """large/small-star contraction must label exactly like union-find and
-    hash-min on a mixed graph (path + triangle + isolated pair)."""
+    """large/small-star contraction must label exactly like union-find on
+    a mixed graph (path + triangle + isolated pair)."""
     edges = [(i, i + 1) for i in range(8)]
     edges += [(20, 21), (21, 22), (20, 22), (30, 31)]
     df = spark.createDataFrame(edges, ["src", "dst"])
@@ -762,36 +753,29 @@ def test_cc_star_contraction_matches_other_paths(spark):
     }
     star = {
         (r["id"], r["component"])
-        for r in connected_components(
-            df, driver_max_edges=0, distributed_algorithm="starstar"
-        ).collect()
+        for r in connected_components(df, driver_max_edges=0).collect()
     }
     assert star == want
 
 
 def test_cc_star_contraction_handles_long_chain_in_log_rounds(spark):
-    """A diameter-40 path: hash-min cannot converge in 8 iterations (guard
-    fires), star contraction labels it correctly in O(log n) rounds."""
-    import pytest
-
+    """A diameter-40 path: star contraction labels it correctly in
+    O(log n) rounds, within max_iter=8."""
     path_edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["src", "dst"]
     )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(path_edges, max_iter=8, driver_max_edges=0)
     comp = {
         r["id"]: r["component"]
         for r in connected_components(
             path_edges, max_iter=8, driver_max_edges=0,
-            distributed_algorithm="starstar",
         ).collect()
     }
     assert len(comp) == 41 and all(c == 0 for c in comp.values())
 
 
 def test_cc_paths_agree_on_random_graph(spark):
-    """Randomized (seeded) 5k-edge graph: union-find, hash-min and star
-    contraction must produce identical labelings."""
+    """Randomized (seeded) 5k-edge graph: union-find and star contraction
+    must produce identical labelings."""
     import random
 
     rnd = random.Random(42)
@@ -800,17 +784,11 @@ def test_cc_paths_agree_on_random_graph(spark):
     })
     df = spark.createDataFrame(edges, ["src", "dst"]).filter("src != dst")
     uf = {(r["id"], r["component"]) for r in connected_components(df).collect()}
-    hm = {
-        (r["id"], r["component"])
-        for r in connected_components(df, driver_max_edges=0, max_iter=40).collect()
-    }
     ss = {
         (r["id"], r["component"])
-        for r in connected_components(
-            df, driver_max_edges=0, distributed_algorithm="starstar"
-        ).collect()
+        for r in connected_components(df, driver_max_edges=0).collect()
     }
-    assert uf == hm == ss
+    assert uf == ss
 
 
 def test_exact_dedup_survivors_never_shuffles_text(spark):
@@ -1145,7 +1123,7 @@ def test_pagerank_exact_integer_matches_python_mirror(spark):
 def test_pagerank_deep_iteration_checkpoints_lineage(spark):
     """iters far past the contract depth must stay exact AND keep the plan
     bounded (VERDICT r3: without checkpointing, a 25-iteration run carries
-    a 25-join unbroken plan). checkpoint_every=4 -> the returned relation
+    a 25-join unbroken plan). The returned relation
     is a checkpointed scan, not a join tower, and values still match the
     pure-Python integer mirror at depth 25."""
     from confluence2md_spark.operators.graph import pagerank_micros
@@ -1153,7 +1131,7 @@ def test_pagerank_deep_iteration_checkpoints_lineage(spark):
     edge_list = [(1, 2), (1, 3), (2, 3), (3, 1), (2, 4), (4, 1)]
     edges = spark.createDataFrame(edge_list, ["subj", "obj"])
     cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    out = pagerank_micros(edges, iters=25, checkpoint_every=4)
+    out = pagerank_micros(edges, iters=25)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan  # lineage truncated, not a 25-join tower
     # e/nodes caches and superseded intermediate checkpoints released
@@ -1809,7 +1787,7 @@ def test_personalized_pagerank_seed_concentration(spark):
 
 
 def test_personalized_pagerank_deep_iters_bounded_plan(spark):
-    """iters=25 with checkpoint_every=5 stays exact (vs the python mirror)
+    """iters=25 stays exact (vs the python mirror)
     — the lineage-truncation discipline ported from pagerank_micros."""
     from confluence2md_spark.operators.graph import personalized_pagerank_micros
 
@@ -1819,9 +1797,7 @@ def test_personalized_pagerank_deep_iters_bounded_plan(spark):
     seeds = spark.createDataFrame([("n0",), ("n3",)], ["page"])
     got = {
         r["page"]: r["rank_micros"]
-        for r in personalized_pagerank_micros(
-            edges, seeds, iters=25, checkpoint_every=5
-        ).collect()
+        for r in personalized_pagerank_micros(edges, seeds, iters=25).collect()
     }
     ranks = {f"n{i}": 0 for i in range(7)}
     base = dict(ranks)
