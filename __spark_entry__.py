@@ -23,6 +23,7 @@ from __future__ import annotations
 import math
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -218,26 +219,44 @@ from confluence2md_spark.sources.corpus import (
 
 # --------------------------------------------------------------- caching --
 # The driver runs each query separately in ONE SparkSession; the KG queries
-# share the expensive convert stage, so pages/triples/cmap are persisted per
-# sf_dir and reused across queries.
+# share the expensive convert stage, so raw/pages/triples/cmap/edges/parts
+# are memoized per sf_dir and reused across queries.
 _CACHE: dict = {}
 
 
-def _raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("raw", sf_dir)
+def _memo(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    """The session memo: `build()` once per key, stored as an eager local
+    checkpoint. Every cached relation is then one LogicalRDD leaf, so a
+    query's plan stays a few KB however deep the KG build under it is. A
+    `.persist()`ed relation would keep its child's whole plan inside its
+    InMemoryRelation, and every reference to it copies that plan again:
+    edges over triples and cmap over pages over raw grew to ~520 K chars
+    (6,264 physical-plan lines), and every job over it paid the planning.
+
+    Eager on purpose: every caller runs an action on the memo anyway, and
+    a lazy checkpoint still runs AQE's shuffle stages at plan time. Rows
+    are stored serialized: at sf0.01 the memo holds 0.47 MiB that way,
+    2.07 MiB as deserialized rows and 1.17 MiB as the old columnar cache,
+    with no measurable cost to the queries that read it (docs/SCALE.md)."""
     if key not in _CACHE:
-        _CACHE[key] = synth_raw_files(spark, sf_dir).persist()
+        _CACHE[key] = build().localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
     return _CACHE[key]
+
+
+def _raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _memo(("raw", sf_dir), lambda: synth_raw_files(spark, sf_dir))
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("pages", sf_dir)
-    if key not in _CACHE:
-        _CACHE[key] = convert_pages(
+    return _memo(
+        ("pages", sf_dir),
+        lambda: convert_pages(
             _raw(spark, sf_dir),
             num_partitions=spark.sparkContext.defaultParallelism,
-        ).persist()
-    return _CACHE[key]
+        ),
+    )
 
 
 def _ok_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,26 +264,22 @@ def _ok_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("triples", sf_dir)
-    if key not in _CACHE:
-        _CACHE[key] = extract_all_triples(_pages(spark, sf_dir)).persist()
-    return _CACHE[key]
+    return _memo(
+        ("triples", sf_dir), lambda: extract_all_triples(_pages(spark, sf_dir))
+    )
 
 
 def _cmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("cmap", sf_dir)
-    if key not in _CACHE:
-        _CACHE[key] = build_canonical_map(_pages(spark, sf_dir)).persist()
-    return _CACHE[key]
+    return _memo(
+        ("cmap", sf_dir), lambda: build_canonical_map(_pages(spark, sf_dir))
+    )
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("edges", sf_dir)
-    if key not in _CACHE:
-        _CACHE[key] = canonicalize_triples(
-            _triples(spark, sf_dir), _cmap(spark, sf_dir)
-        ).persist()
-    return _CACHE[key]
+    return _memo(
+        ("edges", sf_dir),
+        lambda: canonicalize_triples(_triples(spark, sf_dir), _cmap(spark, sf_dir)),
+    )
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -772,13 +787,13 @@ def _kg_export_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from confluence2md_spark.operators.mimeparts import explode_mime_parts
 
-    key = ("parts", sf_dir)
-    if key not in _CACHE:
-        _CACHE[key] = explode_mime_parts(
+    return _memo(
+        ("parts", sf_dir),
+        lambda: explode_mime_parts(
             _raw(spark, sf_dir),
             num_partitions=spark.sparkContext.defaultParallelism,
-        ).persist()
-    return _CACHE[key]
+        ),
+    )
 
 
 def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 # Tile the documents table so the convert stage dominates fixed overheads
 # (sf0.1 ships 5k docs; x8 = 40k MIME documents through the full pipeline).
 REPLICATE = int(os.environ.get("SPARK_GRAFT_KG_REPLICATE", "8"))

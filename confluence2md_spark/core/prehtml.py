@@ -203,12 +203,23 @@ def pre_process_html(html: str) -> str:
     # E11 (markdown.go:305-306)
     html = _CONTENT_WRAPPER.sub(r"\1", html)
 
-    # E12 — </div> balancing (markdown.go:308-315): drop leading excess
-    # closers one at a time while closes outnumber opens.
-    open_count = html.count("<div")
-    close_count = html.count("</div>")
-    while close_count > open_count:
-        html = html.replace("</div>", "", 1)
-        close_count -= 1
+    # E12 — </div> balancing (markdown.go:308-315)
+    return _drop_excess_div_closers(html)
 
+
+def _drop_excess_div_closers(html: str) -> str:
+    """Drop the leading closers while closes outnumber opens. The reference
+    removes them one at a time, each a copy of the whole document; one
+    split drops all of them in a single pass. The two differ only when a
+    removal joins a new closer out of its neighbours ("</</div>div>"),
+    which the count check catches; that input replays the reference."""
+    close_count = html.count("</div>")
+    excess = close_count - html.count("<div")
+    if excess <= 0:
+        return html
+    out = "".join(html.split("</div>", excess))
+    if out.count("</div>") == close_count - excess:
+        return out
+    for _ in range(excess):
+        html = html.replace("</div>", "", 1)
     return html

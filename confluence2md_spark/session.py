@@ -3,13 +3,15 @@
 Every knob here is scale-motivated (SURVEY.md §4.3): AQE for runtime
 re-planning + skew-join splitting, Arrow for vectorized pandas-UDF transport
 (the only Python in the hot path is the MIME->Markdown stage, and it moves in
-Arrow batches, never rows), and a bounded shuffle-partition default that AQE
-coalesces downward on small inputs and the caller raises for cluster runs.
+Arrow batches, never rows), and a shuffle-partition default of one per local
+task slot that AQE coalesces downward on small inputs and the caller raises
+for cluster runs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +33,15 @@ def _default_driver_memory() -> str:
     return "24g"
 
 
+def _local_width(master: str) -> int:
+    """Task slots of a `local`, `local[N]` or `local[*]` master; the
+    machine's CPU count for any other master."""
+    if master == "local":
+        return 1
+    m = re.fullmatch(r"local\[(\d+)(?:,\s*\d+)?\]", master)
+    return int(m.group(1)) if m else os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "confluence2md-kg",
     master: str | None = None,
@@ -43,7 +54,9 @@ def get_spark(
         or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count() or 1}]"
     )
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = int(
+            os.environ.get("SPARK_GRAFT_SHUFFLE") or _local_width(master)
+        )
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -103,7 +103,7 @@ def main(argv: list[str] | None = None) -> int:
         app_name=f"kg-build-{args.run_id}",
         master=args.master,
         # size the shuffle to the requested width (AQE coalesces further);
-        # the env default (32) is tuned for the full local[32] box
+        # without --partitions it is one partition per local task slot
         shuffle_partitions=args.partitions,
     )
     try:
@@ -147,6 +147,15 @@ def main(argv: list[str] | None = None) -> int:
                     "triples": n_triples,
                     "wall_s": round(wall, 2),
                     "triples_per_sec": round(n_triples / wall, 1) if wall > 0 else None,
+                    "session": {
+                        "master": spark.sparkContext.master,
+                        "driver_memory": spark.sparkContext.getConf().get(
+                            "spark.driver.memory"
+                        ),
+                        "shuffle_partitions": int(
+                            spark.conf.get("spark.sql.shuffle.partitions")
+                        ),
+                    },
                 }
             )
         )

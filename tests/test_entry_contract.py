@@ -75,3 +75,21 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) == 10
     assert df.columns == ["obj", "n_links"]
+
+
+def test_entry_cache_values_are_plan_leaves(spark, sf_dir):
+    """Every memoized relation is a single LogicalRDD leaf, so a query over
+    the KG plans over that leaf, not over the build under it. A persisted
+    relation kept its child's whole plan and every reference copied it:
+    the edges memo alone planned at ~520 K chars."""
+    for name in ("kg_communities", "kg_top_linked", "kg_mime_parts"):
+        _QUERIES[name](spark, sf_dir).count()
+    kinds = {key[0] for key in entrymod._CACHE}
+    assert {"raw", "pages", "triples", "cmap", "edges", "parts"} <= kinds
+    for key, df in entrymod._CACHE.items():
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.nodeName() == "LogicalRDD", key
+        assert plan.children().isEmpty(), key
+    for name in ("kg_communities", "kg_top_linked"):
+        plan = _QUERIES[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        assert len(plan.toString()) < 20_000, name

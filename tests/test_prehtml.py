@@ -1,7 +1,10 @@
 """Ports of preProcessHTML tests
 (/root/reference/converter/markdown_test.go:264-579, 865-975)."""
 
+from hypothesis import HealthCheck, given, settings, strategies as st
+
 from confluence2md_spark.core import pre_process_html
+from confluence2md_spark.core.prehtml import _drop_excess_div_closers
 
 
 def test_layout_divs():
@@ -146,6 +149,39 @@ def test_div_balance():
     # closers must never outnumber openers after pre-processing
     result = pre_process_html("</div></div></div></div>")
     assert result.count("</div>") <= result.count("<div")
+
+
+def _reference_div_balance(html):
+    # markdown.go:308-315: drop the first closer, once per excess closer
+    open_count = html.count("<div")
+    close_count = html.count("</div>")
+    while close_count > open_count:
+        html = html.replace("</div>", "", 1)
+        close_count -= 1
+    return html
+
+
+# open/close mixes, plus the halves that can join into a new closer
+_div_mix = st.lists(
+    st.sampled_from(
+        ["<div>", "</div>", '<div class="x">', "</", "div>", "<", "v>", "x", "\n"]
+    ),
+    max_size=40,
+).map("".join)
+
+
+@settings(max_examples=500, derandomize=True, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_div_mix)
+def test_div_balance_matches_reference_loop(html):
+    assert _drop_excess_div_closers(html) == _reference_div_balance(html)
+
+
+def test_div_balance_many_excess_closers():
+    html = "<div>a" + "</div>b" * 2001
+    out = _drop_excess_div_closers(html)
+    assert out == _reference_div_balance(html)
+    assert out == "<div>a" + "b" * 2000 + "</div>b"
 
 
 def test_fuzz_invariants():
