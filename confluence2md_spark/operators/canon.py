@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.plans.iterate import release
+
 from .components import connected_components
 from .linking import token_block_pairs
 
@@ -75,7 +77,12 @@ def _build_canonical_map(
     # re-planned and re-broadcast inside each checkpoint job — measured OOM
     # at 1.28M docs. (SURVEY.md §4.3: cut lineage ahead of iteration.)
     pairs = pairs.localCheckpoint()
-    comp = connected_components(pairs)  # (id, component) — only linked pages
+    try:
+        comp = connected_components(pairs)  # (id, component) — only linked pages
+    finally:
+        # neither CC path reads the pairs again: the driver path collected
+        # them, the distributed path returns an eager checkpoint
+        release(pairs)
     return (
         ok.select("doc_id")
         .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")

@@ -57,36 +57,3 @@ class LineageLog:
                     + "\n"
                 )
         return total
-
-    def record_stage_light(
-        self, stage: str, df: DataFrame, wall_ms: float, status: str = "ok"
-    ) -> int:
-        """Stage-level lineage row (partition_id = -1) without the
-        per-partition census. The census is one extra full pass over the
-        stage output; for a freshly written parquet table `df.count()` is
-        answered from footer statistics instead. Lean/throughput runs use
-        this; the default pipeline keeps the full census (K3 audit depth
-        is a product feature, not a bench feature)."""
-        total = df.count()
-        with open(self.path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "run_id": self.run_id,
-                        "stage": stage,
-                        "partition_id": -1,
-                        "rows_out": total,
-                        "wall_ms": round(wall_ms, 1),
-                        "status": status,
-                        "ts": time.time(),
-                    }
-                )
-                + "\n"
-            )
-        return total
-
-    def read(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [json.loads(line) for line in f if line.strip()]

@@ -6,8 +6,9 @@
   S4 edges    canonical triple rewrite (partitioned by pred on disk)
   S5 nodes    canonical page nodes + referenced obj nodes
 
-Every stage: write table -> lineage census -> manifest. On resume, complete
-stages are read back (K2). Wall-times per stage land in the lineage log.
+One runner, `stage`, runs every stage under a per-stage policy (the table
+in `build_kg`'s docstring): it owns resume (K2), timing, the per-partition
+lineage rows (K3), the manifest and the in-memory copy.
 """
 
 from __future__ import annotations
@@ -15,6 +16,9 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,8 +28,19 @@ from ..operators.mentions import extract_mentions
 from ..operators.triples import extract_all_triples
 from ..sources.catalog import load_table, write_table
 from .checkpoint import CheckpointManager
+from .iterate import release
 from .lineage import LineageLog
-from .skew import salted_repartition
+from .skew import key_layout_census, needs_rebalance, salted_repartition
+
+# stage -> policy in (full, lean, dry-run) mode; see build_kg's docstring
+_POLICY = {
+    "pages": ("sink", "sink_keep", "ephemeral"),
+    "mentions": ("sink", "skip", "ephemeral"),
+    "triples_raw": ("sink", "lazy", "ephemeral"),
+    "canon_map": ("sink", "ephemeral", "ephemeral"),
+    "edges": ("sink", "sink", "ephemeral"),
+    "nodes": ("sink", "sink", "ephemeral"),
+}
 
 
 @dataclass
@@ -41,169 +56,178 @@ class KgBuildResult:
         return sum(self.stage_wall_s.values())
 
 
+def pages_stage(raw_files: DataFrame, num_partitions: int) -> DataFrame:
+    """S1: the converted pages of `raw_files`. Runs the skew census (one
+    small job) now; the conversion itself stays a lazy plan."""
+    # Hot-repo skew (60% of the synthetic corpus lives in 'repo-hot';
+    # worse at 10^12-file scale) is defused BEFORE the Python stage —
+    # but ONLY when the physical layout needs it: shuffling terabytes of
+    # content that parquet splits already spread evenly would double the
+    # stage's IO for nothing. The census runs on a content-free
+    # projection (repo derives from doc_id; the content column is never
+    # evaluated for it), fused into ONE job (r6: hot_keys + layout were
+    # three driver round-trips; the per-(partition, key) census derives
+    # all of it in one collect of a tiny relation).
+    hot, census = key_layout_census(raw_files.select("repo"), "repo")
+    # B1 prefilter under a pushdown barrier (r6): when `content` is a
+    # DERIVED column (the synthetic corpus, or any view that computes
+    # payloads), Catalyst pushes the deterministic filter below the
+    # spreading exchange and inlines the full content expression into
+    # the predicate — at the bench corpus that lands it in the
+    # single-partition crossJoin stage, so the whole detect-over-
+    # synthesized-content pass runs on ONE core and the payload is
+    # synthesized again in the projection above (measured 1.5 s ->
+    # 7-9 s on the synth+filter step at sf1.0×8). Wrapping the
+    # predicate in a trivially-true non-deterministic guard keeps it
+    # above the exchange — evaluated data-parallel in the same fused
+    # stage as the conversion (2.2-2.8 s; plans/r06/kg_pages_stage_*).
+    # For STORED corpora the barrier costs nothing: the scan-level
+    # pushdown it blocks would only re-read a materialized column.
+    # (Plan shape pinned by test_pages_prefilter_stays_above_the_input_exchange.)
+    conf = raw_files.filter(
+        F.when(
+            F.monotonically_increasing_id() >= 0,
+            is_confluence_mime_col(F.col("content")),
+        ).otherwise(F.lit(False))
+    )
+    if needs_rebalance(census, num_partitions):
+        conf = salted_repartition(
+            conf, "repo", num_partitions, hot=hot, salt_source="path"
+        )
+    return convert_pages(conf, prefilter=False)
+
+
 def build_kg(
     spark: SparkSession,
     raw_files: DataFrame,
     warehouse: str,
     run_id: str = "run0",
     num_partitions: int | None = None,
-    link_threshold: float = 0.8,
     dry_run: bool = False,
     materialize_intermediates: bool = True,
 ) -> KgBuildResult:
-    """`dry_run=True` is the reference's --dry-run (main.go:204-207) at
-    pipeline scale: every stage is computed and counted (lineage recorded),
-    but nothing is written and no manifests are created.
+    """Run the five stages (plus the mentions audit table) under one
+    policy per stage, picked by the two flags:
 
-    `materialize_intermediates=False` (lean mode) skips the sinks that are
-    not products: `triples_raw` stays a lazy expression fused into the
-    edges job (its dedup is subsumed by the canonical groupBy), and
-    `canon_map` lives as the CC operator's localCheckpoint instead of a
-    parquet table. On this sandbox's single shared disk the intermediate
-    sink+readback traffic is the measured residual holding N->4N scaling
-    below the 0.8 gate (BASELINE.md); on a real cluster lean mode likewise
-    removes two full write+read round-trips from the critical path. The
-    trade: those two stages are no longer resume points (pages/edges/nodes
-    still are), so the default keeps them materialized."""
+      stage        full   lean (materialize_intermediates=False)   dry_run
+      pages        sink   sink_keep                                 ephemeral
+      mentions     sink   skip                                      ephemeral
+      triples_raw  sink   lazy                                      ephemeral
+      canon_map    sink   ephemeral                                 ephemeral
+      edges        sink   sink                                      ephemeral
+      nodes        sink   sink                                      ephemeral
+
+    - sink: write the table, then read it back; downstream stages read
+      the table. A resume point.
+    - sink_keep: an eager local checkpoint; the table is written from it
+      and downstream stages read the checkpoint. A resume point.
+    - ephemeral: an eager local checkpoint only, counted into lineage
+      with status `ephemeral`; nothing is written, so never resumed.
+    - lazy: a plan fused into its consumers' jobs; not timed or counted.
+    - skip: not computed.
+
+    `dry_run=True` is the reference's --dry-run (main.go:204-207) at
+    pipeline scale: every stage is computed and counted (lineage
+    recorded), but nothing is written and no manifests are created.
+
+    Lean mode drops the sinks that are not products: on a single shared
+    disk the intermediate sink+readback traffic is the measured residual
+    holding N->4N scaling below the 0.8 gate (BASELINE.md); on a cluster
+    it removes two full write+read round-trips from the critical path.
+    Keeping pages in memory serves its three consumers (canon_map titles,
+    edges extraction, nodes) from memory bandwidth, which scales with
+    cores, instead of re-reading the table from disk, which did not
+    (edges scaled 1.3x from 2->8 cores). The trade: triples_raw and
+    canon_map are no longer resume points.
+
+    A stage resumes only when its manifest is complete and its table
+    still reads back with the manifest's row count and schema; otherwise
+    it is recomputed. Every checkpoint the run made is released before
+    `build_kg` returns, also when a stage raises."""
     ckpt = CheckpointManager(warehouse, run_id)
     lineage = LineageLog(warehouse, run_id)
     res = KgBuildResult(run_id=run_id, warehouse=warehouse)
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
+    mode = 2 if dry_run else (0 if materialize_intermediates else 1)
+    kept: list[DataFrame] = []
 
-    # Lean mode trades K3 audit depth for throughput: stage-level lineage
-    # rows (metadata-only parquet counts) instead of the per-partition
-    # census, which costs one extra full pass over every stage output.
-    record = (
-        lineage.record_stage if materialize_intermediates else lineage.record_stage_light
-    )
-
-    def stage(name: str, compute, partition_by=None):
-        if not dry_run and ckpt.is_complete(name):
-            res.resumed_stages.append(name)
+    def resume(name: str) -> DataFrame | None:
+        manifest = ckpt.completed(name)
+        if manifest is None:
+            return None
+        try:
             df = load_table(spark, warehouse, name)
-            res.stage_rows[name] = df.count()
-            res.stage_wall_s[name] = 0.0
+            rows = df.count()
+        except (AnalysisException, Py4JJavaError):  # missing or unreadable
+            return None
+        if rows != manifest.get("rows") or df.schema.json() != manifest.get("schema"):
+            return None
+        res.resumed_stages.append(name)
+        res.stage_rows[name] = rows
+        res.stage_wall_s[name] = 0.0
+        return df
+
+    def stage(name: str, compute, policy: str, partition_by=None):
+        if policy == "skip":
+            return None
+        if policy == "lazy":
+            return compute()
+        sinks = policy != "ephemeral"
+        if sinks and (df := resume(name)) is not None:
             return df
         t0 = time.monotonic()
         out = compute()
-        if dry_run:
-            out = out.localCheckpoint()  # compute once; reuse downstream
-            wall = time.monotonic() - t0
-            res.stage_rows[name] = lineage.record_stage(name, out, wall * 1000, status="dry_run")
-            res.stage_wall_s[name] = wall
-            return out
-        path = write_table(out, warehouse, name, partition_by=partition_by)
-        df = load_table(spark, warehouse, name)
-        wall = time.monotonic() - t0
-        res.stage_rows[name] = record(name, df, wall * 1000)
-        res.stage_wall_s[name] = wall
-        ckpt.mark_complete(name, path)
-        return df
-
-    def s1():
-        # Hot-repo skew (60% of the synthetic corpus lives in 'repo-hot';
-        # worse at 10^12-file scale) is defused BEFORE the Python stage —
-        # but ONLY when the physical layout needs it: shuffling terabytes of
-        # content that parquet splits already spread evenly would double the
-        # stage's IO for nothing. The census runs on a content-free
-        # projection (repo derives from doc_id; the content column is never
-        # evaluated for it), fused into ONE job (r6: hot_keys + layout were
-        # three driver round-trips; the per-(partition, key) census derives
-        # all of it in one collect of a tiny relation).
-        from .skew import key_layout_census, needs_rebalance
-
-        hot, census = key_layout_census(raw_files.select("repo"), "repo")
-        # B1 prefilter under a pushdown barrier (r6): when `content` is a
-        # DERIVED column (the synthetic corpus, or any view that computes
-        # payloads), Catalyst pushes the deterministic filter below the
-        # spreading exchange and inlines the full content expression into
-        # the predicate — at the bench corpus that lands it in the
-        # single-partition crossJoin stage, so the whole detect-over-
-        # synthesized-content pass runs on ONE core and the payload is
-        # synthesized again in the projection above (measured 1.5 s ->
-        # 7-9 s on the synth+filter step at sf1.0×8). Wrapping the
-        # predicate in a trivially-true non-deterministic guard keeps it
-        # above the exchange — evaluated data-parallel in the same fused
-        # stage as the conversion (2.2-2.8 s; plans/r06/kg_pages_stage_*).
-        # For STORED corpora the barrier costs nothing: the scan-level
-        # pushdown it blocks would only re-read a materialized column.
-        conf = raw_files.filter(
-            F.when(
-                F.monotonically_increasing_id() >= 0,
-                is_confluence_mime_col(F.col("content")),
-            ).otherwise(F.lit(False))
-        )
-        if needs_rebalance(census, num_partitions):
-            conf = salted_repartition(
-                conf, "repo", num_partitions, hot=hot, salt_source="path"
+        if policy != "sink":
+            out = out.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
             )
-        return convert_pages(conf, prefilter=False)
+            kept.append(out)
+        if sinks:
+            path = write_table(out, warehouse, name, partition_by=partition_by)
+            table = load_table(spark, warehouse, name)
+            if policy == "sink":
+                out = table
+        wall = time.monotonic() - t0
+        status = "ok" if sinks else "ephemeral"
+        rows = lineage.record_stage(name, out, wall * 1000, status=status)
+        if sinks:
+            ckpt.mark_complete(name, path, rows, table.schema.json())
+        res.stage_rows[name] = rows
+        res.stage_wall_s[name] = wall
+        return out
 
-    if materialize_intermediates or dry_run:
-        pages = stage("pages", s1)
-    else:
-        # Lean mode: write the pages product ONCE but keep the in-memory
-        # copy (MEMORY_AND_DISK) as the source for the three downstream
-        # consumers (canon_map titles, edges extraction, nodes). The default
-        # path re-reads the pages table from storage per consumer — correct
-        # for resume isolation, but on the measured bottleneck (edges stage
-        # scaled 1.3x from 2->8 cores: single-disk scan bound) the cache
-        # trades disk bandwidth, which does not scale with cores, for
-        # memory bandwidth, which does.
-        if not dry_run and ckpt.is_complete("pages"):
-            res.resumed_stages.append("pages")
-            pages = load_table(spark, warehouse, "pages")
-            res.stage_rows["pages"] = pages.count()
-            res.stage_wall_s["pages"] = 0.0
-        else:
-            t0 = time.monotonic()
-            pages = s1().persist()
-            path = write_table(pages, warehouse, "pages")
-            wall = time.monotonic() - t0
-            res.stage_rows["pages"] = record("pages", pages, wall * 1000)
-            res.stage_wall_s["pages"] = wall
-            ckpt.mark_complete("pages", path)
-    # Linking/CC operate on titles (tiny rows): partition by data volume, not
-    # cluster width — oversizing these stages costs more in task scheduling
-    # than the work itself (measured at 1.16M titles on local[32]: 59
-    # partitions 4.6-10.8 s vs 8-16 partitions 3.4-3.8 s). ~100k title rows
-    # (~5 MB) per partition; a 10^9-title corpus still fans out to 10k tasks.
-    p_small = max(4, min(num_partitions, res.stage_rows["pages"] // 100_000 + 1))
-    if materialize_intermediates or dry_run:
+    plan = {name: policies[mode] for name, policies in _POLICY.items()}
+    try:
+        pages = stage(
+            "pages", lambda: pages_stage(raw_files, num_partitions), plan["pages"]
+        )
+        # Linking/CC operate on titles (tiny rows): partition by data
+        # volume, not cluster width — oversizing these stages costs more in
+        # task scheduling than the work itself (measured at 1.16M titles on
+        # local[32]: 59 partitions 4.6-10.8 s vs 8-16 partitions 3.4-3.8 s).
+        # ~100k title rows (~5 MB) per partition; a 10^9-title corpus still
+        # fans out to 10k tasks.
+        p_small = max(4, min(num_partitions, res.stage_rows["pages"] // 100_000 + 1))
         # first-class mentions table (SURVEY §1.2): raw mention occurrences
-        # for auditing linking recall; not on the edges critical path, so
-        # lean mode skips it.
-        stage("mentions", lambda: extract_mentions(pages))
-        triples = stage("triples_raw", lambda: extract_all_triples(pages))
+        # for auditing linking recall; not on the edges critical path
+        stage("mentions", lambda: extract_mentions(pages), plan["mentions"])
+        triples = stage(
+            "triples_raw", lambda: extract_all_triples(pages), plan["triples_raw"]
+        )
         cmap = stage(
             "canon_map",
-            lambda: build_canonical_map(
-                pages, threshold=link_threshold, num_partitions=p_small
-            ),
+            lambda: build_canonical_map(pages, num_partitions=p_small),
+            plan["canon_map"],
         )
-    else:
-        triples = extract_all_triples(pages)  # fused into the edges job
-        # build_canonical_map materializes eagerly regardless (LSH pairs and
-        # CC labels are localCheckpoints), so time it as its own stage even
-        # though nothing hits the warehouse.
-        t0 = time.monotonic()
-        # localCheckpoint: edges builds two broadcast maps from cmap and
-        # nodes joins it once more — materialize the tiny relation once
-        # instead of re-executing the pages-join per consumer.
-        cmap = build_canonical_map(
-            pages, threshold=link_threshold, num_partitions=p_small
-        ).localCheckpoint()
-        res.stage_rows["canon_map"] = record(
-            "canon_map", cmap, (time.monotonic() - t0) * 1000, status="ephemeral"
+        edges = stage(
+            "edges",
+            lambda: canonicalize_triples(triples, cmap),
+            plan["edges"],
+            partition_by=["pred"],
         )
-        res.stage_wall_s["canon_map"] = time.monotonic() - t0
-    edges = stage(
-        "edges",
-        lambda: canonicalize_triples(triples, cmap),
-        partition_by=["pred"],
-    )
-    stage("nodes", lambda: build_nodes(pages, cmap, edges))
-    if not (materialize_intermediates or dry_run):
-        pages.unpersist()
+        stage("nodes", lambda: build_nodes(pages, cmap, edges), plan["nodes"])
+    finally:
+        for df in kept:
+            release(df)
     return res

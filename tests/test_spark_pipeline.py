@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from confluence2md_spark.plans.pipeline import build_kg
+from confluence2md_spark.plans.pipeline import build_kg, pages_stage
 from confluence2md_spark.sources.corpus import synth_raw_files
 
 
@@ -76,6 +76,40 @@ def test_partial_resume_recomputes_only_missing(spark, sf_dir, built):
     assert before_rows == after_rows
 
 
+def _lineage(wh: str, run_id: str) -> list[dict]:
+    with open(os.path.join(wh, "_lineage", f"{run_id}.jsonl")) as f:
+        return [json.loads(line) for line in f]
+
+
+def _edge_set(spark, wh: str) -> set:
+    edges = spark.read.parquet(os.path.join(wh, "edges"))
+    return {tuple(r) for r in edges.select("subj", "pred", "obj").collect()}
+
+
+@pytest.mark.parametrize("fault", ["deleted", "garbage"])
+def test_resume_recomputes_a_damaged_table(spark, sf_dir, built, fault):
+    """Under a complete manifest, an edges table that lost a part file or
+    holds an unreadable one is recomputed, not read back."""
+    wh, _ = built
+    before = _edge_set(spark, wh)
+    parts = sorted(
+        os.path.join(d, f)
+        for d, _, files in os.walk(os.path.join(wh, "edges"))
+        for f in files
+        if f.startswith("part-")
+    )
+    if fault == "deleted":
+        os.remove(parts[0])
+    else:
+        with open(parts[0], "wb") as f:
+            f.write(b"not a parquet file\n" * 64)
+    raw = synth_raw_files(spark, sf_dir)
+    res = build_kg(spark, raw, wh, run_id="t1")
+    assert "edges" not in res.resumed_stages
+    assert "pages" in res.resumed_stages
+    assert _edge_set(spark, wh) == before
+
+
 def test_lineage_populated(built):
     wh, res = built
     path = os.path.join(wh, "_lineage", "t1.jsonl")
@@ -107,6 +141,13 @@ def test_lean_mode_same_products_no_intermediate_sinks(spark, sf_dir, built, tmp
         a = spark.read.parquet(os.path.join(wh_full, table))
         b = spark.read.parquet(os.path.join(wh, table))
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # lean lineage is the same per-partition census as a full run's
+    rows_out = {}
+    for r in _lineage(wh, "lean"):
+        assert r["partition_id"] >= 0
+        rows_out[r["stage"]] = rows_out.get(r["stage"], 0) + r["rows_out"]
+    assert rows_out == res.stage_rows
+    assert set(rows_out) == {"pages", "canon_map", "edges", "nodes"}
 
 
 def test_dry_run_writes_nothing(spark, sf_dir, tmp_path):
@@ -120,6 +161,61 @@ def test_dry_run_writes_nothing(spark, sf_dir, tmp_path):
     assert not os.path.exists(os.path.join(wh, "_manifests", "dry1", "pages.json"))
     # lineage IS recorded (the dry-run report)
     assert os.path.exists(os.path.join(wh, "_lineage", "dry1.jsonl"))
+
+
+@pytest.mark.parametrize("mode", ["full", "lean", "dry_run"])
+def test_build_leaves_no_blocks(spark, sf_dir, tmp_path, mode):
+    """Every checkpoint a build makes (the runner's in-memory copies, the
+    canon_map candidate pairs) is freed before build_kg returns."""
+    from test_iterate import _left_behind, _marker
+
+    raw = synth_raw_files(spark, sf_dir)
+    marker = _marker(spark)
+    build_kg(
+        spark,
+        raw,
+        str(tmp_path / "wh"),
+        run_id=mode,
+        dry_run=mode == "dry_run",
+        materialize_intermediates=mode == "full",
+    )
+    assert _left_behind(spark, marker) == []
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _exchanges(nodes) -> list[str]:
+    return [
+        n.outputPartitioning().toString() for n in nodes if n.nodeName() == "Exchange"
+    ]
+
+
+def test_pages_prefilter_stays_above_the_input_exchange(spark, sf_dir):
+    """The B1 prefilter's non-deterministic guard keeps Catalyst from
+    pushing it below the exchange that spreads the raw input (into the
+    single-partition stage that synthesizes `content`). Checked on a
+    one-partition input, which also makes the stage salt its repartition:
+    the filter is applied before salting, so it sits between the two."""
+    from confluence2md_spark.plans.skew import key_layout_census, needs_rebalance
+
+    raw = synth_raw_files(spark, sf_dir).coalesce(1)
+    assert needs_rebalance(key_layout_census(raw.select("repo"), "repo")[1], 4)
+    plan = pages_stage(raw, 4)._jdf.queryExecution().executedPlan().inputPlan()
+    (b1,) = [
+        n
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "Filter"
+        and "Exported From Confluence" in n.condition().toString()
+    ]
+    below = _exchanges(_plan_nodes(b1))
+    above = [p for p in _exchanges(_plan_nodes(plan)) if p not in below]
+    assert [p.startswith("hashpartitioning(repo") for p in above] == [True]
+    assert any(p.startswith("RoundRobinPartitioning") for p in below)
 
 
 def test_mime_parts_explode(spark, sf_dir):
