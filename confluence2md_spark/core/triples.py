@@ -17,39 +17,35 @@ from __future__ import annotations
 
 import re
 
-# Java and Python regex dialects agree on these patterns.
-MD_LINK_PATTERN = r"\[([^\]]*)\]\(([^)]+)\)"
+# Java and Python regex dialects agree on these patterns, with the Python
+# side compiled ASCII-only (`\s`/`\d` match what Java's match). They part
+# on `\r` and U+0085/U+2028/U+2029, which Java's `.` and `$` treat as line
+# ends; the converter's markdown ends its lines with `\n`.
+# Links exclude images by the lookbehind: a `[` right after `!` starts no
+# link, and the scan goes on from the next character.
+MD_LINK_PATTERN = r"(?<!\!)\[([^\]]*)\]\(([^)]+)\)"
 HEADING_PATTERN = r"(?m)^(#{1,6}) (.+)$"
 MD_IMAGE_PATTERN = r"!\[([^\]]*)\]\(([^)]+)\)"
 ATTACHMENT_URL_PATTERN = r"/download/attachments/(\d+)/([^)\"?\s]+)"
 # Confluence page URL: /wiki/spaces/{space}/pages/{id}/{title}
 PAGE_URL_PATTERN = r"/wiki/spaces/([^/\s]+)/pages/(\d+)/([^)\s?#]+)"
 
-_MD_LINK_RE = re.compile(MD_LINK_PATTERN)
-_HEADING_RE = re.compile(HEADING_PATTERN)
-_MD_IMAGE_RE = re.compile(MD_IMAGE_PATTERN)
-_ATTACH_RE = re.compile(ATTACHMENT_URL_PATTERN)
-_PAGE_URL_RE = re.compile(PAGE_URL_PATTERN)
+_MD_LINK_RE = re.compile(MD_LINK_PATTERN, re.ASCII)
+_HEADING_RE = re.compile(HEADING_PATTERN, re.ASCII)
+_MD_IMAGE_RE = re.compile(MD_IMAGE_PATTERN, re.ASCII)
+_ATTACH_RE = re.compile(ATTACHMENT_URL_PATTERN, re.ASCII)
+_PAGE_URL_RE = re.compile(PAGE_URL_PATTERN, re.ASCII)
 
 
 def extract_links(markdown: str) -> list[tuple[str, str]]:
-    """(text, url) for every markdown link — images excluded.
-
-    The MD_LINK_PATTERN also matches the tail of ``![alt](src)``; the Spark
-    side filters those the same way (preceding ``!``), keeping both paths
-    bit-identical.
-    """
-    out = []
-    for m in _MD_LINK_RE.finditer(markdown):
-        if m.start() > 0 and markdown[m.start() - 1] == "!":
-            continue
-        out.append((m.group(1), m.group(2)))
-    return out
+    """(text, url) for every markdown link — images excluded."""
+    return [(m.group(1), m.group(2)) for m in _MD_LINK_RE.finditer(markdown)]
 
 
 def extract_headings(markdown: str) -> list[tuple[int, str]]:
-    """(level, text) per ATX heading, in document order."""
-    return [(len(m.group(1)), m.group(2).strip()) for m in _HEADING_RE.finditer(markdown)]
+    """(level, text) per ATX heading, in document order; the text is
+    trimmed of spaces only, as Spark's `trim` does."""
+    return [(len(m.group(1)), m.group(2).strip(" ")) for m in _HEADING_RE.finditer(markdown)]
 
 
 def extract_image_refs(markdown: str) -> list[tuple[str, str]]:

@@ -17,14 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from confluence2md_spark.plans.iterate import release
-
 from .components import connected_components
 from .linking import token_block_pairs
 
 
 def build_canonical_map(
-    pages: DataFrame, threshold: float = 0.8, num_partitions: int | None = None
+    pages: DataFrame,
+    threshold: float = 0.8,
+    num_partitions: int | None = None,
+    scratch: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(doc_id, canon_id) for every page; identity where no alias exists.
 
@@ -38,6 +39,11 @@ def build_canonical_map(
     title rows are tiny, and oversizing this stage drowns it in task
     scheduling (measured: 3× slower at 64 partitions than at 8 for 36k
     titles). The pipeline passes rows//20k clamped to the cluster width.
+
+    The returned plan reads the CC labels, which past the driver cap are a
+    local checkpoint. With `scratch`, that checkpoint is appended to it,
+    for the caller to free (`iterate.release`) once the map is
+    materialized.
     """
     spark = pages.sparkSession
     # Whole-stage codegen OFF for this stage's actions: linking+CC is a
@@ -48,13 +54,16 @@ def build_canonical_map(
     prev_codegen = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try:
-        return _build_canonical_map(pages, threshold, num_partitions)
+        return _build_canonical_map(pages, threshold, num_partitions, scratch)
     finally:
         spark.conf.set("spark.sql.codegen.wholeStage", prev_codegen)
 
 
 def _build_canonical_map(
-    pages: DataFrame, threshold: float, num_partitions: int | None
+    pages: DataFrame,
+    threshold: float,
+    num_partitions: int | None,
+    scratch: list[DataFrame] | None,
 ) -> DataFrame:
     ok = pages.filter(F.col("status") == "ok").select("doc_id", "title")
     # Word tokens for titles: char n-grams over-merge short strings
@@ -72,17 +81,10 @@ def _build_canonical_map(
         threshold=threshold,
         num_partitions=num_partitions,
     )
-    # Materialize the candidate pairs BEFORE iterating: otherwise every CC
-    # iteration's lineage embeds the whole LSH plan (band joins, broadcasts),
-    # re-planned and re-broadcast inside each checkpoint job — measured OOM
-    # at 1.28M docs. (SURVEY.md §4.3: cut lineage ahead of iteration.)
-    pairs = pairs.localCheckpoint()
-    try:
-        comp = connected_components(pairs)  # (id, component) — only linked pages
-    finally:
-        # neither CC path reads the pairs again: the driver path collected
-        # them, the distributed path returns an eager checkpoint
-        release(pairs)
+    # CC materializes the pairs once, before it iterates (components.py)
+    comp = connected_components(pairs)  # (id, component) — only linked pages
+    if scratch is not None:
+        scratch.append(comp)
     return (
         ok.select("doc_id")
         .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
@@ -91,10 +93,6 @@ def _build_canonical_map(
             F.coalesce("component", F.col("doc_id")).alias("canon_id"),
         )
     )
-
-
-def _canon_node(col, cmap_col):
-    return F.concat(F.lit("page:"), cmap_col.cast("string"))
 
 
 def alias_only(cmap: DataFrame) -> DataFrame:

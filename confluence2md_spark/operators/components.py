@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from confluence2md_spark.plans.iterate import fixpoint, release
@@ -166,7 +166,11 @@ def connected_components(
     O(log n) shuffle+probe rounds (measured 2.6-3.3 s -> ~0.4 s at 3.1k
     pairs on a fresh JVM). Past the cap — a corpus whose DUPLICATE set
     alone is tens of millions of pages — star contraction takes over
-    (`driver_max_edges=0` forces it).
+    (`driver_max_edges=0` forces it). The input is checkpointed once,
+    eagerly, and counted on that same job; the count picks the path, and
+    the checkpoint is freed before returning. The result is the caller's:
+    a local relation on the driver path, an eager local checkpoint on the
+    distributed one.
 
     Fixpoint guard (distributed path): if the edge set is STILL changing
     when `max_iter` rounds are exhausted the labels would be silently
@@ -181,6 +185,22 @@ def connected_components(
     """
     if driver_max_edges is None:
         driver_max_edges = int(os.environ.get("KG_CC_DRIVER_MAX_EDGES", 2_000_000))
-    if driver_max_edges and edges.limit(driver_max_edges + 1).count() <= driver_max_edges:
-        return _driver_union_find(edges, src, dst)
-    return _star_contraction(edges, src, dst, max_iter)
+    # One materialization of the input, counted on the same job: either
+    # path reads the edges again, so an uncut input would run its whole
+    # plan twice (path choice, then collect or the first round), and every
+    # star round would re-plan it (SURVEY.md §4.3: cut lineage ahead of
+    # iteration).
+    seen = Observation("cc_edges")
+    e = (
+        edges.select(src, dst)
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    try:
+        if driver_max_edges and seen.get["n"] <= driver_max_edges:
+            return _driver_union_find(e, src, dst)
+        return _star_contraction(e, src, dst, max_iter)
+    finally:
+        # neither path reads the input again: the driver path collected
+        # it, the distributed path returns an eager checkpoint
+        release(e)

@@ -202,12 +202,15 @@ def token_block_pairs(
     if num_partitions is None:
         num_partitions = entities.sparkSession.sparkContext.defaultParallelism
     toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-    base = entities.select(F.col(id_col).alias("id"), toks.alias("tk")).repartition(
-        num_partitions, "id"
+    base = entities.select(F.col(id_col).alias("id"), toks.alias("tk"))
+    # `num_partitions` sizes the token shuffle, where the join work is; the
+    # df-cap window and both self-join aliases reuse this one exchange. Not
+    # on `base`: both windows re-shuffle anyway, and an exchange there is
+    # planned twice (the filter Catalyst infers from `explode` lands in
+    # one branch only, so the exact-hash branch cannot reuse it).
+    occ = base.select("id", "tk", F.explode("tk").alias("tok")).repartition(
+        num_partitions, "tok"
     )
-    occ = base.select("id", "tk", F.explode("tk").alias("tok"))
-    # shared df-cap primitive; leaves `kept` hash-partitioned by tok, so
-    # both self-join aliases reuse the same exchange
     kept = df_capped_token_index(occ, max_token_df=max_token_df)
     a, b = kept.alias("a"), kept.alias("b")
     # no intermediate dedup: a pair sharing k rare tokens is generated k

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .canon import alias_only
-from .triples import MD_LINK_PATTERN_J
+from ..core.triples import MD_LINK_PATTERN
 
 MENTION_COLS = ["doc_id", "kind", "surface", "target_raw", "pos", "context"]
 
@@ -56,8 +56,8 @@ def extract_mentions(pages: DataFrame) -> DataFrame:
             "doc_id",
             F.posexplode(
                 F.arrays_zip(
-                    F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN_J), 1).alias("s"),
-                    F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN_J), 2).alias("t"),
+                    F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN), 1).alias("s"),
+                    F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN), 2).alias("t"),
                 )
             ).alias("pos", "lnk"),
         )

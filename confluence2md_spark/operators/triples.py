@@ -2,8 +2,9 @@
 
 Every extractor is regexp_extract_all / arrays_zip / explode over the
 `pages` table: whole-stage codegen end-to-end, no Python. The patterns are
-shared with the pure-Python reference extractors in ``core.triples`` (unit
-tests pin that both paths agree on the same markdown).
+shared with the pure-Python reference extractors in ``core.triples``
+(tests/test_triples_differential.py pins that both paths agree on
+generated markdown).
 
 Edge vocabulary (BASELINE.json north_star):
   (page, links_to, page)            markdown links from F1/G8 output
@@ -20,18 +21,11 @@ from pyspark.sql import functions as F
 from ..core.triples import (
     ATTACHMENT_URL_PATTERN,
     HEADING_PATTERN,
+    MD_LINK_PATTERN,
     PAGE_URL_PATTERN,
 )
 
-# Java-dialect link pattern: images excluded via lookbehind (the pure-Python
-# extractor does the same with an explicit preceding-char check).
-MD_LINK_PATTERN_J = r"(?<!\!)\[([^\]]*)\]\(([^)]+)\)"
-
 TRIPLE_COLS = ["subj", "pred", "obj", "subj_type", "obj_type", "doc_id", "repo", "confidence"]
-
-
-def _subj(df: DataFrame) -> Column:
-    return F.concat(F.lit("page:"), F.col("doc_id").cast("string"))
 
 
 def normalize_target_col(url: Column) -> Column:
@@ -57,8 +51,8 @@ def extract_link_triples(pages: DataFrame) -> DataFrame:
         "repo",
         F.explode(
             F.arrays_zip(
-                F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN_J), 1).alias("text"),
-                F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN_J), 2).alias("url"),
+                F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN), 1).alias("text"),
+                F.regexp_extract_all("markdown", F.lit(MD_LINK_PATTERN), 2).alias("url"),
             )
         ).alias("lnk"),
     ).select(

@@ -1,10 +1,14 @@
 """K3 — per-partition lineage + metrics (north_rule requirement).
 
-Per stage we record one row per physical output partition:
-(run_id, stage, partition_id, rows_out, wall_ms, status, ts). The census is
-a JVM-side `groupBy(spark_partition_id())` — a map-side-combined count, no
-extra Python. Stage wall time is measured around the stage's action by the
-pipeline driver and stamped onto every partition row of that stage.
+Per stage we record one row per output partition:
+(run_id, stage, partition_id, rows_out, wall_ms, status, ts). A stage that
+writes a table takes its census from the files it wrote, with no Spark
+job: one row per write task (the `part-NNNNN` index), rows from the file
+footers (`catalog.table_files`). An ephemeral stage, which writes nothing,
+counts its checkpoint per partition with a JVM-side
+`groupBy(spark_partition_id())` — the job that also fills the checkpoint.
+Stage wall time is measured by the pipeline driver, census and manifest
+included, and stamped onto every partition row of that stage.
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.catalog import write_task
+
 
 def partition_census(df: DataFrame) -> list[dict]:
     rows = (
@@ -24,6 +30,16 @@ def partition_census(df: DataFrame) -> list[dict]:
         .collect()
     )
     return [{"partition_id": r["partition_id"], "rows_out": r["rows_out"]} for r in rows]
+
+
+def file_census(files: list[dict]) -> list[dict]:
+    """Per-write-task rows of a table listing (`catalog.table_files`); a
+    task that wrote into several partition directories is one row."""
+    rows: dict[int, int] = {}
+    for f in files:
+        task = write_task(f["file"])
+        rows[task] = rows.get(task, 0) + f["rows"]
+    return [{"partition_id": t, "rows_out": n} for t, n in sorted(rows.items())]
 
 
 class LineageLog:
@@ -35,13 +51,12 @@ class LineageLog:
         self.path = os.path.join(warehouse, "_lineage", f"{run_id}.jsonl")
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
 
-    def record_stage(self, stage: str, df: DataFrame, wall_ms: float, status: str = "ok") -> int:
-        parts = partition_census(df)
+    def record_stage(
+        self, stage: str, parts: list[dict], wall_ms: float, status: str = "ok"
+    ) -> None:
         ts = time.time()
-        total = 0
         with open(self.path, "a") as f:
             for p in parts:
-                total += p["rows_out"]
                 f.write(
                     json.dumps(
                         {
@@ -56,4 +71,3 @@ class LineageLog:
                     )
                     + "\n"
                 )
-        return total

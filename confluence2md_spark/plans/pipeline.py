@@ -8,11 +8,13 @@
 
 One runner, `stage`, runs every stage under a per-stage policy (the table
 in `build_kg`'s docstring): it owns resume (K2), timing, the per-partition
-lineage rows (K3), the manifest and the in-memory copy.
+lineage rows (K3), the manifest and the in-memory copy. The jobs a stage
+runs carry its name in the `kg.stage` local property.
 """
 
 from __future__ import annotations
 
+import json
 import time
 from dataclasses import dataclass, field
 
@@ -21,15 +23,16 @@ from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.canon import build_canonical_map, build_nodes, canonicalize_triples
 from ..operators.convert import convert_pages, is_confluence_mime_col
 from ..operators.mentions import extract_mentions
 from ..operators.triples import extract_all_triples
-from ..sources.catalog import load_table, write_table
+from ..sources.catalog import load_table, stored_schema, table_files, write_table
 from .checkpoint import CheckpointManager
 from .iterate import release
-from .lineage import LineageLog
+from .lineage import LineageLog, file_census, partition_census
 from .skew import key_layout_census, needs_rebalance, salted_repartition
 
 # stage -> policy in (full, lean, dry-run) mode; see build_kg's docstring
@@ -117,12 +120,12 @@ def build_kg(
       edges        sink   sink                                      ephemeral
       nodes        sink   sink                                      ephemeral
 
-    - sink: write the table, then read it back; downstream stages read
-      the table. A resume point.
-    - sink_keep: an eager local checkpoint; the table is written from it
-      and downstream stages read the checkpoint. A resume point.
-    - ephemeral: an eager local checkpoint only, counted into lineage
-      with status `ephemeral`; nothing is written, so never resumed.
+    - sink: write the table; downstream stages read the table (with the
+      schema it was written with, so no inference job). A resume point.
+    - sink_keep: a local checkpoint, filled by the job that writes the
+      table; downstream stages read the checkpoint. A resume point.
+    - ephemeral: a local checkpoint only, filled by its lineage census
+      (status `ephemeral`); nothing is written, so never resumed.
     - lazy: a plan fused into its consumers' jobs; not timed or counted.
     - skip: not computed.
 
@@ -140,62 +143,80 @@ def build_kg(
     (edges scaled 1.3x from 2->8 cores). The trade: triples_raw and
     canon_map are no longer resume points.
 
-    A stage resumes only when its manifest is complete and its table
-    still reads back with the manifest's row count and schema; otherwise
-    it is recomputed. Every checkpoint the run made is released before
+    A sink stage's lineage census and manifest come from the files it
+    wrote (`catalog.table_files`), not from a Spark job. A stage resumes
+    only when its manifest is complete and its table's file listing
+    (names, bytes, footer rows) still equals the manifest's; it is then
+    read with the manifest's schema, with no Spark job. Otherwise it is
+    recomputed. Every checkpoint the run made is released before
     `build_kg` returns, also when a stage raises."""
     ckpt = CheckpointManager(warehouse, run_id)
     lineage = LineageLog(warehouse, run_id)
     res = KgBuildResult(run_id=run_id, warehouse=warehouse)
+    sc = spark.sparkContext
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+        num_partitions = sc.defaultParallelism
     mode = 2 if dry_run else (0 if materialize_intermediates else 1)
     kept: list[DataFrame] = []
+    cmap_inputs: list[DataFrame] = []
 
     def resume(name: str) -> DataFrame | None:
         manifest = ckpt.completed(name)
         if manifest is None:
             return None
         try:
-            df = load_table(spark, warehouse, name)
-            rows = df.count()
-        except (AnalysisException, Py4JJavaError):  # missing or unreadable
-            return None
-        if rows != manifest.get("rows") or df.schema.json() != manifest.get("schema"):
+            if table_files(spark, warehouse, name) != manifest.get("files"):
+                return None
+        except (OSError, ValueError, AnalysisException, Py4JJavaError):  # unreadable
             return None
         res.resumed_stages.append(name)
-        res.stage_rows[name] = rows
+        res.stage_rows[name] = manifest["rows"]
         res.stage_wall_s[name] = 0.0
-        return df
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        return load_table(spark, warehouse, name, schema)
+
+    def run(name: str, compute, policy: str, partition_by) -> DataFrame:
+        sinks = policy != "ephemeral"
+        if sinks and (df := resume(name)) is not None:
+            return df
+        t0 = time.monotonic()
+        out = compute()
+        schema = stored_schema(out.schema, partition_by)
+        if policy != "sink":
+            out = out.localCheckpoint(
+                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
+            kept.append(out)
+        if sinks:
+            path = write_table(out, warehouse, name, partition_by=partition_by)
+            if policy == "sink":
+                out = load_table(spark, warehouse, name, schema)
+            files = table_files(spark, warehouse, name)
+            parts = file_census(files)
+            ckpt.mark_complete(name, path, files, schema.json())
+        else:
+            parts = partition_census(out)
+        wall = time.monotonic() - t0
+        lineage.record_stage(
+            name, parts, wall * 1000, status="ok" if sinks else "ephemeral"
+        )
+        res.stage_rows[name] = sum(p["rows_out"] for p in parts)
+        res.stage_wall_s[name] = wall
+        return out
 
     def stage(name: str, compute, policy: str, partition_by=None):
         if policy == "skip":
             return None
         if policy == "lazy":
             return compute()
-        sinks = policy != "ephemeral"
-        if sinks and (df := resume(name)) is not None:
-            return df
-        t0 = time.monotonic()
-        out = compute()
-        if policy != "sink":
-            out = out.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-            kept.append(out)
-        if sinks:
-            path = write_table(out, warehouse, name, partition_by=partition_by)
-            table = load_table(spark, warehouse, name)
-            if policy == "sink":
-                out = table
-        wall = time.monotonic() - t0
-        status = "ok" if sinks else "ephemeral"
-        rows = lineage.record_stage(name, out, wall * 1000, status=status)
-        if sinks:
-            ckpt.mark_complete(name, path, rows, table.schema.json())
-        res.stage_rows[name] = rows
-        res.stage_wall_s[name] = wall
-        return out
+        # a local property, not the job group: the caller's job group
+        # (a benchmark's traced span, say) keeps the build's jobs
+        prev = sc.getLocalProperty("kg.stage")
+        sc.setLocalProperty("kg.stage", name)
+        try:
+            return run(name, compute, policy, partition_by)
+        finally:
+            sc.setLocalProperty("kg.stage", prev)
 
     plan = {name: policies[mode] for name, policies in _POLICY.items()}
     try:
@@ -217,9 +238,15 @@ def build_kg(
         )
         cmap = stage(
             "canon_map",
-            lambda: build_canonical_map(pages, num_partitions=p_small),
+            lambda: build_canonical_map(
+                pages, num_partitions=p_small, scratch=cmap_inputs
+            ),
             plan["canon_map"],
         )
+        # the map is materialized now (written or checkpointed): free the
+        # CC labels its plan read
+        for df in cmap_inputs:
+            release(df)
         edges = stage(
             "edges",
             lambda: canonicalize_triples(triples, cmap),
@@ -228,6 +255,6 @@ def build_kg(
         )
         stage("nodes", lambda: build_nodes(pages, cmap, edges), plan["nodes"])
     finally:
-        for df in kept:
+        for df in kept + cmap_inputs:
             release(df)
     return res

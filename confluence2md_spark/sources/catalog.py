@@ -12,8 +12,10 @@ backend is a two-function change.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 def _use_iceberg() -> bool:
     # read at CALL time (not import) so tests and long-lived drivers can
@@ -75,10 +77,85 @@ def ensure_tables(spark: SparkSession) -> None:
             spark.sql(ddl)
 
 
-def load_table(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
+def load_table(
+    spark: SparkSession, warehouse: str, name: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read a stage table. With a known `schema` (see `stored_schema`)
+    the parquet backend skips schema inference, which is a Spark job of
+    its own; Iceberg takes the schema from its catalog either way."""
     if _use_iceberg():
         return spark.read.table(f"{_namespace()}.{name}")
+    if schema is not None:
+        return spark.read.schema(schema).parquet(os.path.join(warehouse, name))
     return spark.read.parquet(os.path.join(warehouse, name))
+
+
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(t.keyType, _nullable(t.valueType), True)
+    return t
+
+
+def stored_schema(schema: StructType, partition_by: list[str] | None = None) -> StructType:
+    """The schema a table `write_table` wrote from a DataFrame of `schema`
+    reads back as: Spark's file writers store every field nullable, and
+    the partition columns come last. (Partition values are typed from the
+    directory names on inference; the partition columns here — pred,
+    kind, node_type — are strings either way.)"""
+    parts = partition_by or []
+    fields = [f for f in schema if f.name not in parts] + [schema[c] for c in parts]
+    return _nullable(StructType(fields))
+
+
+_TASK = re.compile(r"^(?:part-)?(\d+)-")
+
+
+def write_task(file: str) -> int:
+    """The index of the write task that wrote a data file: parquet names
+    its files `part-NNNNN-...`, Iceberg `NNNNN-<task>-...`."""
+    return int(_TASK.match(os.path.basename(file)).group(1))
+
+
+def table_files(spark: SparkSession, warehouse: str, name: str) -> list[dict]:
+    """The data files of a written table, sorted: {"file", "bytes",
+    "rows"}. Parquet: the files Spark would read (names not starting with
+    `_` or `.`), relative to the table root, with the row count from each
+    file's footer, read on the driver with no Spark job; a file without a
+    valid footer raises (OSError or ValueError). Iceberg: each data file's
+    `record_count`, from the table's `files` metadata table, which reads
+    the manifests and no data file."""
+    if _use_iceberg():
+        rows = (
+            spark.read.table(f"{_namespace()}.{name}.files")
+            .select("file_path", "file_size_in_bytes", "record_count")
+            .collect()
+        )
+        files = [{"file": r[0], "bytes": r[1], "rows": r[2]} for r in rows]
+        return sorted(files, key=lambda f: f["file"])
+    import pyarrow.parquet as pq
+
+    root = os.path.join(warehouse, name)
+    files = []
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        for n in names:
+            if n.startswith(("_", ".")):
+                continue
+            path = os.path.join(d, n)
+            files.append(
+                {
+                    "file": os.path.relpath(path, root),
+                    "bytes": os.path.getsize(path),
+                    "rows": pq.read_metadata(path).num_rows,
+                }
+            )
+    return sorted(files, key=lambda f: f["file"])
 
 
 def write_table(

@@ -115,6 +115,15 @@ def test_iceberg_write_and_load_branch(monkeypatch):
     catalog.load_table(sp, "/ignored", "nodes")
     sp.read.table.assert_called_once_with("testns.nodes")
 
+    files = mock.MagicMock()
+    files.read.table.return_value.select.return_value.collect.return_value = [
+        ("s3://b/kg/edges/data/pred=x/00003-9-u-00001.parquet", 512, 7)
+    ]
+    listed = catalog.table_files(files, "/ignored", "edges")
+    files.read.table.assert_called_once_with("testns.edges.files")
+    assert [(f["bytes"], f["rows"]) for f in listed] == [(512, 7)]
+    assert catalog.write_task(listed[0]["file"]) == 3
+
     ens = mock.MagicMock()
     catalog.ensure_tables(ens)
     assert ens.sql.call_count == len(catalog.iceberg_ddl())

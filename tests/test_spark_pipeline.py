@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from confluence2md_spark.plans.pipeline import build_kg, pages_stage
+from confluence2md_spark.sources.catalog import load_table
 from confluence2md_spark.sources.corpus import synth_raw_files
 
 
@@ -60,6 +61,32 @@ def test_resume_is_identity(spark, sf_dir, built):
     assert set(res2.resumed_stages) == {"pages", "mentions", "triples_raw", "canon_map", "edges", "nodes"}
 
 
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Spark jobs `fn()` runs, counted under a job group of the test's own
+    (the previous group is restored after)."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_runs_no_spark_job(spark, sf_dir, built):
+    """Resume verifies each table from its file listing and footers and
+    reads it with the manifest's schema: metadata only."""
+    wh, _ = built
+    raw = synth_raw_files(spark, sf_dir)
+    out = {}
+    jobs = _jobs_in_group(
+        spark, "resume-t1", lambda: out.update(res=build_kg(spark, raw, wh, run_id="t1"))
+    )
+    assert len(out["res"].resumed_stages) == 6
+    assert jobs == 0
+
+
 def test_partial_resume_recomputes_only_missing(spark, sf_dir, built):
     wh, _ = built
     before = spark.read.parquet(f"{wh}/edges")
@@ -86,10 +113,12 @@ def _edge_set(spark, wh: str) -> set:
     return {tuple(r) for r in edges.select("subj", "pred", "obj").collect()}
 
 
-@pytest.mark.parametrize("fault", ["deleted", "garbage"])
+@pytest.mark.parametrize("fault", ["deleted", "garbage", "reencoded"])
 def test_resume_recomputes_a_damaged_table(spark, sf_dir, built, fault):
-    """Under a complete manifest, an edges table that lost a part file or
-    holds an unreadable one is recomputed, not read back."""
+    """Under a complete manifest, an edges table that lost a part file,
+    holds an unreadable one, or holds one with the same rows but other
+    bytes (re-encoded with another compression) is recomputed, not read
+    back."""
     wh, _ = built
     before = _edge_set(spark, wh)
     parts = sorted(
@@ -100,9 +129,21 @@ def test_resume_recomputes_a_damaged_table(spark, sf_dir, built, fault):
     )
     if fault == "deleted":
         os.remove(parts[0])
-    else:
+    elif fault == "garbage":
         with open(parts[0], "wb") as f:
             f.write(b"not a parquet file\n" * 64)
+    else:
+        import pyarrow.parquet as pq
+
+        size = os.path.getsize(parts[0])
+        table = pq.ParquetFile(parts[0]).read()
+        pq.write_table(table, parts[0], compression="gzip")
+        assert pq.read_metadata(parts[0]).num_rows == table.num_rows
+        assert os.path.getsize(parts[0]) != size
+        # an object store keeps no Hadoop `.crc` sidecar: the manifest's
+        # listing, not the local file system's checksum, must catch this
+        d, name = os.path.split(parts[0])
+        os.remove(os.path.join(d, f".{name}.crc"))
     raw = synth_raw_files(spark, sf_dir)
     res = build_kg(spark, raw, wh, run_id="t1")
     assert "edges" not in res.resumed_stages
@@ -124,6 +165,44 @@ def test_lineage_populated(built):
         per_stage[r["stage"]] += r["rows_out"]
         assert r["wall_ms"] >= 0 and r["partition_id"] >= 0
     assert per_stage["pages"] == res.stage_rows["pages"]
+
+
+def test_sink_manifests_record_the_read_schema(spark, built):
+    """A manifest's schema, which later runs read the table with, is the
+    schema Spark infers for the written table; its file list sums to the
+    stage's rows."""
+    wh, res = built
+    for name, rows in res.stage_rows.items():
+        with open(os.path.join(wh, "_manifests", "t1", f"{name}.json")) as f:
+            manifest = json.load(f)
+        assert manifest["schema"] == load_table(spark, wh, name).schema.json()
+        assert manifest["rows"] == sum(p["rows"] for p in manifest["files"]) == rows
+
+
+@pytest.mark.parametrize(
+    "mode, budget", [("lean", 22), ("full", 22), ("dry_run", 28)]
+)
+def test_build_job_budget(spark, sf_dir, tmp_path, mode, budget):
+    """No Spark job for bookkeeping: the census of a written table comes
+    from its files, an ephemeral checkpoint is filled by its census, CC
+    materializes its input once. (Before: 36 lean, 44 full, 38 dry-run.)
+    `num_partitions` is fixed so the salting decision does not follow the
+    box's width."""
+    raw = synth_raw_files(spark, sf_dir)
+    jobs = _jobs_in_group(
+        spark,
+        f"budget-{mode}",
+        lambda: build_kg(
+            spark,
+            raw,
+            str(tmp_path / "wh"),
+            run_id=mode,
+            num_partitions=4,
+            dry_run=mode == "dry_run",
+            materialize_intermediates=mode == "full",
+        ),
+    )
+    assert jobs <= budget
 
 
 def test_lean_mode_same_products_no_intermediate_sinks(spark, sf_dir, built, tmp_path):
@@ -163,12 +242,15 @@ def test_dry_run_writes_nothing(spark, sf_dir, tmp_path):
     assert os.path.exists(os.path.join(wh, "_lineage", "dry1.jsonl"))
 
 
-@pytest.mark.parametrize("mode", ["full", "lean", "dry_run"])
-def test_build_leaves_no_blocks(spark, sf_dir, tmp_path, mode):
+@pytest.mark.parametrize("mode", ["full", "lean", "dry_run", "star"])
+def test_build_leaves_no_blocks(spark, sf_dir, tmp_path, monkeypatch, mode):
     """Every checkpoint a build makes (the runner's in-memory copies, the
-    canon_map candidate pairs) is freed before build_kg returns."""
+    CC input, and — `star`: a lean build on the distributed CC path — the
+    CC labels behind canon_map) is freed before build_kg returns."""
     from test_iterate import _left_behind, _marker
 
+    if mode == "star":
+        monkeypatch.setenv("KG_CC_DRIVER_MAX_EDGES", "0")
     raw = synth_raw_files(spark, sf_dir)
     marker = _marker(spark)
     build_kg(
