@@ -286,6 +286,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _total_order(df: DataFrame, *keys: str) -> DataFrame:
+    """The one ordered-output boundary: `df` in the total order of `keys`,
+    the keys of its oracle's ORDER BY. The driver hashes a contract
+    result's rows in arrival order, so the order is the entry's concern
+    and operators return unordered, partitioned output.
+
+    One sorted partition, not orderBy: orderBy's range partitioner runs a
+    sampling job that re-executes the upstream plan (dedup_ngram_jaccard
+    at sf0.1: 3.4 -> 18.3 s), and the driver collects a contract result
+    whole anyway."""
+    return df.repartition(1).sortWithinPartitions(*keys)
+
+
 # ------------------------------------------------------------- KG queries --
 
 def _kg_detect_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,7 +997,10 @@ def _window_top_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFram
     # (-o_totalprice, o_orderkey) is exactly "max price, ties -> min
     # orderkey" (the window's ORDER BY), double negation is exact, and the
     # output keys are unique so the final o_custkey sort is the same total
-    # order. Ordered-collect equality pinned in tests.
+    # order. Ordered-collect equality pinned in tests. Precondition:
+    # o_totalprice is NOT NULL (TPC-H). A struct-ascending min would pick a
+    # null -o_totalprice first, where the window's desc order puts nulls
+    # last.
     orders = _t(spark, sf_dir, "orders")
     s = F.min(
         F.struct(
@@ -1375,7 +1391,7 @@ def _events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases, views, key="user_id", left_ts="ts", right_ts="ts",
         value_cols=["event_id", "ts"],
     )
-    return (
+    return _total_order(
         j.select(
             "user_id",
             "event_id",
@@ -1383,9 +1399,8 @@ def _events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             # timestampdiff works on TIMESTAMP_NTZ and is tz-independent
             # (unix_micros demands TIMESTAMP and would bind the session tz)
             F.expr("timestampdiff(MICROSECOND, ts_asof, ts)").alias("gap_us"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("event_id")
+        ),
+        "event_id",
     )
 
 
@@ -1400,14 +1415,8 @@ def _dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition(1) + sortWithinPartitions, NOT orderBy: a global sort's
-    # range-partitioner runs a separate sampling job that RE-EXECUTES the
-    # expensive self-join upstream (measured 3.4 -> 18.3 s at sf0.1). The
-    # survivor set is tiny, so a single sorted partition is the right plan.
-    return (
-        ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
-        .repartition(1)
-        .sortWithinPartitions("src", "dst")
+    return _total_order(
+        ngram_jaccard_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
     )
 
 
@@ -1424,14 +1433,18 @@ def _dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the banded SELECTION and the integer Jaccard score —
     the winnowing trick applied to MinHash (VERDICT r4 missing #1). The
     xxhash64 production path stays as dedup_minhash_pairs (bounded)."""
-    return minhash_portable_pairs(_t(spark, sf_dir, "documents"), ordered=True)
+    return _total_order(
+        minhash_portable_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
+    )
 
 
 def _dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded-EXACT SimHash twin: 60-bit portable simhash (polynomial token
     hash + 60 seeded affine bit parities), pigeonhole-exact 4x15 banding.
     The FNV-1a numpy production path stays as dedup_simhash_pairs."""
-    return simhash_portable_pairs(_t(spark, sf_dir, "documents"), ordered=True)
+    return _total_order(
+        simhash_portable_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
+    )
 
 
 def _planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1445,12 +1458,10 @@ def _planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition(1)+sortWithinPartitions, not orderBy: the result is tiny
-    # and a range-sort's sampling job would re-execute the blocked self-join
-    return (
-        embedding_near_dup_pairs(_planted(spark, sf_dir), threshold=0.85)
-        .repartition(1)
-        .sortWithinPartitions("src", "dst")
+    return _total_order(
+        embedding_near_dup_pairs(_planted(spark, sf_dir), threshold=0.85),
+        "src",
+        "dst",
     )
 
 
@@ -1465,10 +1476,10 @@ def _embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     >=0.85 pair at sf0.001 AND sf0.01 (verified both, 199/199 and 219/219
     pairs). The oracle therefore states the exact pair set. The general-
     path recall/sublinearity properties stay pinned in pytest."""
-    return (
-        embedding_near_dup_lsh(_planted(spark, sf_dir), threshold=0.85, tables=16)
-        .repartition(1)
-        .sortWithinPartitions("src", "dst")
+    return _total_order(
+        embedding_near_dup_lsh(_planted(spark, sf_dir), threshold=0.85, tables=16),
+        "src",
+        "dst",
     )
 
 
@@ -1528,7 +1539,7 @@ def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return token_stats(_t(spark, sf_dir, "documents"))
+    return _total_order(token_stats(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 def _text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1567,7 +1578,7 @@ def _text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint(_t(spark, sf_dir, "documents"))
+    return _total_order(fingerprint(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 def _text_hashed_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1617,7 +1628,7 @@ def _text_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated 4-gram span fractions
     (operators/dupspans.py); default cap keeps 443/500 at sf0.01."""
-    return dup_span_signals(_t(spark, sf_dir, "documents"))
+    return _total_order(dup_span_signals(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 def _text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1638,7 +1649,13 @@ def _text_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/substrdup.py, the ExactSubstr primitive of Lee et al.
     2022) via positional-gram diagonal chaining — hash-exact vs the
     twin, which chains exact gram strings."""
-    return duplicated_substring_spans(_t(spark, sf_dir, "documents"))
+    return _total_order(
+        duplicated_substring_spans(_t(spark, sf_dir, "documents")),
+        "doc_a",
+        "doc_b",
+        "a_start",
+        "b_start",
+    )
 
 
 def _text_substr_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1652,16 +1669,18 @@ def _text_substr_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (operators/winnow.py): MOSS local
     fingerprinting with the leftmost-min rule; ~20 fingerprints/doc at
-    sf0.01 (density ~= the paper's 2/(w+1) bound). ordered=True here (the
-    driver hashes rows in arrival order); the operator default is unordered
-    (r6 — no in-operator global sort anywhere)."""
-    return winnow_fingerprints(_t(spark, sf_dir, "documents"), ordered=True)
+    sf0.01 (density ~= the paper's 2/(w+1) bound)."""
+    return _total_order(
+        winnow_fingerprints(_t(spark, sf_dir, "documents")), "doc_id", "pos"
+    )
 
 
 def _text_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS overlap report: pairs sharing >= 5 winnowed fingerprints (24
     pairs at sf0.01 — the sketch-level view of the 25 containment pairs)."""
-    return winnow_overlap_pairs(_t(spark, sf_dir, "documents"), ordered=True)
+    return _total_order(
+        winnow_overlap_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
+    )
 
 
 def _nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1734,7 +1753,9 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment near-dup (operators/containment.py):
     inverted-index candidates + exact verify; 50 directed rows at
     sf0.01's planted duplicates."""
-    return containment_pairs(_t(spark, sf_dir, "documents"), ordered=True)
+    return _total_order(
+        containment_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
+    )
 
 
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1742,14 +1763,7 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition(1)+sortWithinPartitions (not orderBy) for the same reason
-    # as _dedup_ngram: the result is tiny (<= queries x topk rows) and a
-    # range-sort's sampling job would re-execute the scoring plan.
-    return (
-        bm25_topk(_t(spark, sf_dir, "documents"))
-        .repartition(1)
-        .sortWithinPartitions("q", "rank")
-    )
+    return _total_order(bm25_topk(_t(spark, sf_dir, "documents")), "q", "rank")
 
 
 # df-cap contract queries: 'dup' is the one rare term in the synthetic
@@ -1761,14 +1775,14 @@ _BM25_DFCAP_QUERIES = [(1, "dup join"), (2, "the dup")]
 
 
 def _bm25_topk_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
+    return _total_order(
         bm25_topk(
             _t(spark, sf_dir, "documents"),
             queries=_BM25_DFCAP_QUERIES,
             max_df_frac=0.5,
-        )
-        .repartition(1)
-        .sortWithinPartitions("q", "rank")
+        ),
+        "q",
+        "rank",
     )
 
 
@@ -1786,11 +1800,7 @@ def _text_bpe_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     merges = train_bpe(docs, num_merges=24)
-    return (
-        bpe_encode_stats(docs, merges)
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
+    return _total_order(bpe_encode_stats(docs, merges), "doc_id")
 
 
 def _curation_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1805,7 +1815,7 @@ def _curation_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 37 == 0).select("text")
-    return bloom_decontaminate(docs, bench, ordered=True)
+    return _total_order(bloom_decontaminate(docs, bench), "doc_id")
 
 
 def _curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1820,11 +1830,7 @@ def _curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % 37 == 0).select(
         F.array_join(F.slice(tokens_col(F.col("text")), 3, 8), " ").alias("text")
     )
-    return (
-        decontaminate(docs, bench, n=5, min_hits=1)
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
+    return _total_order(decontaminate(docs, bench, n=5, min_hits=1), "doc_id")
 
 
 def _curation_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1849,10 +1855,8 @@ def _curation_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     rates = {"en": 250_000, "de": 500_000, "fr": 750_000, "zh": 100_000}
-    return (
-        stratified_sample(docs, rates, default_micros=1_000_000)
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
+    return _total_order(
+        stratified_sample(docs, rates, default_micros=1_000_000), "doc_id"
     )
 
 
@@ -1863,11 +1867,7 @@ def _curation_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from confluence2md_spark.operators.curation import pack_chunks
 
     docs = _t(spark, sf_dir, "documents")
-    return (
-        pack_chunks(docs, context_len=64)
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
+    return _total_order(pack_chunks(docs, context_len=64), "doc_id")
 
 
 def _corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:

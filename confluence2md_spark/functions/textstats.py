@@ -37,14 +37,12 @@ def _micros(col: Column) -> Column:
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, n_tokens, n_distinct_tokens, avg_token_len_micros) — J15/J18.
+    """(doc_id, n_tokens, n_distinct_tokens, avg_token_len_micros) — J15/J18,
+    unordered.
 
     r6: repartition before the tokenize expressions — a single parquet file
     arrives as ONE scan partition, so the whole map-only query ran on one
-    core (measured 1.3-1.9 s vs 0.4-0.6 s spread at sf1.0). The final
-    single-partition doc_id sort restores the arrival order the driver
-    hashes (the scan order, doc_id-ascending in every sf fixture); values
-    are untouched."""
+    core (measured 1.3-1.9 s vs 0.4-0.6 s spread at sf1.0)."""
     toks = tokens_col(F.col(text_col))
     p = docs.sparkSession.sparkContext.defaultParallelism
     return (
@@ -60,8 +58,6 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 / F.size(toks)
             ).alias("avg_token_len_micros"),
         )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -72,7 +68,8 @@ def token_stats_sql_duck(docs: str = "documents") -> str:
   len(list_distinct({toks})) AS n_distinct_tokens,
   CAST(floor(list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform({toks}, t -> CAST(length(t) AS BIGINT))), (a,b) -> a+b)
         / CAST(len({toks}) AS DOUBLE) * 1000000) AS BIGINT) AS avg_token_len_micros
-FROM {docs}"""
+FROM {docs}
+ORDER BY doc_id"""
 
 
 # BPE-ish pretokenization (driver mandate: "whitespace + a BPE-ish regex").
@@ -227,7 +224,8 @@ def _polyhash_bulk(texts) -> "object":
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, fp) rolling polynomial hash — bit-exact vs the oracle.
+    """(doc_id, fp) rolling polynomial hash, unordered — bit-exact vs the
+    oracle.
 
     r6 execution: the per-character fold ran as a JVM `aggregate` over
     `split(t, '')` — one UTF8String allocation per character (15M for the
@@ -252,19 +250,14 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
         docs.select("doc_id", text_col)
         .repartition(p)
         .mapInPandas(_batches, schema="doc_id long, fp long")
-        # arrival-order contract: the expression form inherited the parquet
-        # scan order (doc_id-ascending in every sf fixture) and the driver
-        # hashes rows in arrival order; the repartition above scrambles it,
-        # so restore the same total order. repartition(1)+sortWithin, not
-        # orderBy: a range-sort's sampling job would re-execute the Python
-        # stage, and the result is only 8 bytes/doc.
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
     )
 
 
 def fingerprint_sql_duck(docs: str = "documents") -> str:
-    return f"SELECT doc_id, {FINGERPRINT_DUCK.format(t='text')} AS fp FROM {docs}"
+    return (
+        f"SELECT doc_id, {FINGERPRINT_DUCK.format(t='text')} AS fp FROM {docs} "
+        "ORDER BY doc_id"
+    )
 
 
 # ---------------------------------------------------------------- langid ---

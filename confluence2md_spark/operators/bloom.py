@@ -70,13 +70,13 @@ def bloom_decontaminate(
     bench_text_col: str = "text",
     n: int = N_GRAM,
     m_bits: int = M_BITS,
-    ordered: bool = False,
 ) -> DataFrame:
-    """(doc_id, n_grams, n_bloom_grams, flagged): per-document count of
-    distinct word n-grams whose k Bloom probes are ALL set in the filter
-    built from the benchmark's grams. No false negatives (every exact hit
-    is flagged); false positives are deterministic and reproduced exactly
-    by the twin. flagged = 1 iff any gram is Bloom-positive."""
+    """(doc_id, n_grams, n_bloom_grams, flagged), unordered: per-document
+    count of distinct word n-grams whose k Bloom probes are ALL set in the
+    filter built from the benchmark's grams. No false negatives (every
+    exact hit is flagged); false positives are deterministic and
+    reproduced exactly by the twin. flagged = 1 iff any gram is
+    Bloom-positive."""
     bench_pos = bench.selectExpr(
         f"explode({_gram_hashes_spark(bench_text_col, n)}) AS gh"
     ).distinct()
@@ -122,7 +122,7 @@ def bloom_decontaminate(
     hit = F.when(
         F.col("gh").isNotNull() & (F.expr(bits_set) == len(PROBES)), 1
     ).otherwise(0)
-    out = (
+    return (
         probed.groupBy("doc_id")
         .agg(
             F.count("gh").alias("n_grams"),
@@ -135,9 +135,6 @@ def bloom_decontaminate(
             (F.col("n_bloom_grams") >= 1).cast("int").alias("flagged"),
         )
     )
-    if ordered:
-        out = out.orderBy("doc_id")
-    return out
 
 
 def bloom_decontaminate_sql_duck(

@@ -68,16 +68,10 @@ def containment_pairs(
     threshold_micros: int = CONTAIN_THRESHOLD_MICROS,
     max_df: int = MAX_DF,
     min_shared: int = MIN_SHARED,
-    ordered: bool = False,
 ) -> DataFrame:
-    """(src, dst, cont_micros) directed rows where src's gram set is
-    >= threshold contained in dst's. Both directions of a candidate pair
-    are tested; a pair of exact duplicates emits two rows.
-
-    ordered=True funnels the survivor set to one partition for a
-    deterministic total order — contract/test use only. The default is
-    unordered: at corpus scale the thresholded pair set is unbounded and
-    must not land on a single task (same flag as dup_span_signals)."""
+    """(src, dst, cont_micros) directed rows, unordered, where src's gram
+    set is >= threshold contained in dst's. Both directions of a candidate
+    pair are tested; a pair of exact duplicates emits two rows."""
     p = docs.sparkSession.sparkContext.defaultParallelism
     base = (
         docs.repartition(p)  # small parquet arrives as 1 partition
@@ -127,14 +121,9 @@ def containment_pairs(
         F.col("ia").alias("dst"),
         F.expr("CAST(inter AS BIGINT) * 1000000 DIV nb").alias("cont_micros"),
     )
-    out = a_in_b.unionByName(b_in_a).filter(
+    return a_in_b.unionByName(b_in_a).filter(
         F.col("cont_micros") >= threshold_micros
     )
-    if ordered:
-        # repartition(1)+sortWithinPartitions, not orderBy: contract-sized
-        # output, and a global sort would add a range-partitioning pass.
-        out = out.repartition(1).sortWithinPartitions("src", "dst")
-    return out
 
 
 def containment_sql_duck(

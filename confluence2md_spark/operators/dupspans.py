@@ -45,20 +45,13 @@ def dup_span_signals(
     id_col: str = "doc_id",
     n: int = NGRAM_N,
     cap_micros: int = DUP_SPAN_CAP,
-    ordered: bool = True,
 ) -> DataFrame:
     """Per-document duplicated-span signals + keep flag.
 
-    Returns (doc_id, n_win, dup_win, dup_span_micros, keep) ordered by
-    doc_id. A window is "duplicated" when its n-gram occurs in >= 2
-    distinct documents corpus-wide. Documents with fewer than n tokens
-    have zero windows and dup_span_micros = 0 (kept).
-
-    `ordered=False` skips the terminal total order: a global orderBy runs
-    a range-partitioner sampling job that RE-EXECUTES the upstream plan
-    (docs/SCALE.md trap), so at production scale the unordered variant is
-    the one to sink — the order exists for the driver's arrival-order
-    contract, not for semantics.
+    Returns (doc_id, n_win, dup_win, dup_span_micros, keep), unordered.
+    A window is "duplicated" when its n-gram occurs in >= 2 distinct
+    documents corpus-wide. Documents with fewer than n tokens have zero
+    windows and dup_span_micros = 0 (kept).
     """
     toks = F.split(F.col(text_col), " ")
     # gram hashes at scan time: strings die inside the projection, only
@@ -87,7 +80,7 @@ def dup_span_signals(
     )
     # left join back onto the full doc list so zero-window docs still row.
     base = docs.select(F.col(id_col).alias("doc_id"))
-    out = (
+    return (
         base.join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -102,7 +95,6 @@ def dup_span_signals(
             "keep", (F.col("dup_span_micros") <= F.lit(cap_micros)).cast("bigint")
         )
     )
-    return out.orderBy("doc_id") if ordered else out
 
 
 def dup_span_sql_duck(

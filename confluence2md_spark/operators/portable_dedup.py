@@ -75,11 +75,11 @@ def minhash_portable_pairs(
     bands: int = N_BANDS,
     threshold_micros: int = 500_000,
     seed: int = 7,
-    ordered: bool = False,
 ) -> DataFrame:
-    """(src, dst, n_inter, n_union, jacc_micros): candidate pairs the
-    banded MinHash surfaces whose EXACT shingle-set Jaccard (verified on
-    the full shingle sets, integer micros) is >= threshold_micros.
+    """(src, dst, n_inter, n_union, jacc_micros), unordered: candidate
+    pairs the banded MinHash surfaces whose EXACT shingle-set Jaccard
+    (verified on the full shingle sets, integer micros) is >=
+    threshold_micros.
 
     Both the selection (which pairs the bands surface) and the score are
     deterministic integer arithmetic — hash-exact vs the DuckDB twin.
@@ -148,7 +148,7 @@ def minhash_portable_pairs(
         )
     )
     inter = F.size(F.array_intersect("ha", "hb")).cast("bigint")
-    out = (
+    return (
         cand.select(
             "src",
             "dst",
@@ -167,9 +167,6 @@ def minhash_portable_pairs(
         )
         .filter(F.col("jacc_micros") >= threshold_micros)
     )
-    if ordered:
-        out = out.repartition(1).sortWithinPartitions("src", "dst")
-    return out
 
 
 def minhash_portable_sql_duck(
@@ -277,12 +274,11 @@ def simhash_portable_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     seed: int = 11,
-    ordered: bool = False,
 ) -> DataFrame:
-    """(src, dst, hamming): pairs within Hamming distance max_hamming of
-    the 60-bit portable simhash. Banding 4 x 15 bits is pigeonhole-exact
-    for max_hamming <= 3, so the output equals the full-popcount filter —
-    and the twin reproduces it value-for-value."""
+    """(src, dst, hamming), unordered: pairs within Hamming distance
+    max_hamming of the 60-bit portable simhash. Banding 4 x 15 bits is
+    pigeonhole-exact for max_hamming <= 3, so the output equals the
+    full-popcount filter — and the twin reproduces it value-for-value."""
     sig = simhash_portable_signatures(docs, text_col, id_col, seed=seed)
     width = SIM_BITS // SIM_BANDS
     banded = sig.select(
@@ -315,14 +311,11 @@ def simhash_portable_pairs(
         )
         .dropDuplicates(["src", "dst"])
     )
-    out = cand.select(
+    return cand.select(
         "src",
         "dst",
         F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("bigint").alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
-    if ordered:
-        out = out.repartition(1).sortWithinPartitions("src", "dst")
-    return out
 
 
 def simhash_portable_sql_duck(

@@ -57,14 +57,10 @@ def duplicated_substring_spans(
     n: int = NGRAM_N,
     min_len: int = MIN_SPAN_TOKENS,
     df_cap: int = DF_CAP,
-    ordered: bool = True,
 ) -> DataFrame:
-    """(doc_a, doc_b, a_start, b_start, len_tokens) for every maximal
-    duplicated token span of >= min_len tokens between two documents
-    (doc_a < doc_b; starts are 1-based token positions). `ordered=False`
-    skips the terminal total order (a global orderBy re-executes the
-    upstream plan via the range-partitioner sampling job — the
-    production sink is the unordered variant)."""
+    """(doc_a, doc_b, a_start, b_start, len_tokens), unordered, for every
+    maximal duplicated token span of >= min_len tokens between two
+    documents (doc_a < doc_b; starts are 1-based token positions)."""
     toks = F.split(F.col(text_col), " ")
     grams_expr = F.when(
         F.size(toks) >= n,
@@ -112,7 +108,7 @@ def duplicated_substring_spans(
         (F.col("pa") - F.col("pb")).alias("diag"),
         (F.col("pa") - F.row_number().over(w)).alias("island"),
     )
-    spans = (
+    return (
         isl.groupBy("doc_a", "doc_b", "diag", "island")
         .agg(
             F.min("pa").alias("a_start"),
@@ -121,11 +117,6 @@ def duplicated_substring_spans(
         )
         .filter(F.col("len_tokens") >= min_len)
         .select("doc_a", "doc_b", "a_start", "b_start", "len_tokens")
-    )
-    return (
-        spans.orderBy("doc_a", "doc_b", "a_start", "b_start")
-        if ordered
-        else spans
     )
 
 
@@ -204,7 +195,7 @@ def remove_duplicated_spans(
     the rebuilt text byte-for-byte (sha256 of '' for a fully-removed
     doc); tokenization is the span finder's plain space split."""
     spans = duplicated_substring_spans(
-        docs, text_col, id_col, n=n, min_len=min_len, df_cap=df_cap, ordered=False
+        docs, text_col, id_col, n=n, min_len=min_len, df_cap=df_cap
     )
     iv = spans.select(
         F.col("doc_b").alias("doc_id"),

@@ -50,20 +50,11 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = K_GRAM,
     w: int = W_WINDOW,
-    ordered: bool = False,
 ) -> DataFrame:
-    """(doc_id, pos, fp): winnowing-selected fingerprints; `ordered=True`
-    adds a total (doc_id, pos) order. `pos` is the 0-based gram index of
-    the selected gram. Documents with fewer than k + w - 1 tokens (no full
-    window) emit no rows — mirrored by the twin's range() bounds.
-
-    r6: the default flipped to `ordered=False`, matching containment /
-    overlap / portable-dedup (VERDICT r5): a global orderBy over a
-    corpus-sized (~20 fps/doc) relation is a sort the production caller
-    must opt INTO, not remember to opt out of — and its range-sampling job
-    re-executes the plan (docs/SCALE.md trap). The driver arrival-order
-    contract lives in the __spark_entry__ wrapper, which passes
-    ordered=True explicitly."""
+    """(doc_id, pos, fp): winnowing-selected fingerprints, unordered.
+    `pos` is the 0-based gram index of the selected gram. Documents with
+    fewer than k + w - 1 tokens (no full window) emit no rows — mirrored
+    by the twin's range() bounds."""
     toks = F.split(F.col(text_col), " ")
     gram_str = (
         f"transform(sequence(1, size(split({text_col}, ' ')) - {k} + 1), "
@@ -84,7 +75,7 @@ def winnow_fingerprints(
         .rowsBetween(Window.currentRow, w - 1)
     )
     n_win = Window.partitionBy("doc_id")
-    out = (
+    return (
         g.withColumn("sel", F.min(F.struct("h", "pos")).over(win))
         .withColumn("n_grams", F.count(F.lit(1)).over(n_win))
         # only full windows select (window starts 0 .. n_grams - w)
@@ -96,7 +87,6 @@ def winnow_fingerprints(
         )
         .distinct()
     )
-    return out.orderBy("doc_id", "pos") if ordered else out
 
 
 def winnow_sql_duck(
@@ -139,7 +129,6 @@ def winnow_overlap_pairs(
     w: int = W_WINDOW,
     min_shared: int = MIN_SHARED_FPS,
     max_df: int = 1000,
-    ordered: bool = False,
 ) -> DataFrame:
     """(src, dst, n_shared): document pairs sharing >= min_shared winnowed
     fingerprint hashes — the MOSS overlap report. Because fingerprints are
@@ -147,19 +136,15 @@ def winnow_overlap_pairs(
     co-occurrence join (operators/containment.py): the same inverted-index
     shape over a far smaller relation. Fingerprints with corpus df >
     max_df are dropped before the self-join (the standard stopword-gram
-    cut, mirrored in the twin).
-
-    ordered=True funnels the survivor pairs to one partition for a
-    deterministic total order — contract/test use only; the production
-    default leaves the pair set distributed (docs/SCALE.md trap 15)."""
+    cut, mirrored in the twin). The pair set is unordered."""
     fps = (
-        winnow_fingerprints(docs, text_col, id_col, k, w, ordered=False)
+        winnow_fingerprints(docs, text_col, id_col, k, w)
         .select(F.col("doc_id"), "fp")
         .distinct()
     )
     df_counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     rare = fps.join(df_counts.filter(F.col("df") <= max_df).select("fp"), "fp")
-    out = (
+    return (
         rare.alias("a")
         .join(
             rare.alias("b"),
@@ -172,9 +157,6 @@ def winnow_overlap_pairs(
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    if ordered:
-        out = out.repartition(1).sortWithinPartitions("src", "dst")
-    return out
 
 
 def winnow_overlap_sql_duck(

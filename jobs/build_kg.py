@@ -41,6 +41,19 @@ class _Parser(argparse.ArgumentParser):
         raise SystemExit(1)
 
 
+def _jvm_heap(spark) -> str | None:
+    """The driver heap the JVM was launched with (its `-Xmx` argument).
+    The SparkConf's spark.driver.memory is not it: under spark-submit the
+    JVM already runs when get_spark sets that key to its in-code default."""
+    args = (
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean()
+        .getInputArguments()
+    )
+    xmx = [a[4:] for a in args if a.startswith("-Xmx")]
+    return xmx[-1] if xmx else None
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = _Parser(description="Build the Confluence knowledge graph")
     ap.add_argument("--sf-dir", help="testdata dir to synthesize the corpus from")
@@ -149,9 +162,7 @@ def main(argv: list[str] | None = None) -> int:
                     "triples_per_sec": round(n_triples / wall, 1) if wall > 0 else None,
                     "session": {
                         "master": spark.sparkContext.master,
-                        "driver_memory": spark.sparkContext.getConf().get(
-                            "spark.driver.memory"
-                        ),
+                        "driver_memory": _jvm_heap(spark),
                         "shuffle_partitions": int(
                             spark.conf.get("spark.sql.shuffle.partitions")
                         ),

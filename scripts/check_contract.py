@@ -93,7 +93,7 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     bounds = entrymod.bounded_checks() if hasattr(entrymod, "bounded_checks") else {}
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = n_rows_only = n_order_warn = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -175,9 +175,13 @@ def main():
                 # r1 evidence says the driver hash is row-order-insensitive
                 # (unordered queries passed); surface as a warning anyway.
                 order_note = " [WARN: arrival order differs — no total ORDER BY]"
+                n_order_warn += 1
             print(f"PASS {name}: {len(s_norm)} rows ({wall:.1f}s){order_note}")
             n_pass += 1
-    print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
+    print(
+        f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only, "
+        f"{n_order_warn} order-warn =="
+    )
     spark.stop()
     return 1 if n_fail else 0
 

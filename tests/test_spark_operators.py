@@ -471,9 +471,6 @@ def test_fingerprint_numpy_matches_expression(spark, sf_dir):
         ]
         new = [tuple(r) for r in fingerprint(frame).orderBy("doc_id").collect()]
         assert old == new
-    # arrival order (the driver hashes rows in result order): doc_id asc
-    ids = [r["doc_id"] for r in fingerprint(docs).collect()]
-    assert ids == sorted(ids)
 
 
 def test_key_layout_census_matches_separate_helpers(spark, sf_dir):
@@ -1607,13 +1604,13 @@ def test_dup_spans_matches_duckdb_twin(spark):
         for i in range(30)
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = [tuple(r) for r in dup_span_signals(docs).collect()]
+    got = sorted(tuple(r) for r in dup_span_signals(docs).collect())
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = con.execute(dup_span_sql_duck()).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert got == sorted(tuple(w) for w in want)
     assert any(r[2] > 0 for r in got)  # some duplicated window exists
 
 
@@ -1633,7 +1630,7 @@ def test_containment_hand_computed(spark):
         (2, "totally different words with no overlap at all here friend"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = [tuple(r) for r in containment_pairs(docs, ordered=True).collect()]
+    got = sorted(tuple(r) for r in containment_pairs(docs).collect())
 
     # all 5 of inner's 3-grams appear in outer -> cont(0 -> 1) = 1.0;
     # outer has 29 grams so cont(1 -> 0) is far below threshold.
@@ -1661,13 +1658,13 @@ def test_containment_matches_duckdb_twin(spark):
     for j, src in ((20, 0), (21, 1)):
         rows.append((j, rows[src][1] + " extra" + str(j) + " more" + str(j)))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = [tuple(r) for r in containment_pairs(docs, ordered=True).collect()]
+    got = sorted(tuple(r) for r in containment_pairs(docs).collect())
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = con.execute(containment_sql_duck()).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert got == sorted(tuple(w) for w in want)
     # the planted pairs are found in the contained direction
     srcs = {(r[0], r[1]) for r in got}
     assert (0, 20) in srcs and (1, 21) in srcs
@@ -1893,11 +1890,71 @@ def test_winnow_overlap_matches_duckdb_twin(spark):
     # plant heavy overlap: doc 12 = doc 0 with a new tail
     rows.append((12, rows[0][1] + " tail12 tail13 tail14"))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = [tuple(r) for r in winnow_overlap_pairs(docs, min_shared=3, ordered=True).collect()]
+    got = sorted(tuple(r) for r in winnow_overlap_pairs(docs, min_shared=3).collect())
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = con.execute(winnow_overlap_sql_duck(min_shared=3)).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert got == sorted(tuple(w) for w in want)
     assert any(s == 0 and d == 12 for s, d, _ in got)
+
+
+# ------------------------------------------------------- output order ----
+
+def test_operator_outputs_are_unordered(spark):
+    """Operators return unordered, partitioned output; a contract query's
+    total order is added by the entry's `_total_order`. No operator plan
+    funnels its output through a one-partition repartition or sorts it
+    globally, and no public function takes an `ordered` flag."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import confluence2md_spark
+    from confluence2md_spark.functions.textstats import fingerprint, token_stats
+    from confluence2md_spark.operators.bloom import bloom_decontaminate
+    from confluence2md_spark.operators.containment import containment_pairs
+    from confluence2md_spark.operators.dupspans import dup_span_signals
+    from confluence2md_spark.operators.portable_dedup import (
+        minhash_portable_pairs,
+        simhash_portable_pairs,
+    )
+    from confluence2md_spark.operators.substrdup import duplicated_substring_spans
+    from confluence2md_spark.operators.winnow import (
+        winnow_fingerprints,
+        winnow_overlap_pairs,
+    )
+
+    text = "a b c d e f g h i j k l"
+    docs = spark.createDataFrame(
+        [(1, text), (2, "x " + text), (3, "p q r s")], ["doc_id", "text"]
+    )
+    outputs = {
+        "winnow_fingerprints": winnow_fingerprints(docs),
+        "winnow_overlap_pairs": winnow_overlap_pairs(docs),
+        "containment_pairs": containment_pairs(docs),
+        "minhash_portable_pairs": minhash_portable_pairs(docs),
+        "simhash_portable_pairs": simhash_portable_pairs(docs),
+        "bloom_decontaminate": bloom_decontaminate(docs, docs.select("text")),
+        "dup_span_signals": dup_span_signals(docs),
+        "duplicated_substring_spans": duplicated_substring_spans(docs),
+        "token_stats": token_stats(docs),
+        "fingerprint": fingerprint(docs),
+    }
+    for name, df in outputs.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # repartition(1)'s node; a global aggregate's single-partition
+        # exchange is ENSURE_REQUIREMENTS, not this one
+        assert "Exchange SinglePartition, REPARTITION_BY_NUM" not in plan, name
+        assert "rangepartitioning" not in plan, name  # a terminal orderBy
+
+    for info in pkgutil.walk_packages(
+        confluence2md_spark.__path__, "confluence2md_spark."
+    ):
+        mod = importlib.import_module(info.name)
+        for fname, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fname.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            params = inspect.signature(fn).parameters
+            assert "ordered" not in params, f"{mod.__name__}.{fname}"
