@@ -73,7 +73,8 @@ def _build_canonical_map(
     # index (round 2): for 2-3-token sets MinHash banding is probabilistic
     # AND pays ~9 s of cold-JIT for its nested array exprs per fresh JVM —
     # measured as the single non-scaling stage of the whole pipeline.
-    # Documents (large shingle sets) still go through lsh_candidate_pairs.
+    # Documents (large shingle sets) go through lsh_candidate_pairs instead
+    # (word-n-gram MinHash, banded by band_join); titles never do.
     pairs = token_block_pairs(
         ok,
         id_col="doc_id",

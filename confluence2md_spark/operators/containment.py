@@ -73,13 +73,11 @@ def containment_pairs(
     set is >= threshold contained in dst's. Both directions of a candidate
     pair are tested; a pair of exact duplicates emits two rows."""
     p = docs.sparkSession.sparkContext.defaultParallelism
-    base = (
-        docs.repartition(p)  # small parquet arrives as 1 partition
-        .select(
-            F.col(id_col).alias("id"),
-            _distinct_grams(F.col(text_col), n).alias("grams"),
-        )
-        .persist()  # scanned by the index explode AND twice by verify
+    # scanned by the index explode AND twice by verify; all three reads
+    # share the round-robin exchange (small parquet arrives as 1 partition)
+    base = docs.repartition(p).select(
+        F.col(id_col).alias("id"),
+        _distinct_grams(F.col(text_col), n).alias("grams"),
     )
     idx = base.select(
         "id",

@@ -8,7 +8,8 @@ Scale shapes:
   (lang, length bucket) keeps the quadratic term inside small blocks.
 * MinHash+LSH — shingle→minhash→band→bucket equi-join (linking.py machinery).
 * SimHash — 64-bit sign-aggregated token hashes (numpy inside a pandas UDF),
-  candidate pairs via 16-bit band blocking, verify by popcount distance.
+  candidate pairs via 16-bit band blocking (banding.band_join), verify by
+  popcount distance.
 * embedding cosine — see similarity.py; near-dup = cosine ≥ τ.
 """
 
@@ -21,6 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .banding import band_join, bit_bands
 from .components import connected_components
 from .linking import lsh_candidate_pairs
 
@@ -309,7 +311,8 @@ def minhash_near_dup_pairs(
     """(src, dst, jaccard) near-dup candidates over word-3-gram-shingled
     text via MinHash/LSH (rows-only oracle: permutation hashes aren't
     portable SQL). Word n-grams, not char n-grams: char shingles saturate on
-    repetitive corpora and degrade LSH to all-pairs.
+    repetitive corpora and degrade LSH to all-pairs. Eager, like
+    `lsh_candidate_pairs`: the result is a local checkpoint.
 
     r6: partitioning derives from the DOC count, not the cluster width —
     the canon_map lesson (pipeline.py p_small) applied here: the LSH chain
@@ -322,16 +325,13 @@ def minhash_near_dup_pairs(
     independent (deterministic hashes, count-based caps)."""
     n = docs.count()
     p = docs.sparkSession.sparkContext.defaultParallelism
-    ents = docs.select(F.col("doc_id"), F.col(text_col).alias("t"))
     return lsh_candidate_pairs(
-        ents,
+        docs,
         id_col="doc_id",
-        text_col="t",
+        text_col=text_col,
         k=32,
         bands=8,
         threshold=threshold,
-        mode="word_ngrams",
-        sig_engine="numpy",  # long shingle sets: one matmul beats k JVM scans
         num_partitions=max(4, min(p, n // 25_000 + 1)),
     )
 
@@ -492,36 +492,13 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(src, dst, hamming) pairs with simhash Hamming distance <= max_hamming.
     Candidates blocked on 16-bit bands (a pair within distance 3 shares at
     least one of 4 bands — pigeonhole), verified by popcount."""
-    sig = simhash_signatures(docs)
-    banded = sig.select(
+    banded = simhash_signatures(docs).select(
         F.col("doc_id").alias("id"),
+        F.posexplode(bit_bands(F.col("simhash"), 4, 16)).alias("band", "key"),
         "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF))
-                    for b in range(4)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("src"),
-            F.col("b.id").alias("dst"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    cand, _ = band_join(banded, carry=["simhash"])
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.select("src", "dst", ham.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )

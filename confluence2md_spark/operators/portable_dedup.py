@@ -20,10 +20,11 @@ algorithmic downgrade (the winnowing precedent: operators/winnow.py).
 Scale shape (identical to the production variants' — this is the part
 that must survive 100 TB):
 - MinHash: per-doc signature is a map-side transform (no shuffle); the
-  only joins are the band equi-join on (band_idx, band_key) — candidate
-  volume bounded by bucket sizes, never all-pairs — and the verify join
-  of the candidate pairs back to per-doc shingle arrays (candidate-sized,
-  not corpus-sized). One groupBy on a 64-bit pair key for dedup.
+  only joins are the band equi-join on (band, key) (banding.band_join,
+  uncapped like the twins) — candidate volume bounded by bucket sizes,
+  never all-pairs — and the verify join of the candidate pairs back to
+  per-doc shingle arrays (candidate-sized, not corpus-sized). One groupBy
+  on a 64-bit pair key for dedup.
 - SimHash: the 60 affine bit-projections fan the distinct-token stream
   ×60 before the (doc_id, j) partial agg — that fan-out is the price of
   staying in portable integer SQL; at production scale the FNV numpy path
@@ -38,12 +39,11 @@ so the DuckDB twin is the spec.
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import FINGERPRINT_DUCK, FINGERPRINT_SPARK, MERSENNE31
+from .banding import band_join, bit_bands, permutations
 
 _MERSENNE = MERSENNE31
 
@@ -52,16 +52,6 @@ N_PERM = 32       # signature length
 N_BANDS = 8       # 8 bands x 4 rows
 SIM_BITS = 60     # 4 bands x 15 bits; bit 59 < 2^60 keeps BIGINT positive
 SIM_BANDS = 4
-
-
-def _perms(k: int, seed: int) -> list[tuple[int, int]]:
-    """Seeded affine constants (a, b), a in [1, M), b in [0, M) — inlined
-    into BOTH engines' arithmetic so they agree by construction."""
-    rng = random.Random(seed)
-    return [
-        (rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE))
-        for _ in range(k)
-    ]
 
 
 # ------------------------------------------------------ portable MinHash --
@@ -103,19 +93,17 @@ def minhash_portable_pairs(
             F.array_min(
                 F.transform(F.col("hs"), lambda h: F.pmod(h * a + b, F.lit(_MERSENNE)))
             )
-            for a, b in _perms(n_perm, seed)
+            for a, b in permutations(n_perm, seed)
         ]
     )
     # band key = the r raw minima joined as a string: portable, and join
     # equality on it is exactly equality of the r-tuple.
-    # r6 (ADVICE r5): band rows carry ONLY (doc_id, band_idx, band_key) —
-    # the shingle arrays no longer ride both sides of the banded self-join
-    # (previously corpus-size × bands array bytes through the exchange);
-    # they re-enter against the surviving (src, dst) pairs via two
+    # r6 (ADVICE r5): band rows carry ONLY (id, band, key) — the shingle
+    # arrays re-enter against the surviving (src, dst) pairs via two
     # candidate-sized join-backs, the same shape linking.py uses for
-    # word-ngram documents. Pair set and scores are unchanged.
+    # documents. Uncapped, like the DuckDB twin.
     signed = shingled.withColumn("sig", sig).select(
-        "doc_id",
+        F.col("doc_id").alias("id"),
         F.posexplode(
             F.array(
                 *[
@@ -123,29 +111,13 @@ def minhash_portable_pairs(
                     for b in range(bands)
                 ]
             )
-        ).alias("band_idx", "band_key"),
+        ).alias("band", "key"),
     )
-    a, b = signed.alias("a"), signed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
-        .join(
-            shingled.select(F.col("doc_id").alias("src"), F.col("hs").alias("ha")),
-            "src",
-        )
-        .join(
-            shingled.select(F.col("doc_id").alias("dst"), F.col("hs").alias("hb")),
-            "dst",
-        )
+    ids, _ = band_join(signed)
+    cand = ids.join(
+        shingled.select(F.col("doc_id").alias("src"), F.col("hs").alias("ha")), "src"
+    ).join(
+        shingled.select(F.col("doc_id").alias("dst"), F.col("hs").alias("hb")), "dst"
     )
     inter = F.size(F.array_intersect("ha", "hb")).cast("bigint")
     return (
@@ -188,7 +160,7 @@ def minhash_portable_sql_duck(
     hash_of = FINGERPRINT_DUCK.format(t="g")
     mins = ", ".join(
         f"list_min(list_transform(hs, h -> (h * {a} + {b}) % {_MERSENNE}))"
-        for a, b in _perms(n_perm, seed)
+        for a, b in permutations(n_perm, seed)
     )
     keys = ", ".join(
         f"array_to_string(list_slice(sig, {b * rows + 1}, {b * rows + rows}), ',')"
@@ -239,7 +211,7 @@ def simhash_portable_signatures(
     distinct-token vote sum is > 0 (ties -> 0, identically both engines)."""
     spark = docs.sparkSession
     perms = spark.createDataFrame(
-        [(j, a, b) for j, (a, b) in enumerate(_perms(n_bits, seed))],
+        [(j, a, b) for j, (a, b) in enumerate(permutations(n_bits, seed))],
         "j INT, a BIGINT, b BIGINT",
     )
     hash_of = FINGERPRINT_SPARK.format(t="tok")
@@ -283,39 +255,14 @@ def simhash_portable_pairs(
     width = SIM_BITS // SIM_BANDS
     banded = sig.select(
         F.col("doc_id").alias("id"),
+        F.posexplode(bit_bands(F.col("simhash"), SIM_BANDS, width)).alias("band", "key"),
         "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(
-                        F.lit((1 << width) - 1)
-                    )
-                    for b in range(SIM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("src"),
-            F.col("b.id").alias("dst"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .dropDuplicates(["src", "dst"])
+    cand, _ = band_join(banded, carry=["simhash"])
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return cand.select("src", "dst", ham.cast("bigint").alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
-    return cand.select(
-        "src",
-        "dst",
-        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("bigint").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def simhash_portable_sql_duck(
@@ -330,7 +277,7 @@ def simhash_portable_sql_duck(
     hash_of = FINGERPRINT_DUCK.format(t="tok")
     perm_rows = ", ".join(
         f"({j}, {a}::BIGINT, {b}::BIGINT)"
-        for j, (a, b) in enumerate(_perms(n_bits, seed))
+        for j, (a, b) in enumerate(permutations(n_bits, seed))
     )
     bands = ", ".join(
         f"(simhash >> {b * width}) & {(1 << width) - 1}" for b in range(SIM_BANDS)

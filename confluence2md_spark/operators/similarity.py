@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from .banding import band_join
+
 
 def dot_col(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -153,6 +155,43 @@ def auto_lsh_bits(n: int, target_bucket: int = 64) -> int:
     return max(4, min(16, math.ceil(math.log2(max(2, n / target_bucket)))))
 
 
+def _hyperplane_bands(
+    embeddings: DataFrame,
+    bits: int | None,
+    tables: int,
+    dim: int | None,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, int]:
+    """(id, band, key, v) rows, one per vector and hash table — `key` is
+    the vector's sign-pattern bucket in table `band` — and the bits per
+    table used. `dim=None` probes the actual embedding length (one row);
+    an explicit `dim` is asserted against the data. `bits=None` sizes the
+    tables from the corpus count (auto_lsh_bits)."""
+    if dim is None:
+        probe = embeddings.select(F.size(vec_col).alias("d")).first()
+        dim = 1 if probe is None else int(probe["d"])  # empty: any dim works
+    else:
+        n_bad = embeddings.filter(F.size(vec_col) != dim).limit(1).count()
+        assert n_bad == 0, (
+            f"lsh_ann_topk: explicit dim={dim} does not match the embedding "
+            f"column length — buckets would silently collapse to 0"
+        )
+    if bits is None:
+        bits = auto_lsh_bits(embeddings.count())
+    base = embeddings.repartition(
+        embeddings.sparkSession.sparkContext.defaultParallelism
+    ).select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+    planes = np.stack([_hyperplanes(dim, bits, seed + t) for t in range(tables)])
+    hashed = _lsh_buckets_df(base, planes).select(
+        "id", F.posexplode("buckets").alias("band", "key"), "v"
+    )
+    return hashed, bits
+
+
 def _lsh_candidates(
     embeddings: DataFrame,
     n_queries: int,
@@ -166,35 +205,14 @@ def _lsh_candidates(
 ) -> DataFrame:
     """(q, qv, neighbor, v) distinct candidate pairs — the index probe,
     factored out so tests can assert the candidate count is sublinear."""
-    if dim is None:
-        probe = embeddings.select(F.size(vec_col).alias("d")).first()
-        if probe is None:
-            dim = 1  # empty input; any plane dim yields an empty result
-        else:
-            dim = int(probe["d"])
-    else:
-        n_bad = embeddings.filter(F.size(vec_col) != dim).limit(1).count()
-        assert n_bad == 0, (
-            f"lsh_ann_topk: explicit dim={dim} does not match the embedding "
-            f"column length — buckets would silently collapse to 0"
-        )
-    if bits is None:
-        bits = auto_lsh_bits(embeddings.count())
-
-    base = embeddings.repartition(
-        embeddings.sparkSession.sparkContext.defaultParallelism
-    ).select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    planes = np.stack([_hyperplanes(dim, bits, seed + t) for t in range(tables)])
-    hashed = _lsh_buckets_df(base, planes).select(
-        "id", "v", F.posexplode("buckets").alias("table_idx", "bucket")
+    hashed, bits = _hyperplane_bands(
+        embeddings, bits, tables, dim, seed, id_col, vec_col
     )
     q = hashed.filter(F.col("id") < n_queries).select(
         F.col("id").alias("q"),
         F.col("v").alias("qv"),
-        F.col("table_idx").alias("qt"),
-        F.col("bucket").alias("qb"),
+        F.col("band").alias("qt"),
+        F.col("key").alias("qb"),
     )
     if multiprobe:
         # multi-probe: the query additionally probes every bucket within
@@ -218,8 +236,8 @@ def _lsh_candidates(
     return (
         hashed.join(
             broadcast(q),
-            (F.col("table_idx") == F.col("qt"))
-            & (F.col("bucket") == F.col("qb"))
+            (F.col("band") == F.col("qt"))
+            & (F.col("key") == F.col("qb"))
             & (F.col("id") != F.col("q")),
         )
         .select("q", "qv", F.col("id").alias("neighbor"), F.col("v"))
@@ -494,65 +512,34 @@ def embedding_near_dup_lsh(
     column).
 
     Shape: hyperplane-LSH bucketing (same auto-depth tables as lsh_ann_topk)
-    -> same-bucket self-join -> exact cosine verify. A pair at cosine 0.95
-    (theta ~18 deg) agrees per hyperplane with p ~0.9, so with bits=b it
-    shares a given table's bucket with p^b and at least one of `tables`
-    buckets with 1-(1-p^b)^tables — >= 0.98 for b<=8, t=8. Mega-buckets
-    (> max_bucket_size — e.g. a zero-vector pileup) are dropped from the
-    join and logged, the same discipline as the MinHash path; candidates
-    per vector stay ~tables * bucket_size at ANY corpus size.
+    -> same-bucket self-join (banding.band_join) -> exact cosine verify.
+    A pair at cosine 0.95 (theta ~18 deg) agrees per hyperplane with
+    p ~0.9, so with bits=b it shares a given table's bucket with p^b and
+    at least one of `tables` buckets with 1-(1-p^b)^tables — >= 0.98 for
+    b<=8, t=8. Mega-buckets (> max_bucket_size — e.g. a zero-vector
+    pileup) are dropped from the join and logged, the same cap as the
+    MinHash path; candidates per vector stay ~tables * bucket_size at ANY
+    corpus size.
 
     Bounded driver check: subset of the exact cosine>=threshold pair set +
     recall >= 0.9 (bounded_checks); the recall contract on clusterable data
     is pinned in pytest."""
     import logging
 
-    if bits is None:
-        bits = auto_lsh_bits(embeddings.count())
-    probe = embeddings.select(F.size(vec_col).alias("d")).first()
-    dim = 1 if probe is None else int(probe["d"])
-    base = embeddings.repartition(
-        embeddings.sparkSession.sparkContext.defaultParallelism
-    ).select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    hashed, _ = _hyperplane_bands(
+        embeddings, bits, tables, None, seed, id_col, vec_col
     )
-    planes = np.stack([_hyperplanes(dim, bits, seed + t) for t in range(tables)])
-    hashed = _lsh_buckets_df(base, planes).select(
-        "id", "v", F.posexplode("buckets").alias("table_idx", "bucket")
-    )
-    big = (
-        hashed.groupBy("table_idx", "bucket")
-        .count()
-        .filter(F.col("count") > max_bucket_size)
-        .select("table_idx", "bucket")
-    )
-    dropped = big.count()
-    if dropped:
+    cand, dropped = band_join(hashed, carry=["v"], max_bucket=max_bucket_size)
+    n_dropped = dropped.count()
+    if n_dropped:
         logging.getLogger(__name__).warning(
             "embedding_near_dup_lsh: dropping %d oversized buckets "
             "(> %d vectors) from the self-join — raise bits or dedup the "
             "degenerate vectors (e.g. all-zero embeddings) upstream",
-            dropped,
+            n_dropped,
             max_bucket_size,
         )
-        hashed = hashed.join(broadcast(big), ["table_idx", "bucket"], "left_anti")
-    a, b = hashed.alias("a"), hashed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("src"),
-            F.col("b.id").alias("dst"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    cos = F.round(cosine_col(F.col("va"), F.col("vb")), 6)
+    cos = F.round(cosine_col(F.col("v_a"), F.col("v_b")), 6)
     return cand.select("src", "dst", cos.alias("cosine")).filter(
         F.col("cosine") >= threshold
     )

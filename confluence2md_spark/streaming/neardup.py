@@ -1,13 +1,13 @@
 """Incremental MinHash/LSH near-dup candidate detection on a document
 stream — the streaming member of the near-dup family (the batch members
 live in operators/dedup.py + operators/linking.py and share every
-constant with this one: same shingle mode, same permutation seeds, same
-banding, same mega-bucket discipline).
+constant with this one: same word-n-gram shingles, same permutation
+seeds, same band keys, same mega-bucket discipline).
 
 Shape: the stream computes the SAME word-n-gram shingles and MinHash
-signature column expressions the batch path uses (pure JVM exprs — they
-run unchanged on a streaming DataFrame), explodes to (band_idx,
-band_hash) keys, and an applyInPandasWithState operator keyed on the
+signature the batch path computes, as column expressions (pure JVM exprs
+— they run unchanged on a streaming DataFrame), explodes to (band, key)
+rows, and an applyInPandasWithState operator keyed on the
 band bucket holds the bucket's members (doc_id + signature) in state.
 Each arriving document is compared against the bucket's existing members
 and emits (src, dst, est_jaccard_micros) candidate pairs immediately —
@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.banding import minhash_bands
 from confluence2md_spark.operators.linking import (
     minhash_signature_col,
     shingle_hashes_col,
@@ -58,26 +59,16 @@ def banded_signatures(
     k: int = 32,
     bands: int = 8,
     seed: int = 42,
-    mode: str = "word_ngrams",
 ) -> DataFrame:
-    """(id, band_idx, band_hash, sig) — the shared batch/stream banding
-    relation: identical constants to operators/linking.lsh_candidate_pairs,
-    so a batch run over the union of all drops lands every doc in the same
-    buckets the stream did."""
+    """(id, band, key, sig) — the shared batch/stream banding relation, in
+    `band_join`'s input shape: identical shingles, permutations and band
+    keys to operators/linking.lsh_candidate_pairs, so a batch run over the
+    union of all drops lands every doc in the same buckets the stream
+    did."""
     assert k % bands == 0, "k must be divisible by bands"
-    r = k // bands
-    sigd = docs.select(
-        F.col(id_col).alias("id"),
-        minhash_signature_col(
-            shingle_hashes_col(F.col(text_col), mode=mode), k=k, seed=seed
-        ).alias("sig"),
-    )
-    return sigd.select(
-        "id",
-        "sig",
-        F.posexplode(
-            F.array(*[F.xxhash64(F.slice("sig", i * r + 1, r)) for i in range(bands)])
-        ).alias("band_idx", "band_hash"),
+    sig = minhash_signature_col(shingle_hashes_col(F.col(text_col)), k=k, seed=seed)
+    return docs.select(F.col(id_col).alias("id"), sig.alias("sig")).select(
+        "id", F.posexplode(minhash_bands(F.col("sig"), bands)).alias("band", "key"), "sig"
     )
 
 
@@ -88,7 +79,6 @@ def streaming_minhash_candidates(
     k: int = 32,
     bands: int = 8,
     seed: int = 42,
-    mode: str = "word_ngrams",
     max_bucket_size: int = 200,
     min_est_micros: int = 0,
 ) -> DataFrame:
@@ -142,9 +132,9 @@ def streaming_minhash_candidates(
             )
 
     banded = banded_signatures(
-        docs, id_col=id_col, text_col=text_col, k=k, bands=bands, seed=seed, mode=mode
+        docs, id_col=id_col, text_col=text_col, k=k, bands=bands, seed=seed
     )
-    return banded.groupBy("band_idx", "band_hash").applyInPandasWithState(
+    return banded.groupBy("band", "key").applyInPandasWithState(
         _fold,
         outputStructType=CANDIDATE_SCHEMA,
         stateStructType=_STATE_SCHEMA,

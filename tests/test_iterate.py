@@ -1,6 +1,8 @@
 """plans/iterate.fixpoint and the graph operators built on it: no cached
 or checkpointed blocks outlive a call except the result's own checkpoint,
-on the converging, fixed-round and raising paths alike.
+on the converging, fixed-round and raising paths alike. The near-dup
+family (the five band_join callers and containment_pairs) is held to the
+same rule.
 
 Leftovers are read from the RDD storage info (RDDs created during the
 call that still hold blocks), not from getPersistentRDDs().size(): that
@@ -20,6 +22,11 @@ from confluence2md_spark.operators.communities import (
     modularity_micros,
 )
 from confluence2md_spark.operators.components import connected_components
+from confluence2md_spark.operators.containment import containment_pairs
+from confluence2md_spark.operators.dedup import (
+    minhash_near_dup_pairs,
+    simhash_near_dup_pairs,
+)
 from confluence2md_spark.operators.graph import (
     hits_micros,
     pagerank_micros,
@@ -27,7 +34,15 @@ from confluence2md_spark.operators.graph import (
     weighted_pagerank_micros,
 )
 from confluence2md_spark.operators.kcore import kcore
+from confluence2md_spark.operators.portable_dedup import (
+    minhash_portable_pairs,
+    simhash_portable_pairs,
+)
 from confluence2md_spark.operators.scc import scc
+from confluence2md_spark.operators.similarity import (
+    embedding_near_dup_lsh,
+    planted_cluster_vectors,
+)
 from confluence2md_spark.operators.truss import ktruss
 from confluence2md_spark.plans.iterate import fixpoint
 
@@ -81,10 +96,12 @@ def _marker(spark) -> int:
 
 def _left_behind(spark, marker: int, result=None) -> list[int]:
     """Ids of RDDs created after `marker` that still hold blocks, not
-    counting the result's own checkpoint."""
+    counting the result's own checkpoint (if the result is one)."""
     keep = None
     if result is not None:
-        keep = result._jdf.queryExecution().analyzed().rdd().id()
+        plan = result._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            keep = plan.rdd().id()
     return [
         info.id()
         for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -97,6 +114,28 @@ def test_operator_leaves_only_its_result(spark, graph, op):
     marker = _marker(spark)
     out = _OPS[op](graph)
     assert out.count() > 0
+    assert _left_behind(spark, marker, out) == []
+
+
+_NEAR_DUP = {
+    "minhash": lambda docs, emb: minhash_near_dup_pairs(docs),
+    "simhash": lambda docs, emb: simhash_near_dup_pairs(docs),
+    "minhash_portable": lambda docs, emb: minhash_portable_pairs(docs),
+    "simhash_portable": lambda docs, emb: simhash_portable_pairs(docs),
+    "embedding_lsh": lambda docs, emb: embedding_near_dup_lsh(
+        planted_cluster_vectors(emb), threshold=0.85, tables=16
+    ),
+    "containment": lambda docs, emb: containment_pairs(docs),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NEAR_DUP))
+def test_near_dup_operator_leaves_only_its_result(spark, sf_dir, op):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    marker = _marker(spark)
+    out = _NEAR_DUP[op](docs, emb)
+    assert len(out.collect()) > 0
     assert _left_behind(spark, marker, out) == []
 
 

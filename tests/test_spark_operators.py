@@ -13,7 +13,10 @@ from confluence2md_spark.operators.dedup import (
     simhash_near_dup_pairs,
     simhash_signatures,
 )
-from confluence2md_spark.operators.linking import lsh_candidate_pairs
+from confluence2md_spark.operators.linking import (
+    lsh_candidate_pairs,
+    token_block_pairs,
+)
 from confluence2md_spark.operators.multimodal import (
     attach_binary_payload,
     decode_image_meta,
@@ -25,18 +28,17 @@ from confluence2md_spark.plans.skew import hot_keys, salted_repartition
 # ------------------------------------------------------------- linking ----
 
 def test_lsh_finds_exact_and_near_dups(spark):
+    base = "the quick brown fox jumps over the lazy dog while a slow red cat"
     rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
-        (3, "the quick brown fox jumped over the lazy dog"),  # near dup
-        (4, "completely different text about spark pipelines"),
+        (1, base + " sleeps"),
+        (2, base + " sleeps"),  # exact dup of 1
+        (3, base + " naps"),  # near dup: the last of 13 word 3-grams differs
+        (4, "completely different text about spark pipelines and joins"),
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "title"])
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
     pairs = {
         (r["src"], r["dst"]): r["jaccard"]
-        for r in lsh_candidate_pairs(
-            df, id_col="doc_id", text_col="title", threshold=0.5, mode="chars"
-        ).collect()
+        for r in lsh_candidate_pairs(df, threshold=0.5).collect()
     }
     assert pairs[(1, 2)] == 1.0
     assert (1, 3) in pairs and pairs[(1, 3)] >= 0.5
@@ -44,13 +46,15 @@ def test_lsh_finds_exact_and_near_dups(spark):
 
 
 def test_word_mode_requires_token_identity(spark):
+    """Titles pair on token sets: 'Page 1' vs 'Page 10' share one token of
+    three, so only the identical titles link."""
     df = spark.createDataFrame(
         [(1, "Page 1"), (2, "Page 10"), (3, "Page 1")], ["doc_id", "title"]
     )
     pairs = {
         (r["src"], r["dst"])
-        for r in lsh_candidate_pairs(
-            df, id_col="doc_id", text_col="title", threshold=0.8, mode="words"
+        for r in token_block_pairs(
+            df, id_col="doc_id", text_col="title", threshold=0.8
         ).collect()
     }
     assert pairs == {(1, 3)}
@@ -80,26 +84,32 @@ def test_cc_chain_and_cycle_and_isolated(spark):
     assert comp[20] == comp[21] == 20
 
 
-def test_lsh_exact_fallback_survives_dropped_buckets(spark):
-    """ADVICE r1: with max_bucket_size=0 every band bucket is dropped, yet
-    identical titles must still pair via the exact-hash star fallback."""
-    from confluence2md_spark.operators.linking import lsh_candidate_pairs
-
+def test_token_block_exact_fallback_survives_df_cap(spark):
+    """ADVICE r1: with max_token_df=0 every token is dropped from the
+    index, yet identical titles must still pair via the exact-hash star
+    fallback."""
     rows = [(i, f"Page {i}") for i in range(20)] + [(100, "Page 3"), (101, "Page 3")]
     df = spark.createDataFrame(rows, ["doc_id", "title"])
-    pairs = lsh_candidate_pairs(
-        df, k=16, bands=4, mode="words", max_bucket_size=0, num_partitions=4
-    ).collect()
-    got = {(r["src"], r["dst"]) for r in pairs}
+    pairs = token_block_pairs(df, max_token_df=0, num_partitions=4).collect()
     # star edges: min id 3 links to both 100 and 101 (not the 100-101 pair)
-    assert (3, 100) in got and (3, 101) in got
+    assert {(r["src"], r["dst"]) for r in pairs} == {(3, 100), (3, 101)}
     assert all(r["jaccard"] == 1.0 for r in pairs)
-    # and without the fallback the same input finds nothing
-    none = lsh_candidate_pairs(
-        df, k=16, bands=4, mode="words", max_bucket_size=0,
-        num_partitions=4, exact_fallback=False,
-    ).count()
-    assert none == 0
+
+
+def test_lsh_exact_fallback_survives_dropped_buckets(spark):
+    """With max_bucket_size=0 every band bucket is dropped, yet identical
+    documents must still pair via the exact-hash star fallback."""
+    rows = [(i, f"alpha beta gamma delta doc {i}") for i in range(20)] + [
+        (100, "alpha beta gamma delta doc 3"),
+        (101, "alpha beta gamma delta doc 3"),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    pairs = lsh_candidate_pairs(
+        df, k=16, bands=4, max_bucket_size=0, num_partitions=4
+    ).collect()
+    # star edges: min id 3 links to both 100 and 101 (not the 100-101 pair)
+    assert {(r["src"], r["dst"]) for r in pairs} == {(3, 100), (3, 101)}
+    assert all(r["jaccard"] == 1.0 for r in pairs)
 
 
 def test_output_name_plus_only_in_basename(spark):
@@ -375,11 +385,11 @@ def test_numpy_minhash_signatures_match_jvm(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = docs.select(
         F.col("doc_id").alias("id"),
-        shingle_hashes_col(F.col("text"), mode="word_ngrams").alias("sh"),
+        shingle_hashes_col(F.col("text")).alias("sh"),
     )
     adv = spark.createDataFrame(
         [(100001, ""), (100002, "one two three four five")], ["id", "t"]
-    ).select("id", shingle_hashes_col(F.col("t"), mode="word_ngrams").alias("sh"))
+    ).select("id", shingle_hashes_col(F.col("t")).alias("sh"))
     for frame in (sh, adv):
         jvm = {
             r["id"]: list(r["sig"])
@@ -394,6 +404,36 @@ def test_numpy_minhash_signatures_match_jvm(spark, sf_dir):
             .collect()
         }
         assert jvm == np_ and len(jvm) > 0
+
+
+def test_numpy_minhash_kernel_memory_is_bounded():
+    """The batch kernel computes one permutation at a time into a reused
+    buffer: on 200 docs x 5,000 shingles its peak allocation stays under
+    4x the input bytes (a (total_shingles x k) matrix was ~64x), and it
+    agrees with the all-permutations-at-once form on the first 20 docs."""
+    import tracemalloc
+
+    from confluence2md_spark.operators.banding import permutations
+    from confluence2md_spark.operators.linking import _MERSENNE, minhash_signatures
+
+    rng = np.random.default_rng(5)
+    shs = [rng.integers(-(2**63), 2**63 - 1, 5_000, dtype=np.int64) for _ in range(200)]
+    perms = np.asarray(permutations(32, 42), dtype=np.int64)
+    a, b = perms[:, 0], perms[:, 1]
+    input_bytes = sum(x.nbytes for x in shs)
+
+    tracemalloc.start()
+    try:
+        sig = minhash_signatures(shs, a, b)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 * input_bytes, (peak, input_bytes)
+
+    flat = np.concatenate(shs[:20]) % _MERSENNE
+    starts = np.arange(0, len(flat), 5_000)
+    ref = np.minimum.reduceat((flat[:, None] * a + b) % _MERSENNE, starts, axis=0)
+    assert np.array_equal(sig[:20], ref)
 
 
 def test_window_top_order_min_struct_matches_row_number(spark):

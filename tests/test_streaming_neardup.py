@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.banding import band_join
 from confluence2md_spark.streaming.neardup import (
     banded_signatures,
     run_streaming_minhash,
@@ -17,15 +18,8 @@ def _batch_candidate_pairs(docs):
     """All unordered id pairs sharing >= 1 band bucket — the batch
     reference for what the stream must emit when no bucket exceeds the
     cap."""
-    b = banded_signatures(docs).select("band_idx", "band_hash", "id")
-    left = b.select("band_idx", "band_hash", F.col("id").alias("src"))
-    right = b.select("band_idx", "band_hash", F.col("id").alias("dst"))
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    pairs, _ = band_join(banded_signatures(docs))
+    return pairs
 
 
 def test_streaming_minhash_matches_batch_candidates(spark, sf_dir, tmp_path):
@@ -39,7 +33,7 @@ def test_streaming_minhash_matches_batch_candidates(spark, sf_dir, tmp_path):
     # this corpus (otherwise batch and stream legitimately diverge)
     max_bucket = (
         banded_signatures(docs)
-        .groupBy("band_idx", "band_hash")
+        .groupBy("band", "key")
         .count()
         .agg(F.max("count"))
         .collect()[0][0]
