@@ -60,6 +60,9 @@ def cmd_queries(sf_dir: str, sweeps: int, names: list[str]) -> None:
     best: dict[str, float] = {}
     for sweep in range(sweeps):
         for name in names:
+            # a relation an earlier query left cached would let this one
+            # skip its own work
+            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(name)
             t0 = time.monotonic()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
