@@ -24,7 +24,7 @@ import math
 from collections.abc import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from confluence2md_spark.operators.canon import (
@@ -216,6 +216,7 @@ from confluence2md_spark.sources.corpus import (
     is_page_sql,
     synth_raw_files,
 )
+from confluence2md_spark.plans.iterate import release
 
 # --------------------------------------------------------------- caching --
 # The driver runs each query separately in ONE SparkSession; the KG queries
@@ -270,9 +271,16 @@ def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _memo(
-        ("cmap", sf_dir), lambda: build_canonical_map(_pages(spark, sf_dir))
+    scratch: list[DataFrame] = []
+    cmap = _memo(
+        ("cmap", sf_dir),
+        lambda: build_canonical_map(_pages(spark, sf_dir), scratch=scratch),
     )
+    # the CC labels under the map (a checkpoint past the driver cap) are
+    # dead once the memo's own checkpoint holds the map
+    for df in scratch:
+        release(df)
+    return cmap
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,11 +294,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _total_order(df: DataFrame, *keys: str) -> DataFrame:
+def _total_order(df: DataFrame, *keys: str | Column) -> DataFrame:
     """The one ordered-output boundary: `df` in the total order of `keys`,
-    the keys of its oracle's ORDER BY. The driver hashes a contract
-    result's rows in arrival order, so the order is the entry's concern
-    and operators return unordered, partitioned output.
+    the keys of its oracle's ORDER BY (`F.desc(...)` for a DESC key). The
+    driver hashes a contract result's rows in arrival order, so the order
+    is the entry's concern: operators return unordered, partitioned
+    output, and every whole-result sort of a contract query is this one.
+    A top-k `orderBy(...).limit(k)` is not an order-restore and stays.
 
     One sorted partition, not orderBy: orderBy's range partitioner runs a
     sampling job that re-executes the upstream plan (dedup_ngram_jaccard
@@ -311,7 +321,7 @@ def _kg_detect_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         not_mime.unionByName(mime)
         .groupBy("status")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("status")
+        .transform(_total_order, "status")
     )
 
 
@@ -319,7 +329,7 @@ def _kg_sha256(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _raw(spark, sf_dir)
         .select("doc_id", F.sha2("content", 256).alias("content_sha256"))
-        .orderBy("doc_id")
+        .transform(_total_order, "doc_id")
     )
 
 
@@ -328,12 +338,12 @@ def _kg_output_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         rf.filter(F.col("path").endswith(".doc"))
         .select("doc_id", output_name_col(F.col("path")).alias("out_path"))
-        .orderBy("doc_id")
+        .transform(_total_order, "doc_id")
     )
 
 
 def _kg_pages_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ok_pages(spark, sf_dir).select("doc_id", "title").orderBy("doc_id")
+    return _total_order(_ok_pages(spark, sf_dir).select("doc_id", "title"), "doc_id")
 
 
 def _kg_links_to(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,7 +351,7 @@ def _kg_links_to(spark: SparkSession, sf_dir: str) -> DataFrame:
         _triples(spark, sf_dir)
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
-        .orderBy("subj", "obj")
+        .transform(_total_order, "subj", "obj")
     )
 
 
@@ -349,7 +359,7 @@ def _kg_contains_heading(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         extract_heading_triples(_ok_pages(spark, sf_dir))
         .select("subj", "obj", "level", "section_order")
-        .orderBy("subj", "section_order")
+        .transform(_total_order, "subj", "section_order")
     )
 
 
@@ -358,7 +368,7 @@ def _kg_authored_by(spark: SparkSession, sf_dir: str) -> DataFrame:
         _triples(spark, sf_dir)
         .filter(F.col("pred") == "authored_by")
         .select("subj", "obj")
-        .orderBy("subj", "obj")
+        .transform(_total_order, "subj", "obj")
     )
 
 
@@ -367,7 +377,7 @@ def _kg_has_attachment(spark: SparkSession, sf_dir: str) -> DataFrame:
         _triples(spark, sf_dir)
         .filter(F.col("pred") == "has_attachment")
         .select("subj", "obj")
-        .orderBy("subj", "obj")
+        .transform(_total_order, "subj", "obj")
     )
 
 
@@ -376,12 +386,12 @@ def _kg_triples_by_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
         _triples(spark, sf_dir)
         .groupBy("pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("pred")
+        .transform(_total_order, "pred")
     )
 
 
 def _kg_canon_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cmap(spark, sf_dir).select("doc_id", "canon_id").orderBy("doc_id")
+    return _total_order(_cmap(spark, sf_dir).select("doc_id", "canon_id"), "doc_id")
 
 
 def _kg_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,7 +405,7 @@ def _kg_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("sz"))
         .groupBy("sz")
         .agg(F.count(F.lit(1)).alias("n_components"))
-        .orderBy("sz")
+        .transform(_total_order, "sz")
     )
 
 
@@ -410,7 +420,7 @@ def _kg_nodes_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
             "canonical_name",
             F.size("aliases").cast("bigint").alias("n_aliases"),
         )
-        .orderBy("node_id")
+        .transform(_total_order, "node_id")
     )
 
 
@@ -419,7 +429,7 @@ def _kg_edges_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         _edges(spark, sf_dir)
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj", "n_sources")
-        .orderBy("subj", "obj")
+        .transform(_total_order, "subj", "obj")
     )
 
 
@@ -466,7 +476,7 @@ def _kg_reexport_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta = in_s
     merged = reexport_merge_delta(old, delta, subjects)
-    return merged.select("subj", "obj", "n_sources").orderBy("subj", "obj")
+    return _total_order(merged.select("subj", "obj", "n_sources"), "subj", "obj")
 
 
 def _kg_top_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,7 +560,7 @@ def _kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return label_propagation(links, iters=4).orderBy("page")
+    return label_propagation(links, iters=4).transform(_total_order, "page")
 
 
 def _kg_community_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,7 +573,11 @@ def _kg_community_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return community_pagerank_rollup(links, iters_lpa=4, iters_pr=5)
+    return _total_order(
+        community_pagerank_rollup(links, iters_lpa=4, iters_pr=5),
+        F.desc("rank_mass_micros"),
+        "community",
+    )
 
 
 def _kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,7 +589,7 @@ def _kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return modularity_micros(links, iters=4)
+    return _total_order(modularity_micros(links, iters=4), "community")
 
 
 def _kg_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,7 +608,7 @@ def _kg_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = nodes.filter(F.expr(_PPR_SEED_PREDICATE))
-    return seed_distance(links, seeds, iters=6).orderBy("page")
+    return seed_distance(links, seeds, iters=6).transform(_total_order, "page")
 
 
 def _kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,7 +620,7 @@ def _kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return triangle_participation(links)
+    return _total_order(triangle_participation(links), F.desc("n_tri"), "node")
 
 
 def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,7 +634,9 @@ def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return kcore(links, k=3, max_rounds=12)
+    return _total_order(
+        kcore(links, k=3, max_rounds=12), F.desc("core_degree"), "node"
+    )
 
 
 def _kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,7 +650,9 @@ def _kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return ktruss(links, k=3, max_rounds=12)
+    return _total_order(
+        ktruss(links, k=3, max_rounds=12), F.desc("support"), "a", "b"
+    )
 
 
 def _kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -649,7 +667,7 @@ def _kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pred") == "links_to")
         .select("subj", "obj")
     )
-    return scc(links)
+    return _total_order(scc(links), "page")
 
 
 def _kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,7 +686,11 @@ def _kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = nodes.filter(F.expr(_PPR_SEED_PREDICATE))
-    return betweenness_micros(links, seeds, max_depth=12)
+    return _total_order(
+        betweenness_micros(links, seeds, max_depth=12),
+        F.desc("betweenness_micros"),
+        "page",
+    )
 
 
 def _kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,7 +722,7 @@ def _kg_reciprocal_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.join(rev, ["subj", "obj"], "semi")
         .filter(F.col("subj") < F.col("obj"))
-        .orderBy("subj", "obj")
+        .transform(_total_order, "subj", "obj")
     )
 
 
@@ -722,7 +744,7 @@ def _kg_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         hist("subj", "out")
         .unionByName(hist("obj", "in"))
-        .orderBy("direction", "degree")
+        .transform(_total_order, "direction", "degree")
     )
 
 
@@ -764,7 +786,7 @@ def _kg_unresolved_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     page_keys = _ok_pages(spark, sf_dir).select(
         F.concat(F.lit("page:"), F.col("doc_id").cast("string")).alias("obj")
     )
-    return objs.join(page_keys, "obj", "left_anti").orderBy("obj")
+    return objs.join(page_keys, "obj", "left_anti").transform(_total_order, "obj")
 
 
 def _kg_repo_skew_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,7 +794,7 @@ def _kg_repo_skew_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         _raw(spark, sf_dir)
         .groupBy("repo")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("repo")
+        .transform(_total_order, "repo")
     )
 
 
@@ -794,7 +816,7 @@ def _kg_export_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         ts.alias("export_ts"),
         F.year(ts).alias("export_year"),
-    ).orderBy("doc_id")
+    ).transform(_total_order, "doc_id")
 
 
 def _parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -814,7 +836,7 @@ def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return extract_mentions(_pages(spark, sf_dir)).select(
         "doc_id", "kind", "pos", "surface", "target_raw"
-    ).orderBy("doc_id", "kind", "pos")
+    ).transform(_total_order, "doc_id", "kind", "pos")
 
 
 def _kg_mention_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,7 +845,7 @@ def _kg_mention_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = extract_mentions(_pages(spark, sf_dir))
     return resolve_mentions(
         m, _pages(spark, sf_dir), _cmap(spark, sf_dir)
-    ).orderBy("doc_id", "pos")
+    ).transform(_total_order, "doc_id", "pos")
 
 
 def _kg_mime_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,7 +861,7 @@ def _kg_mime_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "content_type_hdr"
         ),
         "status",
-    ).orderBy("doc_id", "part_index")
+    ).transform(_total_order, "doc_id", "part_index")
 
 
 def _kg_html_part_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -873,7 +895,7 @@ def _q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact integer micros (sum*1e6 div count) instead of round(avg, 6):
         # integer division is bit-identical across engines, float round is not
         .withColumn("avg_qty_micros", F.expr("sum_qty * 1000000 div count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(_total_order, "l_returnflag", "l_linestatus")
     )
 
 
@@ -947,7 +969,7 @@ def _q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("rc").alias("revenue_cents"),
             F.sum("ni").alias("n_items"),
         )
-        .orderBy("r_name", "n_name")
+        .transform(_total_order, "r_name", "n_name")
     )
 
 
@@ -975,7 +997,7 @@ def _customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(urgent, cust.c_custkey == urgent.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
+        .transform(_total_order, "c_custkey")
     )
 
 
@@ -985,7 +1007,7 @@ def _parts_in_lineitem_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         part.join(li, part.p_partkey == li.l_partkey, "left_semi")
         .select("p_partkey", "p_name")
-        .orderBy("p_partkey")
+        .transform(_total_order, "p_partkey")
     )
 
 
@@ -1015,7 +1037,7 @@ def _window_top_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("s.k").alias("o_orderkey"),
             _CENTS(-F.col("s.np")).alias("top_price_cents"),
         )
-        .orderBy("o_custkey")
+        .transform(_total_order, "o_custkey")
     )
 
 
@@ -1033,7 +1055,7 @@ def _window_running_customer_totals(spark: SparkSession, sf_dir: str) -> DataFra
             "running_cents"
         ),
         F.lag("price_cents", 1).over(w).alias("prev_cents"),
-    ).orderBy("o_custkey", "o_orderkey")
+    ).transform(_total_order, "o_custkey", "o_orderkey")
 
 
 def _rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1050,7 +1072,7 @@ def _rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_qty",
         )
-        .orderBy("returnflag", "linestatus")
+        .transform(_total_order, "returnflag", "linestatus")
     )
 
 
@@ -1070,7 +1092,7 @@ def _cube_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_qty",
         )
-        .orderBy("returnflag", "linestatus")
+        .transform(_total_order, "returnflag", "linestatus")
     )
 
 
@@ -1113,7 +1135,7 @@ def _stats_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sum_cents",
         F.floor(var).cast("bigint").alias("var_cents2_floor"),
-    ).orderBy("returnflag")
+    ).transform(_total_order, "returnflag")
 
 
 def _setops_fulfilled_vs_open(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1123,7 +1145,7 @@ def _setops_fulfilled_vs_open(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         all_cust.exceptAll(f_cust)
         .select(F.col("o_custkey").alias("custkey"))
-        .orderBy("custkey")
+        .transform(_total_order, "custkey")
     )
 
 
@@ -1135,7 +1157,7 @@ def _distinct_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .orderBy("o_orderpriority")
+        .transform(_total_order, "o_orderpriority")
     )
 
 
@@ -1159,7 +1181,7 @@ def _approx_distinct_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return hll_distinct_portable(
         _t(spark, sf_dir, "orders"), "o_custkey", ["o_orderpriority"]
-    ).orderBy("o_orderpriority")
+    ).transform(_total_order, "o_orderpriority")
 
 
 def _events_quantiles_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,7 +1227,7 @@ def _events_quantiles_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             pick(0.75).alias("p75"),
             F.max("n").alias("n_sample"),
         )
-        .orderBy("event_type")
+        .transform(_total_order, "event_type")
     )
 
 
@@ -1220,7 +1242,7 @@ def _events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("sum_value_milli"),
         )
-        .orderBy("hour", "event_type")
+        .transform(_total_order, "hour", "event_type")
     )
 
 
@@ -1230,7 +1252,7 @@ def _events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
-        .orderBy("window_start")
+        .transform(_total_order, "window_start")
     )
 
 
@@ -1261,7 +1283,7 @@ def _events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_events").alias("n_events"),
             F.max("n_events").alias("max_session_events"),
         )
-        .orderBy("user_id")
+        .transform(_total_order, "user_id")
     )
 
 
@@ -1271,7 +1293,7 @@ def _events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("event_type")
         .agg(F.sum(k).alias("sum_k"), F.count(F.lit(1)).alias("n"))
-        .orderBy("event_type")
+        .transform(_total_order, "event_type")
     )
 
 
@@ -1304,7 +1326,7 @@ def _events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             pick(0.75).alias("p75"),
             F.max("n").alias("n"),
         )
-        .orderBy("event_type")
+        .transform(_total_order, "event_type")
     )
 
 
@@ -1327,7 +1349,7 @@ def _events_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q")[2].alias("p75"),
             "n",
         )
-        .orderBy("event_type")
+        .transform(_total_order, "event_type")
     )
 
 
@@ -1373,7 +1395,7 @@ def _events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     return spark.createDataFrame(
         rows, "stage STRING, n_users BIGINT, conversion_micros BIGINT"
-    ).orderBy("stage")
+    ).transform(_total_order, "stage")
 
 
 def _events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1411,7 +1433,7 @@ def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup_survivors(_t(spark, sf_dir, "documents"))
+    return _total_order(exact_dedup_survivors(_t(spark, sf_dir, "documents")), "lang")
 
 
 def _dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1489,14 +1511,15 @@ def _embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-cos first; the bounded check audits the drop ledger and the
     kept-set soundness against the raw vectors (99/500 dropped at
     sf0.01 on the planted fixture)."""
-    return semantic_dedup(
-        _planted(spark, sf_dir), n_centroids=16, threshold=0.85
+    return _total_order(
+        semantic_dedup(_planted(spark, sf_dir), n_centroids=16, threshold=0.85),
+        "vec_id",
     )
 
 
 def _ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return brute_force_topk(_t(spark, sf_dir, "embeddings"), n_queries=20, k=5).orderBy(
-        "q", "rank"
+    return _total_order(
+        brute_force_topk(_t(spark, sf_dir, "embeddings"), n_queries=20, k=5), "q", "rank"
     )
 
 
@@ -1519,7 +1542,7 @@ def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits=None,
         tables=12,
         multiprobe=1,
-    ).orderBy("q", "rank")
+    ).transform(_total_order, "q", "rank")
 
 
 def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1535,7 +1558,7 @@ def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted fixture."""
     return ivf_topk(
         _planted(spark, sf_dir), n_queries=20, k=5, n_centroids=32, n_probe=6
-    ).orderBy("q", "rank")
+    ).transform(_total_order, "q", "rank")
 
 
 def _text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1545,13 +1568,15 @@ def _text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document TF-IDF keywords (functions/tfidf.py): top-3 tokens
     per doc by exact-integer tf·floor-ln-micros-idf, hash-exact twin."""
-    return tfidf_keywords(_t(spark, sf_dir, "documents"), k=3)
+    return _total_order(
+        tfidf_keywords(_t(spark, sf_dir, "documents"), k=3), "doc_id", "rank"
+    )
 
 
 def _text_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM surprisal per document (functions/tfidf.py) — the
     integer-exact perplexity-filter signal, hash-exact twin."""
-    return unigram_surprisal(_t(spark, sf_dir, "documents"))
+    return _total_order(unigram_surprisal(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 def _text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1559,7 +1584,7 @@ def _text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of the perplexity-filter signal (catches unnatural token ORDER
     that text_surprisal's unigram model cannot); floor-ln-micros parity,
     hash-exact twin."""
-    return bigram_surprisal(_t(spark, sf_dir, "documents"))
+    return _total_order(bigram_surprisal(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 def _text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,7 +1612,9 @@ def _text_hashed_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, tf) rows with the engine-portable token hash, exact twin;
     the ANN-bridge pytest assembles the dense vectors and feeds cosine
     top-k."""
-    return hashed_tf(_t(spark, sf_dir, "documents"))
+    return _total_order(
+        hashed_tf(_t(spark, sf_dir, "documents")), "doc_id", "bucket"
+    )
 
 
 def _text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1597,7 +1624,7 @@ def _text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style word-level repetition signals (operators/repetition.py):
     exact-integer micros; default caps split sf0.01 401 keep / 99 drop."""
-    return repetition_signals(_t(spark, sf_dir, "documents"))
+    return _total_order(repetition_signals(_t(spark, sf_dir, "documents")), "doc_id")
 
 
 def _text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1610,7 +1637,7 @@ def _text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(synthetic_pii_expr_sql()).alias("text")
     )
-    return pii_signals(docs)
+    return _total_order(pii_signals(docs), "doc_id")
 
 
 def _text_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1622,7 +1649,7 @@ def _text_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(synthetic_url_expr_sql()).alias("text")
     )
-    return url_domain_signals(docs)
+    return _total_order(url_domain_signals(docs), "domain")
 
 
 def _text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,7 +1668,7 @@ def _text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(synthetic_paragraph_expr_sql()).alias("text")
     )
-    return paragraph_dedup(docs)
+    return _total_order(paragraph_dedup(docs), "doc_id")
 
 
 def _text_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1663,7 +1690,9 @@ def _text_substr_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes the doc_b-side copy of every maximal duplicated span found by
     text_substr_spans, merging overlapping intervals; rebuilt text pinned
     by sha256. 24 affected docs / 1254 tokens removed at sf0.01."""
-    return remove_duplicated_spans(_t(spark, sf_dir, "documents"))
+    return _total_order(
+        remove_duplicated_spans(_t(spark, sf_dir, "documents")), "doc_id"
+    )
 
 
 def _text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1699,7 +1728,7 @@ def _nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("label"),
     )
-    return nb_quality_scores(docs, labels)
+    return _total_order(nb_quality_scores(docs, labels), "doc_id")
 
 
 def _nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1717,7 +1746,7 @@ def _nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("label"),
     )
-    return nb_quality_calibration(docs, labels)
+    return _total_order(nb_quality_calibration(docs, labels), "bin")
 
 
 def _corpus_select_top(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1746,7 +1775,7 @@ def _corpus_select_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["neg_margin", "doc_id"],
         keep_micros=300_000,
     )
-    return sel.select("doc_id", "margin", "rn").orderBy("doc_id")
+    return sel.select("doc_id", "margin", "rn").transform(_total_order, "doc_id")
 
 
 def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1759,7 +1788,7 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_cluster_census(_t(spark, sf_dir, "documents"))
+    return _total_order(ngram_cluster_census(_t(spark, sf_dir, "documents")), "size")
 
 
 def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1837,7 +1866,10 @@ def _curation_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language sqrt-temperature (T=2) mixture weights + token budgets
     (operators/mixing.py) — the multilingual sampling step; exact-integer
     isqrt keeps both engines bit-identical."""
-    return mixture_weights(_t(spark, sf_dir, "documents"), budget_tokens=1_000_000)
+    return _total_order(
+        mixture_weights(_t(spark, sf_dir, "documents"), budget_tokens=1_000_000),
+        "domain",
+    )
 
 
 def _curation_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1845,7 +1877,9 @@ def _curation_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable sha256 24-bit keep key (operators/mixing.py mixture_sample):
     the FineWeb/Pile-style 'hit each domain's token budget' step, exact
     twin, 203 kept docs at sf0.01 under a 10k-token budget."""
-    return mixture_sample(_t(spark, sf_dir, "documents"), budget_tokens=10_000)
+    return _total_order(
+        mixture_sample(_t(spark, sf_dir, "documents"), budget_tokens=10_000), "doc_id"
+    )
 
 
 def _curation_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1905,7 +1939,7 @@ def _corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs_kept"),
             F.sum("n_tokens").alias("n_tokens_total"),
         )
-        .orderBy("lang")
+        .transform(_total_order, "lang")
     )
 
 
@@ -1996,7 +2030,7 @@ def _corpus_final_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("n_tokens_total"),
         )
-        .orderBy("verdict")
+        .transform(_total_order, "verdict")
     )
 
 
@@ -2018,7 +2052,7 @@ def _mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sample_video_frames(media, n_frames=4)
         .select("doc_id", "frame_idx", "ts_seconds", "frame_sha256")
-        .orderBy("doc_id", "frame_idx")
+        .transform(_total_order, "doc_id", "frame_idx")
     )
 
 
@@ -2042,7 +2076,7 @@ def _mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("val").cast("double") * F.lit(65535.0))
         .cast("bigint")
         .alias("val_u16"),
-    ).orderBy("doc_id", "dim_idx")
+    ).transform(_total_order, "doc_id", "dim_idx")
 
 
 def _mm_image_header(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2072,7 +2106,7 @@ def _mm_image_header(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % 2 == 0, png_hex).otherwise(jpeg_hex)
         ).alias("payload"),
     )
-    return decode_image_meta(media).orderBy("doc_id")
+    return decode_image_meta(media).transform(_total_order, "doc_id")
 
 
 def _le_hex(col, nbytes: int):
@@ -2138,7 +2172,7 @@ def _mm_audio_header(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % 2 == 0, wav_hex).otherwise(flac_hex)
         ).alias("payload"),
     )
-    return decode_audio_meta(media).orderBy("doc_id")
+    return decode_audio_meta(media).transform(_total_order, "doc_id")
 
 
 # ----------------------------------------------------------------- entry --

@@ -6,12 +6,13 @@ Spark-first KG pipeline:
 
     raw_files (repo, path, commit, lang, content)
       → detect Confluence MIME          (vectorized predicate)
+      → salted repartition of hot repos (only when the skew census asks)
       → MIME split + QP/base64 decode   (mapInPandas, Arrow batches)
       → HTML → Markdown normalization   (pandas UDF; pure-Python pandoc-subset)
       → triple extraction               (regexp_extract_all / explode — JVM side)
       → entity linking (MinHash/LSH)    (DataFrame-native band self-join)
       → canonicalization (connected components via iterative joins)
-      → nodes/edges materialized with salted repartitioning
+      → nodes/edges materialized        (catalog seam: parquet / Iceberg)
 
 Layout:
   core/       pure-Python transform semantics (no Spark imports; unit-testable)

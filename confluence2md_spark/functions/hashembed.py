@@ -45,9 +45,9 @@ DIM = 64
 def hashed_tf(
     docs: DataFrame, text_col: str = "text", dim: int = DIM
 ) -> DataFrame:
-    """(doc_id, bucket, tf) sparse hashed-TF rows, ordered (doc_id,
-    bucket). Tokens are the whitespace stream of trim(lower(text)) — the
-    corpus_curation token rule."""
+    """(doc_id, bucket, tf) sparse hashed-TF rows, unordered. Tokens are
+    the whitespace stream of trim(lower(text)) — the corpus_curation token
+    rule."""
     tok = docs.select(
         "doc_id",
         F.explode(
@@ -59,7 +59,6 @@ def hashed_tf(
         tok.select("doc_id", bucket.cast("bigint").alias("bucket"))
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .orderBy("doc_id", "bucket")
     )
 
 

@@ -54,7 +54,7 @@ def tfidf_keywords(
     k: int = 3,
 ) -> DataFrame:
     """(doc_id, rank, w, score_micros): each document's top-`k` tokens by
-    exact-integer TF-IDF (ties by token asc), ordered by (doc_id, rank)."""
+    exact-integer TF-IDF (ties by token asc), unordered."""
     tf = _tf(docs, text_col, id_col).persist()
     try:
         n_rel = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -81,7 +81,6 @@ def tfidf_keywords(
             scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(id_col, "rank", "w", "score_micros")
-            .orderBy(id_col, "rank")
         )
         out = out.localCheckpoint(eager=True)
     finally:
@@ -121,7 +120,7 @@ def unigram_surprisal(
     """(doc_id, n_tokens, avg_nll_micros): each document's average
     unigram negative log-likelihood against the corpus unigram model —
     high values = surprising/outlier documents (the perplexity-filter
-    signal), ordered by doc_id."""
+    signal), unordered."""
     tf = _tf(docs, text_col, id_col).persist()
     try:
         c_rel = tf.groupBy("w").agg(F.sum("tf").cast("bigint").alias("c"))
@@ -147,7 +146,6 @@ def unigram_surprisal(
                     "avg_nll_micros"
                 ),
             )
-            .orderBy(id_col)
         )
         out = out.localCheckpoint(eager=True)
     finally:

@@ -93,7 +93,7 @@ def betweenness_micros(
 ) -> DataFrame:
     """(page, betweenness_micros) over the undirected simple view of
     `edges`, dependency-accumulated from `seeds` (a `page` column),
-    ordered (betweenness_micros desc, page asc), zero rows dropped.
+    unordered, zero rows dropped.
     Raises RuntimeError if BFS from the seeds is deeper than `max_depth`.
 
     `use_decimal` switches the backward step's sigma·(10^6+delta) product
@@ -225,7 +225,6 @@ def betweenness_micros(
                     .cast("bigint")
                     .alias("betweenness_micros"),
                 )
-                .orderBy(F.desc("betweenness_micros"), F.asc("page"))
             )
 
         try:

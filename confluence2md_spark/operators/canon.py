@@ -38,7 +38,8 @@ def build_canonical_map(
     `num_partitions` should track the TITLE volume, not the cluster width —
     title rows are tiny, and oversizing this stage drowns it in task
     scheduling (measured: 3× slower at 64 partitions than at 8 for 36k
-    titles). The pipeline passes rows//20k clamped to the cluster width.
+    titles). The pipeline passes one partition per 100k pages, clamped
+    to [4, cluster width]: max(4, min(n, rows // 100_000 + 1)).
 
     The returned plan reads the CC labels, which past the driver cap are a
     local checkpoint. With `scratch`, that checkpoint is appended to it,

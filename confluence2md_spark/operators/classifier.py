@@ -60,8 +60,8 @@ def nb_quality_scores(
     """Train multinomial NB on (doc_id, label in {0,1}) weak labels and
     score every document.
 
-    Returns (doc_id, score_pos_micros, score_neg_micros, pred) ordered by
-    doc_id; scores are exact-integer sums of per-occurrence log-prob
+    Returns (doc_id, score_pos_micros, score_neg_micros, pred), unordered;
+    scores are exact-integer sums of per-occurrence log-prob
     micros plus the class-prior micros; pred = 1 iff pos > neg (ties to
     the negative class, deterministically).
     """
@@ -134,7 +134,6 @@ def nb_quality_scores(
                 "bigint"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -158,7 +157,7 @@ def nb_quality_calibration(
     the rates are floor-micros, so every row is oracle-exact.
 
     Returns (bin, n_docs, n_label_pos, n_pred_pos, label_rate_micros,
-    pred_rate_micros) ordered by bin.
+    pred_rate_micros), unordered.
     """
     from .ranking import global_row_number
 
@@ -191,7 +190,6 @@ def nb_quality_calibration(
                 "pred_rate_micros"
             ),
         )
-        .orderBy("bin")
     )
 
 

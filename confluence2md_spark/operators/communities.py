@@ -122,8 +122,7 @@ def modularity_micros(
     node-keyed joins of the assignment onto the edge list, a degree
     groupBy, and a broadcast 1-row m relation.
 
-    Returns (community, n_nodes, m_intra, d_sum, q_micros) ordered by
-    community.
+    Returns (community, n_nodes, m_intra, d_sum, q_micros), unordered.
     """
     und = (
         edges.select(
@@ -179,7 +178,6 @@ def modularity_micros(
                     "* (d_sum * 1000000 DIV (2 * m)) DIV 1000000 AS BIGINT)"
                 ).alias("q_micros"),
             )
-            .orderBy("community")
         )
         return out.localCheckpoint(eager=True)
     finally:

@@ -41,7 +41,7 @@ def community_pagerank_rollup(
     iters_pr: int = 5,
 ) -> DataFrame:
     """(community, n_pages, rank_mass_micros, top_page, top_rank_micros)
-    per LPA community, ordered by rank mass (desc, community asc).
+    per LPA community, unordered.
 
     The community assignment covers the de-looped undirected node set
     (LPA's contract); the inner join therefore scopes the rollup to those
@@ -58,7 +58,6 @@ def community_pagerank_rollup(
             F.expr("min_by(page, struct(-rank_micros, page))").alias("top_page"),
             F.max("rank_micros").cast("bigint").alias("top_rank_micros"),
         )
-        .orderBy(F.desc("rank_mass_micros"), F.asc("community"))
     )
 
 

@@ -66,7 +66,6 @@ def exact_dedup_survivors(docs: DataFrame, text_col: str = "text") -> DataFrame:
         surv.select(F.col("s.lang").alias("lang"))
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang")
     )
 
 
@@ -277,7 +276,6 @@ def ngram_cluster_census(
         .agg(F.count(F.lit(1)).alias("size"))
         .groupBy("size")
         .agg(F.count(F.lit(1)).alias("n_clusters"))
-        .orderBy("size")
     )
 
 

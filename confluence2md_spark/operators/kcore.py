@@ -53,7 +53,7 @@ def kcore(
     """Nodes of the k-core of the undirected simple view of `edges`.
 
     Returns (node, core_degree) — degree WITHIN the k-core subgraph, which
-    is >= k by construction — ordered (core_degree desc, node asc).
+    is >= k by construction — unordered.
     Raises RuntimeError if the peel has not converged in `max_rounds`
     synchronous rounds (callers pick a depth matching their graph; the
     contract query asserts convergence rather than silently truncating).
@@ -91,9 +91,9 @@ def kcore(
             converged=lambda alive, nxt: alive.count() == nxt.count(),
             checkpoint_every=2,
             what=f"k-core peel (k={k})",
-            finish=lambda alive: _degrees(alive)
-            .select(F.col("n").alias("node"), F.col("d").alias("core_degree"))
-            .orderBy(F.desc("core_degree"), F.asc("node")),
+            finish=lambda alive: _degrees(alive).select(
+                F.col("n").alias("node"), F.col("d").alias("core_degree")
+            ),
         )
     finally:
         release(und)

@@ -64,7 +64,7 @@ def mixture_weights(
     """Per-domain sqrt-temperature mixture weights and token budgets.
 
     Returns (domain, n_docs, n_tokens, share_micros, weight_micros,
-    budget_tokens) ordered by domain. share_micros is the raw token
+    budget_tokens), unordered. share_micros is the raw token
     share; weight_micros the T=2 temperature-sampled share; both floor
     micros of exact integer ratios, so Σ weight_micros ≤ 1e6 with the
     deficit < n_domains (flooring, never rounding — the twin states it).
@@ -108,7 +108,6 @@ def mixture_weights(
                 " DIV tot_sqrt AS BIGINT)"
             ).alias("budget_tokens"),
         )
-        .orderBy("domain")
     )
 
 
@@ -163,7 +162,7 @@ def mixture_sample(
     expectation — rate_i = min(1, budget_i / tokens_i) — using the same
     portable sha256 24-bit key as `curation.stratified_sample` (so the
     kept set is byte-reproducible, monotone in budget, and engine-exact).
-    Returns the kept (doc_id, domain) rows ordered by doc_id.
+    Returns the kept (doc_id, domain) rows, unordered.
 
     Scale shape: mixture_weights' one domain groupBy produces a
     domains-sized rate relation that re-enters as a broadcast join onto
@@ -190,7 +189,6 @@ def mixture_sample(
         )
         .filter(key * 1_000_000 < F.col("rate_micros") * (1 << 24))
         .select("doc_id", F.col(domain_col).alias("domain"))
-        .orderBy("doc_id")
     )
 
 

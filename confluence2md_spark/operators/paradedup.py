@@ -71,8 +71,8 @@ def paragraph_dedup(
     """Per-document paragraph-dedup summary after corpus-wide keep-first
     removal of duplicated paragraphs.
 
-    Returns (doc_id, n_paras, n_removed, kept_len, kept_sha) ordered by
-    doc_id; kept_sha is sha256 hex of the rebuilt document (empty string
+    Returns (doc_id, n_paras, n_removed, kept_len, kept_sha), unordered;
+    kept_sha is sha256 hex of the rebuilt document (empty string
     if every paragraph was removed), so byte-exact reconstruction is
     pinned without shipping text anywhere.
     """
@@ -128,7 +128,6 @@ def paragraph_dedup(
             F.length(rebuilt).cast("bigint").alias("kept_len"),
             F.sha2(rebuilt, 256).alias("kept_sha"),
         )
-        .orderBy("doc_id")
     )
 
 

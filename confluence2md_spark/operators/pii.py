@@ -24,8 +24,8 @@ DuckDB twin passes the 'g' flag explicitly.
 
 Scale shape: pure narrow column expressions — regexp_extract_all /
 regexp_replace / sha2 run JVM-side inside WholeStageCodegen with zero
-shuffles and zero Python; the only exchange in the contract query is the
-final presentation orderBy. At 100 TB this is a map-only pass that
+shuffles and zero Python; the contract query's only exchange is the
+entry's final sort. At 100 TB this is a map-only pass that
 pushes the (doc_id, text) projection into the parquet scan.
 """
 
@@ -87,8 +87,8 @@ def pii_signals(
 ) -> DataFrame:
     """Per-document PII hit counts + redacted-text fingerprint.
 
-    Returns (doc_id, n_email, n_phone, n_ipv4, n_pii, red_len, red_sha)
-    ordered by doc_id. Counts are taken on the ORIGINAL text (reported
+    Returns (doc_id, n_email, n_phone, n_ipv4, n_pii, red_len, red_sha),
+    unordered. Counts are taken on the ORIGINAL text (reported
     numbers should describe the input, not the partially redacted
     intermediate); red_sha is sha256 hex of the fully redacted text so
     byte-exact redaction is pinned without shipping the text anywhere.
@@ -104,7 +104,7 @@ def pii_signals(
         ).alias("n_pii"),
         F.length(redact(text)).cast("bigint").alias("red_len"),
         F.sha2(redact(text), 256).alias("red_sha"),
-    ).orderBy("doc_id")
+    )
 
 
 def pii_sql_duck(docs_rel: str = "documents") -> str:

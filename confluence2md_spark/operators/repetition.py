@@ -45,7 +45,7 @@ def repetition_signals(
     """Per-document repetition signals + keep flag.
 
     Returns (doc_id, n_tok, dup_word_micros, top_word_micros,
-    dup_2gram_micros, keep) ordered by doc_id. Empty-text documents have
+    dup_2gram_micros, keep), unordered. Empty-text documents have
     n_tok counted over split()'s single empty token, matching the oracle.
     """
     tok = docs.select(
@@ -97,7 +97,6 @@ def repetition_signals(
                 & (F.col("dup_2gram_micros") <= F.lit(dup_2gram_cap))
             ).cast("bigint"),
         )
-        .orderBy("doc_id")
     )
     return out
 

@@ -82,8 +82,8 @@ def scc(
     max_rounds: int = 64,
 ) -> DataFrame:
     """(page, scc_id) for every node of the directed simple graph induced
-    by `edges`; scc_id is the minimum page id of the component. Ordered
-    by page. Raises RuntimeError if the coloring peel exhausts
+    by `edges`; scc_id is the minimum page id of the component.
+    Unordered. Raises RuntimeError if the coloring peel exhausts
     `max_rounds` total inner iterations before the active set empties.
     """
     e_all = (
@@ -148,7 +148,8 @@ def scc(
         while True:
             active = labels.filter(F.col("scc_id").isNull()).select("page")
             if active.count() == 0:
-                return labels.orderBy("page").localCheckpoint(eager=True)
+                out, labels = labels, None  # the result: the caller owns it
+                return out
             # 1. forward min-color fixpoint over the active subgraph.
             color = fixpoint(
                 color_step,

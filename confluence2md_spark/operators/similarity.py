@@ -600,7 +600,7 @@ def semantic_dedup(
     paper's keep choice — the most "edge-of-cluster", least redundant
     representative).
 
-    Returns one row per input vector, ordered by vec_id:
+    Returns one row per input vector, unordered:
         (vec_id, cell, cent_cos_micros, keep, dup_of)
     where dup_of is the kept vector that shadowed a dropped one (-1 for
     kept rows), so the drop decision is AUDITABLE: every dropped row's
@@ -687,6 +687,6 @@ def semantic_dedup(
             )
 
         res = indexed.groupBy("cell").applyInPandas(_greedy, schema=out_schema)
-        return res.orderBy("vec_id").localCheckpoint()
+        return res.localCheckpoint()
     finally:
         base.unpersist()

@@ -191,7 +191,7 @@ def remove_duplicated_spans(
 ) -> DataFrame:
     """Per-document summary after removing the doc_b-side copy of every
     maximal duplicated span: (doc_id, n_spans, n_tokens_removed, new_len,
-    new_sha) over ALL input documents, ordered by doc_id. new_sha pins
+    new_sha) over ALL input documents, unordered. new_sha pins
     the rebuilt text byte-for-byte (sha256 of '' for a fully-removed
     doc); tokenization is the span finder's plain space split."""
     spans = duplicated_substring_spans(
@@ -247,7 +247,6 @@ def remove_duplicated_spans(
             F.length(rebuilt).cast("bigint").alias("new_len"),
             F.sha2(rebuilt, 256).alias("new_sha"),
         )
-        .orderBy("doc_id")
     )
 
 

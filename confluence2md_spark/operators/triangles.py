@@ -43,7 +43,7 @@ def triangle_participation(
     """Per-node triangle participation over the undirected view of `edges`.
 
     Returns (node, n_tri, degree, cc_micros) for every node in >= 1
-    triangle, ordered (n_tri desc, node asc). `degree` is the simple
+    triangle, unordered. `degree` is the simple
     undirected degree; `cc_micros` is the local clustering coefficient
     floor(2e6 * n_tri / (degree * (degree - 1))) as BIGINT micros.
     """
@@ -101,7 +101,6 @@ def triangle_participation(
                     "cc_micros"
                 ),
             )
-            .orderBy(F.desc("n_tri"), F.asc("node"))
         )
         # Materialize before unpersisting e (out's plan reads e twice).
         out = out.localCheckpoint(eager=True)

@@ -95,7 +95,7 @@ def ktruss(
     """Edges of the k-truss of the undirected simple view of `edges`.
 
     Returns (a, b, support) — support counted WITHIN the truss subgraph,
-    >= k-2 by construction — ordered (support desc, a asc, b asc).
+    >= k-2 by construction — unordered.
     Raises RuntimeError if the peel has not converged in `max_rounds`
     rounds. An empty result (graph has no k-truss) is a valid outcome.
     """
@@ -129,8 +129,7 @@ def ktruss(
                 "a",
                 "b",
                 F.coalesce(F.col("sup"), F.lit(0)).cast("bigint").alias("support"),
-            )
-            .orderBy(F.desc("support"), F.asc("a"), F.asc("b")),
+            ),
         )
     finally:
         release(und)

@@ -54,7 +54,7 @@ def _domain(url: Column) -> Column:
 
 
 def url_domain_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(domain, n_docs, n_urls, n_https) per domain, ordered by domain:
+    """(domain, n_docs, n_urls, n_https) per domain, unordered:
     distinct documents citing the domain, total URL mentions, and how
     many of those are https."""
     urls = docs.select(
@@ -78,7 +78,6 @@ def url_domain_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_urls"),
             F.sum("is_https").cast("bigint").alias("n_https"),
         )
-        .orderBy("domain")
     )
 
 

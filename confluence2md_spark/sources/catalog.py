@@ -11,8 +11,12 @@ backend is a two-function change.
 
 from __future__ import annotations
 
+import glob
 import os
 import re
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
@@ -240,37 +244,38 @@ def merge_edges(
         delta.createOrReplaceTempView("edges_delta")
         spark.sql(MERGE_EDGES_SQL.format(ns=_namespace()))
         return f"{_namespace()}.edges"
+    return _swap_edges(spark, warehouse, delta, lambda t: merge_edges_delta(t, delta))
+
+
+def _swap_edges(
+    spark: SparkSession,
+    warehouse: str,
+    delta: DataFrame,
+    merge: Callable[[DataFrame], DataFrame],
+) -> str:
+    """The parquet edges table replaced by `merge(existing)`, or by `delta`
+    when there is no table yet: staged, then swapped in by two renames.
+
+    A missing edges dir is NOT automatically "first delta": a crash in the
+    window between the two swap renames leaves the previous table parked
+    at edges.bak-* with no final dir, and bootstrapping would silently
+    shrink the table to just this delta. The parked table is restored
+    first, and the merge goes on as normal."""
     final = os.path.join(warehouse, "edges")
     if not os.path.exists(final):
-        # A missing edges dir is NOT automatically "first delta": a crash in
-        # the window between the two swap renames below leaves the previous
-        # table parked at edges.bak-* with no final dir, and bootstrapping
-        # here would silently shrink the table to just this delta.  Restore
-        # the parked table first and fall through to a normal merge.
-        import glob
-        import shutil
-
         remnants = sorted(glob.glob(f"{final}.bak-*"), key=os.path.getmtime)
-        if remnants:
-            os.rename(remnants[-1], final)
-            for r in remnants[:-1]:  # older orphans, already superseded
-                shutil.rmtree(r)
-            for s in glob.glob(os.path.join(warehouse, "edges_merge_*")):
-                shutil.rmtree(s)  # incomplete/unswapped staging writes
-        else:
+        if not remnants:
             # genuinely first delta: the delta IS the table
             delta.write.mode("overwrite").partitionBy("pred").parquet(final)
             return final
-    existing = load_table(spark, warehouse, "edges")
-    merged = merge_edges_delta(existing, delta)
+        os.rename(remnants[-1], final)
+        for r in remnants[:-1]:  # older orphans, already superseded
+            shutil.rmtree(r)
+        for s in glob.glob(os.path.join(warehouse, "edges_merge_*")):
+            shutil.rmtree(s)  # incomplete/unswapped staging writes
+    merged = merge(load_table(spark, warehouse, "edges"))
     # parquet cannot rewrite in place while reading — stage then swap.
-    # Swap order: final -> backup, staging -> final, drop backup.  A crash
-    # between the two renames leaves no final dir but DOES leave the old
-    # table parked at edges.bak-*; the bootstrap branch above restores it
-    # on the next run instead of mistaking the state for a first delta.
-    import shutil
-    import tempfile
-
+    # Swap order: final -> backup, staging -> final, drop backup.
     staging = tempfile.mkdtemp(prefix="edges_merge_", dir=warehouse)
     merged.write.mode("overwrite").partitionBy("pred").parquet(staging)
     backup = f"{final}.bak-{os.path.basename(staging)}"
@@ -375,34 +380,9 @@ def reexport_merge(
                 )
             raise
         return f"{ns}.edges"
-    final = os.path.join(warehouse, "edges")
-    if not os.path.exists(final):
-        import glob
-        import shutil
-
-        remnants = sorted(glob.glob(f"{final}.bak-*"), key=os.path.getmtime)
-        if remnants:
-            os.rename(remnants[-1], final)
-            for r in remnants[:-1]:
-                shutil.rmtree(r)
-            for s in glob.glob(os.path.join(warehouse, "edges_merge_*")):
-                shutil.rmtree(s)
-        else:
-            delta.write.mode("overwrite").partitionBy("pred").parquet(final)
-            return final
-    existing = load_table(spark, warehouse, "edges")
-    merged = reexport_merge_delta(existing, delta, reexported_subjects)
-    import shutil
-    import tempfile
-
-    staging = tempfile.mkdtemp(prefix="edges_merge_", dir=warehouse)
-    merged.write.mode("overwrite").partitionBy("pred").parquet(staging)
-    backup = f"{final}.bak-{os.path.basename(staging)}"
-    os.rename(final, backup)
-    try:
-        os.rename(staging, final)
-    except OSError:
-        os.rename(backup, final)
-        raise
-    shutil.rmtree(backup)
-    return final
+    return _swap_edges(
+        spark,
+        warehouse,
+        delta,
+        lambda t: reexport_merge_delta(t, delta, reexported_subjects),
+    )

@@ -16,7 +16,8 @@ from unittest import mock
 
 import pytest
 
-sys.path.insert(0, "/root/repo/jobs")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "jobs"))
 import build_kg as cli  # noqa: E402
 
 from confluence2md_spark.sources import catalog  # noqa: E402
@@ -81,7 +82,7 @@ def test_no_confluence_docs_is_clean_noop(spark, tmp_path):
     out = subprocess.run(
         [sys.executable, "jobs/build_kg.py", "--table", table,
          "--warehouse", str(tmp_path / "wh"), "--master", "local[2]"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert out.returncode == 0
     assert "No Confluence MIME documents found" in out.stdout
@@ -193,30 +194,50 @@ def test_merge_edges_iceberg_branch(monkeypatch):
     sp.sql.assert_called_once_with(catalog.MERGE_EDGES_SQL.format(ns="testns"))
 
 
-def test_merge_edges_first_delta_creates_table(spark, tmp_path):
+# The two parquet edge-table writers share one staged swap. Each entry:
+# the writer, applied to (spark, warehouse, delta), and the n_sources of an
+# edge that the table held with `old` and the delta asserts with `new` —
+# merge_edges adds them, a re-export of the delta's subjects replaces them.
+_SWAPS = {
+    "merge_edges": (
+        lambda spark, wh, d: catalog.merge_edges(spark, wh, d),
+        lambda old, new: old + new,
+    ),
+    "reexport_merge": (
+        lambda spark, wh, d: catalog.reexport_merge(spark, wh, d, d.select("subj")),
+        lambda old, new: new,
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_SWAPS))
+def test_merge_edges_first_delta_creates_table(spark, tmp_path, writer):
     """First merge with NO existing edges table must create it rather than
     crash in rmtree/load (ADVICE r2)."""
+    write, combine = _SWAPS[writer]
     delta = spark.createDataFrame(
         [("a", "links_to", "b", "page", "page", 1.0, 2, "r0")],
         "subj string, pred string, obj string, subj_type string, "
         "obj_type string, confidence double, n_sources long, repo string",
     )
     wh = str(tmp_path)
-    out = catalog.merge_edges(spark, wh, delta)
+    out = write(spark, wh, delta)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1 and rows[0]["n_sources"] == 2
     # second merge goes through the staged-swap path and leaves no debris
-    catalog.merge_edges(spark, wh, delta)
+    write(spark, wh, delta)
     rows2 = spark.read.parquet(f"{wh}/edges").collect()
-    assert len(rows2) == 1 and rows2[0]["n_sources"] == 4
+    assert len(rows2) == 1 and rows2[0]["n_sources"] == combine(2, 2)
     assert not [d for d in os.listdir(wh) if d.startswith("edges.bak")]
 
 
-def test_merge_edges_recovers_mid_swap_crash(spark, tmp_path):
+@pytest.mark.parametrize("writer", sorted(_SWAPS))
+def test_merge_edges_recovers_mid_swap_crash(spark, tmp_path, writer):
     """A crash between rename(final, backup) and rename(staging, final)
     leaves only edges.bak-* — the next merge must restore the parked table
     and merge into IT, not bootstrap the delta as the whole table
     (ADVICE r3: that window silently discarded all merged history)."""
+    write, combine = _SWAPS[writer]
     schema = (
         "subj string, pred string, obj string, subj_type string, "
         "obj_type string, confidence double, n_sources long, repo string"
@@ -229,17 +250,17 @@ def test_merge_edges_recovers_mid_swap_crash(spark, tmp_path):
          ("c", "links_to", "d", "page", "page", 0.5, 1, "r0")], schema
     )
     wh = str(tmp_path)
-    catalog.merge_edges(spark, wh, d1)
+    write(spark, wh, d1)
     # simulate the crash window: table parked at .bak, staging incomplete
     os.rename(f"{wh}/edges", f"{wh}/edges.bak-edges_merge_crash1")
     os.makedirs(f"{wh}/edges_merge_orphan")
-    catalog.merge_edges(spark, wh, d2)
+    write(spark, wh, d2)
     rows = {
         (r["subj"], r["obj"]): r["n_sources"]
         for r in spark.read.parquet(f"{wh}/edges").collect()
     }
     # history (n_sources=2) survived and the delta merged on top of it
-    assert rows == {("a", "b"): 5, ("c", "d"): 1}
+    assert rows == {("a", "b"): combine(2, 3), ("c", "d"): 1}
     debris = [d for d in os.listdir(wh) if d.startswith(("edges.bak", "edges_merge_"))]
     assert not debris
 

@@ -46,9 +46,6 @@ def test_rollup_matches_recomposed_constituents(spark):
         assert row["rank_mass_micros"] == mass
         assert row["top_page"] == top_page
         assert row["top_rank_micros"] == top_rank
-    # output ordering: rank mass desc, community asc
-    masses = [(r["rank_mass_micros"], r["community"]) for r in got]
-    assert masses == sorted(masses, key=lambda t: (-t[0], t[1]))
 
 
 def test_rollup_tie_breaks_leader_by_page_id(spark):

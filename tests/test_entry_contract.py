@@ -1,8 +1,10 @@
 """Driver-contract conformance at sf0.001: every oracle-backed query's Spark
 result must equal its DuckDB oracle (columns sorted by name, rows sorted,
 exact values) — the same comparison the driver performs at sf0.01. The
-driver hashes rows in arrival order, so the queries whose order the entry
-restores through `_total_order` must also arrive in their oracle's order."""
+driver hashes rows in arrival order, so every result must also arrive in
+its oracle's order: the entry's `_total_order` with the oracle's ORDER BY
+keys, a top-k `orderBy(...).limit(k)`, or the scan order of a query whose
+oracle states none."""
 
 from __future__ import annotations
 
@@ -15,32 +17,6 @@ import pytest
 import __spark_entry__ as entrymod
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-# Queries whose arrival order comes from the entry's `_total_order` over
-# operator output that is itself unordered.
-TOTAL_ORDER_QUERIES = (
-    "events_asof_purchase_view",
-    "dedup_ngram_jaccard",
-    "embedding_near_dup",
-    "embedding_near_dup_lsh",
-    "bm25_topk",
-    "bm25_topk_dfcap",
-    "text_bpe_trained",
-    "curation_decontaminate",
-    "curation_stratified_sample",
-    "curation_pack_chunks",
-    "dedup_minhash_portable",
-    "dedup_simhash_portable",
-    "text_winnowing",
-    "text_winnow_overlap",
-    "dedup_containment",
-    "curation_bloom_decontaminate",
-    "text_dup_spans",
-    "text_substr_spans",
-    "text_token_stats",
-    "text_fingerprint",
-)
-
 
 def _normalize(rows, cols):
     """Rows with columns sorted by name and values made comparable, still
@@ -80,7 +56,6 @@ _QUERIES = entrymod.queries()
 
 def test_every_oracle_has_a_query():
     assert set(_ORACLES) <= set(_QUERIES)
-    assert set(TOTAL_ORDER_QUERIES) <= set(_ORACLES)
 
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
@@ -91,8 +66,7 @@ def test_oracle_match(spark, sf_dir, duck, name):
     d_rows, d_cols = _normalize(res.fetchall(), [d[0] for d in res.description])
     assert s_cols == d_cols
     assert _sorted(s_rows) == _sorted(d_rows)
-    if name in TOTAL_ORDER_QUERIES:
-        assert s_rows == d_rows, "arrival order differs from the oracle's"
+    assert s_rows == d_rows, "arrival order differs from the oracle's"
 
 
 @pytest.mark.parametrize(

@@ -44,7 +44,7 @@ from confluence2md_spark.operators.similarity import (
     planted_cluster_vectors,
 )
 from confluence2md_spark.operators.truss import ktruss
-from confluence2md_spark.plans.iterate import fixpoint
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 # a seeded 120-node random link graph plus a 12-node chain (the chain
 # makes the k-core peel take several rounds)
@@ -175,3 +175,21 @@ def test_round_guard_message(spark):
             checkpoint_every=1,
             what="counter",
         )
+
+
+def test_entry_cmap_leaves_only_its_memo(spark, sf_dir, monkeypatch):
+    """The entry's canonical map on the distributed CC path: the CC label
+    checkpoint under it is freed once the memo's checkpoint holds the map."""
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setenv("KG_CC_DRIVER_MAX_EDGES", "0")
+    entrymod._pages(spark, sf_dir)  # the map's input, memoized before the marker
+    cache = {k: v for k, v in entrymod._CACHE.items() if k != ("cmap", sf_dir)}
+    monkeypatch.setattr(entrymod, "_CACHE", cache)
+    marker = _marker(spark)
+    cmap = entrymod._cmap(spark, sf_dir)
+    try:
+        assert cmap.count() > 0
+        assert _left_behind(spark, marker, cmap) == []
+    finally:
+        release(cmap)

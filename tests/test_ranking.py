@@ -83,7 +83,7 @@ def test_nb_calibration_bins_partition_corpus(spark, sf_dir):
         .cast("bigint")
         .alias("label"),
     )
-    rows = nb_quality_calibration(docs, labels).collect()
+    rows = sorted(nb_quality_calibration(docs, labels).collect(), key=lambda r: r["bin"])
     assert [r["bin"] for r in rows] == list(range(1, 11))
     assert sum(r["n_docs"] for r in rows) == docs.count()
     for r in rows:

@@ -1471,7 +1471,7 @@ def test_kcore_matches_duckdb_twin_on_random_graph(spark):
         "WITH base AS (SELECT subj, obj FROM raw),\n"
         + kcore_sql_duck("base", k=3, rounds=12)
     ).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert sorted(got) == sorted(tuple(w) for w in want)
 
 
 def test_repetition_hand_computed(spark):
@@ -1531,7 +1531,7 @@ def test_repetition_matches_duckdb_twin(spark):
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     want = con.execute(repetition_sql_duck()).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert sorted(got) == sorted(tuple(w) for w in want)
 
 
 def test_pii_hand_computed(spark):
@@ -1594,7 +1594,7 @@ def test_pii_matches_duckdb_twin(spark):
         "(SELECT doc_id, " + synthetic_pii_expr_sql() + " AS text FROM documents) aug"
     )
     want = con.execute(pii_sql_duck(docs_rel=aug)).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert sorted(got) == sorted(tuple(w) for w in want)
     # non-vacuous: every PII class fires somewhere in the fixture
     assert sum(r[1] for r in got) > 0  # emails
     assert sum(r[2] for r in got) > 0  # phones
@@ -1788,7 +1788,7 @@ def test_nb_classifier_matches_duckdb_twin(spark):
     want = con.execute(
         nb_quality_sql_duck(labels_cte="SELECT doc_id, label FROM lab")
     ).fetchall()
-    assert got == [tuple(w) for w in want]
+    assert sorted(got) == sorted(tuple(w) for w in want)
 
 
 def test_personalized_pagerank_seed_concentration(spark):
@@ -1946,21 +1946,40 @@ def test_operator_outputs_are_unordered(spark):
     """Operators return unordered, partitioned output; a contract query's
     total order is added by the entry's `_total_order`. No operator plan
     funnels its output through a one-partition repartition or sorts it
-    globally, and no public function takes an `ordered` flag."""
+    globally, and no public function takes an `ordered` flag. (Operators
+    whose result is an eager checkpoint plan as one leaf; the source scan
+    below covers their sorts.)"""
     import importlib
     import inspect
     import pkgutil
 
     import confluence2md_spark
+    from confluence2md_spark.functions.hashembed import hashed_tf
     from confluence2md_spark.functions.textstats import fingerprint, token_stats
     from confluence2md_spark.operators.bloom import bloom_decontaminate
+    from confluence2md_spark.operators.classifier import nb_quality_scores
+    from confluence2md_spark.operators.communityrollup import (
+        community_pagerank_rollup,
+    )
     from confluence2md_spark.operators.containment import containment_pairs
+    from confluence2md_spark.operators.dedup import (
+        exact_dedup_survivors,
+        ngram_cluster_census,
+    )
     from confluence2md_spark.operators.dupspans import dup_span_signals
+    from confluence2md_spark.operators.mixing import mixture_sample, mixture_weights
+    from confluence2md_spark.operators.paradedup import paragraph_dedup
+    from confluence2md_spark.operators.pii import pii_signals
     from confluence2md_spark.operators.portable_dedup import (
         minhash_portable_pairs,
         simhash_portable_pairs,
     )
-    from confluence2md_spark.operators.substrdup import duplicated_substring_spans
+    from confluence2md_spark.operators.repetition import repetition_signals
+    from confluence2md_spark.operators.substrdup import (
+        duplicated_substring_spans,
+        remove_duplicated_spans,
+    )
+    from confluence2md_spark.operators.urlsignals import url_domain_signals
     from confluence2md_spark.operators.winnow import (
         winnow_fingerprints,
         winnow_overlap_pairs,
@@ -1969,6 +1988,11 @@ def test_operator_outputs_are_unordered(spark):
     text = "a b c d e f g h i j k l"
     docs = spark.createDataFrame(
         [(1, text), (2, "x " + text), (3, "p q r s")], ["doc_id", "text"]
+    )
+    ldocs = docs.withColumn("lang", F.lit("en"))
+    labels = docs.select("doc_id", (F.col("doc_id") % 2).alias("label"))
+    edges = spark.createDataFrame(
+        [("p1", "p2"), ("p2", "p3"), ("p3", "p1"), ("p3", "p4")], ["subj", "obj"]
     )
     outputs = {
         "winnow_fingerprints": winnow_fingerprints(docs),
@@ -1981,6 +2005,18 @@ def test_operator_outputs_are_unordered(spark):
         "duplicated_substring_spans": duplicated_substring_spans(docs),
         "token_stats": token_stats(docs),
         "fingerprint": fingerprint(docs),
+        "hashed_tf": hashed_tf(docs),
+        "nb_quality_scores": nb_quality_scores(docs, labels),
+        "community_pagerank_rollup": community_pagerank_rollup(edges),
+        "exact_dedup_survivors": exact_dedup_survivors(ldocs),
+        "ngram_cluster_census": ngram_cluster_census(ldocs),
+        "mixture_weights": mixture_weights(ldocs),
+        "mixture_sample": mixture_sample(ldocs),
+        "paragraph_dedup": paragraph_dedup(docs),
+        "pii_signals": pii_signals(docs),
+        "repetition_signals": repetition_signals(docs),
+        "remove_duplicated_spans": remove_duplicated_spans(docs),
+        "url_domain_signals": url_domain_signals(docs),
     }
     for name, df in outputs.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1998,3 +2034,47 @@ def test_operator_outputs_are_unordered(spark):
                 continue
             params = inspect.signature(fn).parameters
             assert "ordered" not in params, f"{mod.__name__}.{fname}"
+
+
+def _whole_result_sorts(path) -> list[int]:
+    """Lines of `.orderBy(` calls in `path` that are neither a Window spec
+    nor the receiver of a `.limit(` (a top-k)."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    lines = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "orderBy"
+        ):
+            continue
+        root = node.func.value
+        while isinstance(root, (ast.Call, ast.Attribute)):
+            root = root.func if isinstance(root, ast.Call) else root.value
+        if isinstance(root, ast.Name) and root.id == "Window":
+            continue
+        up = parent.get(node)
+        if isinstance(up, ast.Attribute) and up.attr == "limit":
+            continue
+        lines.append(node.lineno)
+    return lines
+
+
+def test_total_order_is_the_only_whole_result_sort():
+    """`__spark_entry__._total_order` is the one whole-result sort: every
+    other `.orderBy(` in the package and the entry orders a Window or
+    feeds a top-k `.limit(`."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = sorted((root / "confluence2md_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    found = {
+        str(f.relative_to(root)): lines
+        for f in files
+        if (lines := _whole_result_sorts(f))
+    }
+    assert found == {}

@@ -60,8 +60,8 @@ def _mirror_surprisal(docs):
 
 def test_keywords_match_python_mirror(spark):
     docs = spark.createDataFrame(_DOCS, ["doc_id", "text"])
-    got = [tuple(r) for r in tfidf_keywords(docs, k=3).collect()]
-    assert got == _mirror_keywords(_DOCS, 3)
+    got = sorted(tuple(r) for r in tfidf_keywords(docs, k=3).collect())
+    assert got == sorted(_mirror_keywords(_DOCS, 3))
     # the repeated rare word tops its doc; the ubiquitous 'the' (df = n,
     # idf floor = 0) never appears as any doc's top keyword
     by_doc = {r[0]: r for r in got if r[1] == 1}
@@ -71,8 +71,8 @@ def test_keywords_match_python_mirror(spark):
 
 def test_surprisal_matches_python_mirror(spark):
     docs = spark.createDataFrame(_DOCS, ["doc_id", "text"])
-    got = [tuple(r) for r in unigram_surprisal(docs).collect()]
-    assert got == _mirror_surprisal(_DOCS)
+    got = sorted(tuple(r) for r in unigram_surprisal(docs).collect())
+    assert got == sorted(_mirror_surprisal(_DOCS))
     # doc 0 (three hapaxes: sat/on/mat) is the most surprising; doc 3
     # (all common words) is the least
     avg = {r[0]: r[2] for r in got}
@@ -91,10 +91,10 @@ def test_tfidf_twins(spark):
         tuple(r)
         for r in con.execute(tfidf_keywords_sql_duck(docs=rel, k=3)).fetchall()
     ]
-    assert got_k == twin_k
+    assert sorted(got_k) == sorted(twin_k)
     got_s = [tuple(r) for r in unigram_surprisal(docs).collect()]
     twin_s = [
         tuple(r)
         for r in con.execute(unigram_surprisal_sql_duck(docs=rel)).fetchall()
     ]
-    assert got_s == twin_s
+    assert sorted(got_s) == sorted(twin_s)
