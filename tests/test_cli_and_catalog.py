@@ -242,8 +242,11 @@ def test_merge_edges_recovers_mid_swap_crash(spark, tmp_path, writer):
         "subj string, pred string, obj string, subj_type string, "
         "obj_type string, confidence double, n_sources long, repo string"
     )
+    # e->f is history the second delta does not touch: only a restored
+    # table still holds it, for either writer
     d1 = spark.createDataFrame(
-        [("a", "links_to", "b", "page", "page", 1.0, 2, "r0")], schema
+        [("a", "links_to", "b", "page", "page", 1.0, 2, "r0"),
+         ("e", "links_to", "f", "page", "page", 1.0, 4, "r0")], schema
     )
     d2 = spark.createDataFrame(
         [("a", "links_to", "b", "page", "page", 1.0, 3, "r0"),
@@ -259,8 +262,8 @@ def test_merge_edges_recovers_mid_swap_crash(spark, tmp_path, writer):
         (r["subj"], r["obj"]): r["n_sources"]
         for r in spark.read.parquet(f"{wh}/edges").collect()
     }
-    # history (n_sources=2) survived and the delta merged on top of it
-    assert rows == {("a", "b"): combine(2, 3), ("c", "d"): 1}
+    # history survived and the delta merged on top of it
+    assert rows == {("a", "b"): combine(2, 3), ("c", "d"): 1, ("e", "f"): 4}
     debris = [d for d in os.listdir(wh) if d.startswith(("edges.bak", "edges_merge_"))]
     assert not debris
 
