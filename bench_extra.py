@@ -6,9 +6,11 @@ the per-query warm-minimum A/B methodology used while optimizing.
     python bench_extra.py queries [sf_dir] [sweeps] [name ...]
         Interleaved sweeps over the named declared queries (default: the
         frozen bench's headline list), each executed to completion into the
-        noop sink; prints per-sweep walls and the warm minimum. Interleaving
-        matters on this VM: stall bands last minutes, so consecutive
-        attempts of one query are correlated samples (see BASELINE.md).
+        noop sink; prints per-sweep walls and the warm minimum. A query
+        that raises prints `sweepN name: FAIL <type>: <msg>` and the sweep
+        goes on. Interleaving matters on this VM: stall bands last
+        minutes, so consecutive attempts of one query are correlated
+        samples (see BASELINE.md).
 
     python bench_extra.py kg [sf_dir] [repeats]
         The kg pipeline (lean mode, same call shape as bench.py) `repeats`
@@ -65,7 +67,12 @@ def cmd_queries(sf_dir: str, sweeps: int, names: list[str]) -> None:
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(name)
             t0 = time.monotonic()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            try:
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            except Exception as exc:  # one failing query must not end the sweep
+                msg = (str(exc).strip().splitlines() or [""])[0]
+                print(f"sweep{sweep} {name}: FAIL {type(exc).__name__}: {msg}", flush=True)
+                continue
             dt = time.monotonic() - t0
             best[name] = min(best.get(name, dt), dt)
             print(f"sweep{sweep} {name}: {dt:.2f}s", flush=True)

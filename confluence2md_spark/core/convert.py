@@ -82,7 +82,6 @@ class DocResult:
     # | no_html_part | over_budget
     status: str
     title: str = ""
-    html: str = ""
     markdown: str = ""
     content_sha256: str = ""
     authors: list[tuple[str, str]] = field(default_factory=list)
@@ -169,7 +168,6 @@ def convert_document(
     return DocResult(
         status="ok",
         title=title,
-        html=html,
         markdown=markdown,
         content_sha256=sha,
         authors=authors,

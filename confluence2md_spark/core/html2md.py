@@ -112,12 +112,14 @@ class _TreeBuilder(HTMLParser):
 #
 # html.parser's state machine (goahead/parse_starttag/updatepos) is ~1/3 of
 # convert_document's profile.  After entity decoding and pre-processing the
-# Confluence HTML is plain: LF-only, no '&', no comments/doctype/CDATA, every
-# '<' opens a well-formed tag with simply-quoted attributes.  That class
+# Confluence HTML is plain: LF-only, no comments/doctype/CDATA, every '<'
+# opens a well-formed tag with simply-quoted attributes.  That class
 # tokenizes with ONE regex into the IDENTICAL _Node tree (same tag/attr
 # lowercasing, same raw start-tag text, same void/self-closing/stray-closer
 # handling, one text node per inter-tag gap — which is also what
-# convert_charrefs=True html.parser emits when no charrefs split the run).
+# convert_charrefs=True html.parser emits).  Character references resolve as
+# html.parser resolves them: html.unescape over each whole text run, title
+# text and attribute value that holds an '&'.
 # Anything outside the class returns None and the html.parser path runs
 # unchanged; a differential test pins tree equality on the corpus and on
 # adversarial shapes (test_html2md.py).
@@ -136,19 +138,23 @@ _FAST_ATTR_RE = re.compile(
 _FAST_DECLINE_TAGS = {"script", "style", "textarea"}
 
 
+def _unref(s: str | None) -> str | None:
+    return _html_mod.unescape(s) if s and "&" in s else s
+
+
 def _fast_parse(html: str) -> _Node | None:
-    if "&" in html or "\r" in html:
-        return None  # charref conversion / CR quirks: html.parser's business
+    if "\r" in html:
+        return None  # CR quirks: html.parser's business
     root = _Node("#root")
     stack = [root]
     i, n = 0, len(html)
     while i < n:
         lt = html.find("<", i)
         if lt == -1:
-            stack[-1].children.append(_Node("", raw=html[i:]))
+            stack[-1].children.append(_Node("", raw=_unref(html[i:])))
             break
         if lt > i:
-            stack[-1].children.append(_Node("", raw=html[i:lt]))
+            stack[-1].children.append(_Node("", raw=_unref(html[i:lt])))
         m = _FAST_TAG_RE.match(html, lt)
         if m is None:
             return None  # comment, doctype, or malformed tag
@@ -167,9 +173,11 @@ def _fast_parse(html: str) -> _Node | None:
             attrs = [
                 (
                     am.group(1).lower(),
-                    am.group(2)
-                    if am.group(2) is not None
-                    else (am.group(3) if am.group(3) is not None else am.group(4)),
+                    _unref(
+                        am.group(2)
+                        if am.group(2) is not None
+                        else (am.group(3) if am.group(3) is not None else am.group(4))
+                    ),
                 )
                 for am in _FAST_ATTR_RE.finditer(attrs_s)
             ]
@@ -182,7 +190,7 @@ def _fast_parse(html: str) -> _Node | None:
                 if end == -1 or "<" in html[m.end():end]:
                     return None
                 if end > m.end():
-                    node.children.append(_Node("", raw=html[m.end():end]))
+                    node.children.append(_Node("", raw=_unref(html[m.end():end])))
                 i = end + len("</title>")
                 continue
             # '<x/>' is handle_startendtag (never pushed); bare void tags are

@@ -20,14 +20,16 @@ community) assignment is hash-exact against an unrolled-CTE DuckDB
 twin (one CTE per round; SQL recursion can't aggregate in the
 recursive term).
 
-Scale shape: the adjacency is (und ∪ reversed und), persisted once;
-each round is one shuffle keyed on (node, label) for the vote count
-plus one keyed on node for the argmax — both keys are node ids, never
-document text. min_by(label, struct(-c, label)) does the
-(count desc, label asc) pick inside the aggregate, so no window/sort
-over the full node set is needed. The rounds run through
-plans/iterate.fixpoint, which localCheckpoints the labels every 5 rounds
-(each round reads the previous labels once, so the plan between
+Scale shape: the adjacency (both directions of the de-looped edges, one
+row per pair) is built once, hash-partitioned on its join key u, and
+persisted. Round 1 needs no join, since every neighbor still holds its
+own id: it is the min neighbor id. Each later round joins the labels
+onto the adjacency's partitioning and takes a deterministic
+mode(label) per node: the most frequent label, ties to the lowest, in
+one aggregate. That is one shuffle per round, keyed on node ids, never
+document text, and no window or sort over the node set. The rounds run
+through plans/iterate.fixpoint, which localCheckpoints the labels every
+5 rounds (each round reads the previous labels once, so the plan between
 checkpoints stays 5 joins deep) — an iters=20 run on a 10^12-edge graph
 must not carry a 20-join plan into every stage resubmission.
 
@@ -56,39 +58,36 @@ def label_propagation(
     neighbor-label count wins, ties to the bytewise-smallest label.
     Nodes whose only edges are self-loops drop out (both engines derive
     the node set from the de-looped edge list)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+    und = edges.select(F.col(src).alias("v"), F.col(dst).alias("u")).filter(
+        F.col("v") != F.col("u")
     )
+    # both directions, one row per (v, u); the distinct reuses the u
+    # partitioning, so building the adjacency is one exchange
     adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
+        und.unionByName(und.select(F.col("u").alias("v"), F.col("v").alias("u")))
+        .repartition("u")
+        .distinct()
         .persist()
     )
 
     def step(labels: DataFrame) -> DataFrame:
-        votes = (
-            adj.join(
-                labels.select(F.col("page").alias("u"), F.col("label")), "u"
-            )
-            .groupBy("v", "label")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        return (
+            adj.join(labels.select(F.col("page").alias("u"), "label"), "u")
+            .groupBy(F.col("v").alias("page"))
+            .agg(F.mode("label", True).alias("label"))
         )
-        return votes.groupBy("v").agg(
-            F.expr("min_by(label, struct(-c, label))").alias("label")
-        ).select(F.col("v").alias("page"), "label")
 
     try:
+        if iters < 1:  # own ids, the twin's l0
+            labels = adj.select(F.col("u").alias("page"), F.col("u").alias("label"))
+            labels = labels.distinct()
+        else:  # round 1: every neighbor still votes its own id once
+            page = F.col("v").alias("page")
+            labels = adj.groupBy(page).agg(F.min("u").alias("label"))
         return fixpoint(
             step,
-            adj.select(F.col("v").alias("page"))
-            .distinct()
-            .select("page", F.col("page").alias("label")),
-            max_iter=iters,
+            labels,
+            max_iter=max(iters - 1, 0),
             checkpoint_every=5,
             what="label propagation",
             finish=lambda labels: labels.select(
@@ -230,8 +229,8 @@ def label_propagation_sql_duck(edges_cte_body: str, iters: int = 4) -> str:
     """DuckDB twin: `edges_cte_body` yields (subj, obj); rounds are
     unrolled one CTE each (AS MATERIALIZED — DuckDB re-inlines plain
     CTEs per reference and exhausts fds on deep chains). The
-    row_number pick ordered by (c DESC, label ASC) is the same total
-    order as Spark's min_by over struct(-c, label)."""
+    row_number pick ordered by (c DESC, label ASC) is Spark's
+    mode(label, deterministic): max count, ties to the lowest label."""
     parts = [
         f"""und AS (
   SELECT DISTINCT LEAST(subj, obj) AS a, GREATEST(subj, obj) AS b

@@ -1,8 +1,9 @@
 """Label-propagation community detection (operators/communities.py):
 deterministic synchronous LPA vs a pure-Python mirror, lineage
-discipline at deep iteration counts, and twin-order equivalence of the
-min_by(struct(-c, label)) pick vs the twin's (c DESC, label ASC)
-row_number. The sf-corpus oracle equality runs in test_entry_contract.
+discipline at deep iteration counts, twin-order equivalence of the
+deterministic mode(label) vote vs the twin's (c DESC, label ASC)
+row_number, and the job count of one LPA call. The sf-corpus oracle
+equality runs in test_entry_contract.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from confluence2md_spark.operators.communities import (
     label_propagation,
     label_propagation_sql_duck,
 )
+from confluence2md_spark.plans.iterate import release
 
 
 def _python_lpa(edge_list, iters):
@@ -38,6 +40,23 @@ def _python_lpa(edge_list, iters):
     return labels
 
 
+def _lpa(spark, edge_list, iters):
+    edges = spark.createDataFrame(edge_list, ["subj", "obj"])
+    return {
+        r["page"]: r["community"]
+        for r in label_propagation(edges, iters=iters).collect()
+    }
+
+
+def _twin(edge_list, iters):
+    duckdb = pytest.importorskip("duckdb")
+    vals = ", ".join(f"('{a}', '{b}')" for a, b in edge_list)
+    sql = label_propagation_sql_duck(
+        f"SELECT * FROM (VALUES {vals}) AS t(subj, obj)", iters=iters
+    )
+    return dict(duckdb.connect().execute(sql).fetchall())
+
+
 # two cliques bridged by one edge, plus a separate pair and a self-loop
 _EDGES = [
     ("a1", "a2"), ("a1", "a3"), ("a2", "a3"), ("a3", "a1"),  # clique A (dup)
@@ -49,11 +68,7 @@ _EDGES = [
 
 
 def test_lpa_matches_python_mirror(spark):
-    edges = spark.createDataFrame(_EDGES, ["subj", "obj"])
-    got = {
-        r["page"]: r["community"]
-        for r in label_propagation(edges, iters=4).collect()
-    }
+    got = _lpa(spark, _EDGES, 4)
     want = _python_lpa(_EDGES, 4)
     assert got == want
     # the two cliques resolve to distinct communities; the island PAIR
@@ -138,16 +153,57 @@ def test_lpa_duckdb_twin_same_assignment(spark):
     """The unrolled-CTE twin reproduces the exact assignment on the hand
     graph — including the oscillation-prone bridge structure — so the
     sf-corpus oracle row is a real check, not a count check."""
-    duckdb = pytest.importorskip("duckdb")
-    con = duckdb.connect()
-    vals = ", ".join(f"('{a}', '{b}')" for a, b in _EDGES)
-    sql = label_propagation_sql_duck(
-        f"SELECT * FROM (VALUES {vals}) AS t(subj, obj)", iters=4
-    )
-    twin = dict(con.execute(sql).fetchall())
-    edges = spark.createDataFrame(_EDGES, ["subj", "obj"])
-    got = {
-        r["page"]: r["community"]
-        for r in label_propagation(edges, iters=4).collect()
-    }
-    assert got == twin
+    assert _lpa(spark, _EDGES, 4) == _twin(_EDGES, 4)
+
+
+# q's four neighbors: r1 and r2 hold "B1" after round 1 (min of q, B1, B2),
+# s1 and s2 hold "a1" (min of q, a1): a 2-2 tie in round 2 that the
+# bytewise order breaks to "B1" (a case-folding order would pick "a1")
+_TIE_EDGES = [
+    ("q", "r1"), ("q", "r2"), ("q", "s1"), ("q", "s2"),
+    ("r1", "B1"), ("r1", "B2"), ("r2", "B1"), ("r2", "B2"),
+    ("s1", "a1"), ("s2", "a1"),
+]
+
+
+def test_lpa_round_two_tie_goes_to_bytewise_smallest(spark):
+    got = _lpa(spark, _TIE_EDGES, 2)
+    assert got["q"] == "B1"
+    assert got == _python_lpa(_TIE_EDGES, 2) == _twin(_TIE_EDGES, 2)
+
+
+def test_lpa_round_one_is_min_neighbor_id(spark):
+    edge_list = _EDGES + _TIE_EDGES
+    nbrs: dict[str, set[str]] = {}
+    for a, b in edge_list:
+        if a != b:
+            nbrs.setdefault(a, set()).add(b)
+            nbrs.setdefault(b, set()).add(a)
+    assert _lpa(spark, edge_list, 1) == {v: min(ns) for v, ns in nbrs.items()}
+
+
+@pytest.mark.parametrize("iters", [0, 1, 4])
+def test_lpa_matches_twin_at_iters(spark, iters):
+    edge_list = _EDGES + _TIE_EDGES
+    got = _lpa(spark, edge_list, iters)
+    assert got == _twin(edge_list, iters) == _python_lpa(edge_list, iters)
+
+
+def test_lpa_job_budget(spark):
+    """One shuffle per round: the adjacency is built once, partitioned on
+    the join key, and each round is one mode(label) vote grouped by node.
+    Before: a per-round (node, label) count, a second per-node pick and an
+    initial-labels distinct ran 19 jobs here."""
+    edges = spark.createDataFrame(_EDGES + _TIE_EDGES, ["subj", "obj"])
+    edges = edges.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "lpa-budget")
+    try:
+        out = label_propagation(edges, iters=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("lpa-budget"))
+    release(out)
+    release(edges)
+    assert jobs <= 13

@@ -388,8 +388,22 @@ def test_fast_parse_differential_on_adversarial_shapes():
         "<title>t</title><p>x</p>",                          # RCDATA special case
         "<em>a</em> <em>b</em>",
     ]
+    # character references: the fast parser claims them and unescapes as
+    # convert_charrefs=True html.parser does
+    charrefs = [
+        "a & b",                                             # bare ampersand
+        "<p>caf&eacute; &amp; cr&egrave;me</p>",             # named
+        "<p>&#233; &#xE9; &#X41; &#0; &#128;</p>",           # numeric, incl. replaced code points
+        "<p>&nosuchref; &#xZZ; &#; &amp x &copy2</p>",       # invalid / unterminated
+        "<p>tail</p>trailing &amp",                          # trailing ref, no ';'
+        "<p>x</p>trailing &",                                # trailing bare '&'
+        "<p>&amp;lt;b&amp;gt; stays text</p>",               # double-escaped
+        "<p>&lt;b&gt;not a tag&lt;/b&gt;</p>",               # refs that spell markup
+        "<a href=\"/p?a=1&amp;b=2\" title='x &lt; y'>l</a>",  # refs in quoted attrs
+        "<img src=/i?a&amp;b alt=caf&eacute;>",              # refs in unquoted attrs
+        "<title>a &amp; b</title><p>x</p>",                  # refs in title text
+    ]
     decline = [
-        "a & b",                                             # charrefs are html.parser's business
         "<!-- comment --><p>x</p>",
         "<!DOCTYPE html><p>x</p>",
         "<script>var x = 1 < 2;</script>",
@@ -401,5 +415,9 @@ def test_fast_parse_differential_on_adversarial_shapes():
         fast = _fast_parse(s)
         if fast is not None:
             _tree_eq(fast, _slow_parse(s))
+    for s in charrefs:
+        fast = _fast_parse(s)
+        assert fast is not None, f"must claim: {s!r}"
+        _tree_eq(fast, _slow_parse(s))
     for s in decline:
         assert _fast_parse(s) is None, f"must decline: {s!r}"
