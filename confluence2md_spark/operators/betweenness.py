@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import adjacency
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 MICROS = 1_000_000
@@ -86,8 +87,6 @@ def _int64_guard(bfs: DataFrame) -> None:
 def betweenness_micros(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
     max_depth: int = 12,
     use_decimal: bool = False,
 ) -> DataFrame:
@@ -106,17 +105,7 @@ def betweenness_micros(
     BIGINT arithmetic: contract graphs are guarded to stay inside it,
     where the two paths are bit-identical.
     """
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
-    adj = (
-        und.select(F.col("x").alias("v"), F.col("y").alias("u"))
-        .unionByName(und.select(F.col("y").alias("v"), F.col("x").alias("u")))
-        .localCheckpoint(eager=True)
-    )
+    adj = adjacency(edges).localCheckpoint(eager=True)
     try:
         nodes = adj.select(F.col("v").alias("page")).distinct()
         s = seeds.select("page").distinct().join(nodes, "page", "semi")

@@ -23,6 +23,8 @@ the connected-components/PageRank loop shape — with the reached set
 only growing. The NULL-as-unreached encoding keeps the relation at
 |V| rows every round (no frontier blow-up bookkeeping);
 min-relaxation is idempotent so stragglers/retries cannot corrupt it.
+The adjacency (operators/graphview) is held as a local checkpoint that
+every round reads.
 
 Unlike the PageRank/LPA loops, each relaxation references the previous
 dist relation TWICE (once for the neighbor candidates, once to keep
@@ -41,32 +43,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from confluence2md_spark.plans.iterate import fixpoint
+from confluence2md_spark.operators.graphview import adjacency
+from confluence2md_spark.plans.iterate import fixpoint, release
 
 
 def seed_distance(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters: int = 6,
+    edges: DataFrame, seeds: DataFrame, iters: int = 6
 ) -> DataFrame:
     """(page, dist) for every node of the undirected simple graph induced
     by `edges`; dist = BFS hops to the nearest row of `seeds` (a `page`
     column), -1 if unreached within `iters` rounds."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .persist()
-    )
+    adj = adjacency(edges).localCheckpoint(eager=False)
 
     def step(dist: DataFrame) -> DataFrame:
         cand = (
@@ -111,7 +98,7 @@ def seed_distance(
             ),
         )
     finally:
-        adj.unpersist()
+        release(adj)
 
 
 def seed_distance_sql_duck(

@@ -3,7 +3,7 @@ propagation (LPA) — the classic near-linear community algorithm
 (Raghavan et al. 2007), here in its DETERMINISTIC contract variant:
 
 - the graph is undirected + simple (self-loops dropped, one edge per
-  unordered pair), derived from any (src, dst) relation;
+  unordered pair), derived from any (subj, obj) relation;
 - label(v) starts as v's own id;
 - every round, SYNCHRONOUSLY, each node adopts the label that the most
   neighbors held LAST round, breaking count ties by the smallest label
@@ -20,10 +20,11 @@ community) assignment is hash-exact against an unrolled-CTE DuckDB
 twin (one CTE per round; SQL recursion can't aggregate in the
 recursive term).
 
-Scale shape: the adjacency (both directions of the de-looped edges, one
-row per pair) is built once, hash-partitioned on its join key u, and
-persisted. Round 1 needs no join, since every neighbor still holds its
-own id: it is the min neighbor id. Each later round joins the labels
+Scale shape: the adjacency (operators/graphview: both directions of the
+de-looped edges, one row per pair) is built once, hash-partitioned on its
+join key u, and held as a local checkpoint. Round 1 needs no join,
+since every neighbor still holds its own id: it is the min neighbor id.
+Each later round joins the labels
 onto the adjacency's partitioning and takes a deterministic
 mode(label) per node: the most frequent label, ties to the lowest, in
 one aggregate. That is one shuffle per round, keyed on node ids, never
@@ -44,31 +45,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import adjacency, undirected
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters: int = 4,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     """(page, community) after `iters` synchronous LPA rounds over the
     undirected simple graph induced by `edges`. Deterministic: max
     neighbor-label count wins, ties to the bytewise-smallest label.
     Nodes whose only edges are self-loops drop out (both engines derive
     the node set from the de-looped edge list)."""
-    und = edges.select(F.col(src).alias("v"), F.col(dst).alias("u")).filter(
-        F.col("v") != F.col("u")
-    )
-    # both directions, one row per (v, u); the distinct reuses the u
-    # partitioning, so building the adjacency is one exchange
-    adj = (
-        und.unionByName(und.select(F.col("u").alias("v"), F.col("v").alias("u")))
-        .repartition("u")
-        .distinct()
-        .persist()
-    )
+    adj = adjacency(edges).localCheckpoint(eager=False)
 
     def step(labels: DataFrame) -> DataFrame:
         return (
@@ -95,15 +82,10 @@ def label_propagation(
             ),
         )
     finally:
-        adj.unpersist()
+        release(adj)
 
 
-def modularity_micros(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters: int = 4,
-) -> DataFrame:
+def modularity_micros(edges: DataFrame, iters: int = 4) -> DataFrame:
     """Newman modularity of the label-propagation partition, in exact
     integer micros — the standard "are these communities real structure"
     metric, reported per community so the contract states every row:
@@ -123,18 +105,10 @@ def modularity_micros(
 
     Returns (community, n_nodes, m_intra, d_sum, q_micros), unordered.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
+    und = undirected(edges).localCheckpoint(eager=False)
     comm = None
     try:
-        comm = label_propagation(und, src="a", dst="b", iters=iters)
+        comm = label_propagation(edges, iters=iters)
         m_rel = und.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
         deg = (
             und.select(F.col("a").alias("page"))
@@ -182,7 +156,7 @@ def modularity_micros(
     finally:
         if comm is not None:
             release(comm)
-        und.unpersist()
+        release(und)
 
 
 def modularity_sql_duck(edges_cte_body: str, iters: int = 4) -> str:

@@ -31,34 +31,39 @@ from confluence2md_spark.operators.communities import (
     label_propagation_sql_duck,
 )
 from confluence2md_spark.operators.graph import pagerank_micros, pagerank_sql_duck
+from confluence2md_spark.plans.iterate import release
 
 
 def community_pagerank_rollup(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters_lpa: int = 4,
-    iters_pr: int = 5,
+    edges: DataFrame, iters_lpa: int = 4, iters_pr: int = 5
 ) -> DataFrame:
     """(community, n_pages, rank_mass_micros, top_page, top_rank_micros)
-    per LPA community, unordered.
+    per LPA community, unordered, as an eager local checkpoint (the two
+    operator results it joins are released before returning).
 
     The community assignment covers the de-looped undirected node set
     (LPA's contract); the inner join therefore scopes the rollup to those
     nodes — a self-loop-only page has no community and is excluded, in
     both engines."""
-    comm = label_propagation(edges, src=src, dst=dst, iters=iters_lpa)
-    ranks = pagerank_micros(edges, src=src, dst=dst, iters=iters_pr, topk=None)
-    j = comm.join(ranks, "page")
-    return (
-        j.groupBy("community")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pages"),
-            F.sum("rank_micros").cast("bigint").alias("rank_mass_micros"),
-            F.expr("min_by(page, struct(-rank_micros, page))").alias("top_page"),
-            F.max("rank_micros").cast("bigint").alias("top_rank_micros"),
+    comm = label_propagation(edges, iters=iters_lpa)
+    ranks = None
+    try:
+        ranks = pagerank_micros(edges, iters=iters_pr, topk=None)
+        return (
+            comm.join(ranks, "page")
+            .groupBy("community")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_pages"),
+                F.sum("rank_micros").cast("bigint").alias("rank_mass_micros"),
+                F.expr("min_by(page, struct(-rank_micros, page))").alias("top_page"),
+                F.max("rank_micros").cast("bigint").alias("top_rank_micros"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
+    finally:
+        release(comm)
+        if ranks is not None:
+            release(ranks)
 
 
 def community_rollup_sql_duck(

@@ -16,9 +16,10 @@ study). Classic simplifications, mirrored in both engines: simple graph
 
 Scale shape: each iteration is (edges ⋈ ranks on src) -> groupBy(dst) —
 one shuffle per iteration keyed on node ids (never strings longer than the
-id), with edges/outdeg persisted once and reused across iterations (and
-unpersisted before returning — long-lived sessions like the contract driver
-would otherwise leak cached blocks across queries). The iterations run
+id). The edge view and its node list (operators/graphview) are held as
+local checkpoints, read by every iteration and released before returning
+(long-lived sessions like the contract driver would otherwise leak cached
+blocks across queries). The iterations run
 through plans/iterate.fixpoint, which localCheckpoints the ranks every 5
 iterations (each reads the previous ranks once, so the plan between
 checkpoints stays 5 joins deep) and frees every superseded checkpoint.
@@ -29,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import directed, node_ids
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 DAMPING_MICROS = 850_000
@@ -91,28 +93,15 @@ def _uniform_base(nodes: DataFrame) -> DataFrame:
 
 
 def pagerank_micros(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters: int = 5,
-    topk: int | None = None,
+    edges: DataFrame, iters: int = 5, topk: int | None = None
 ) -> DataFrame:
     """(page, rank_micros) after `iters` exact-integer power iterations.
 
-    `edges` is any (src, dst) relation; duplicates are dropped. If `topk`
+    `edges` is any (subj, obj) relation; duplicates are dropped. If `topk`
     is set, returns the top-k by (rank desc, page asc).
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("page"))
-        .unionByName(e.select(F.col("dst").alias("page")))
-        .distinct()
-        .persist()
-    )
+    e = directed(edges).localCheckpoint(eager=False)
+    nodes = node_ids(e).localCheckpoint(eager=False)
     try:
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         return _rank_iterate(
@@ -120,8 +109,8 @@ def pagerank_micros(
             "pagerank",
         )
     finally:
-        e.unpersist()
-        nodes.unpersist()
+        release(e)
+        release(nodes)
 
 
 def pagerank_sql_duck(
@@ -162,8 +151,6 @@ ORDER BY rank_micros DESC, page ASC LIMIT {topk}"""
 
 def weighted_pagerank_micros(
     edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
     weight: str = "w",
     iters: int = 5,
     topk: int | None = None,
@@ -178,25 +165,15 @@ def weighted_pagerank_micros(
     Same exact-integer discipline as pagerank_micros (DIV-only, dangling
     mass leaks, bit-identical under any aggregation order); per-edge
     multiplication keeps int64 headroom (rank ~1e6-scale × bounded
-    multiplicity). Duplicate (src, dst) rows are summed into one weighted
+    multiplicity). Duplicate (subj, obj) rows are summed into one weighted
     edge. One node-id-keyed shuffle per iteration, iterated like the
     unweighted loop."""
     e = (
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("bigint").alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .persist()
+        edges.groupBy(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+        .agg(F.sum(F.col(weight).cast("bigint")).alias("w"))
+        .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("src").alias("page"))
-        .unionByName(e.select(F.col("dst").alias("page")))
-        .distinct()
-        .persist()
-    )
+    nodes = node_ids(e).localCheckpoint(eager=False)
     try:
         outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
         return _rank_iterate(
@@ -204,8 +181,8 @@ def weighted_pagerank_micros(
             topk, "weighted pagerank",
         )
     finally:
-        e.unpersist()
-        nodes.unpersist()
+        release(e)
+        release(nodes)
 
 
 def weighted_pagerank_sql_duck(
@@ -240,11 +217,7 @@ ORDER BY rank_micros DESC, page ASC LIMIT {topk}"""
 
 
 def hits_micros(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters: int = 4,
-    topk: int | None = None,
+    edges: DataFrame, iters: int = 4, topk: int | None = None
 ) -> DataFrame:
     """Kleinberg HITS (hubs & authorities) on the DIRECTED edge set, in
     exact integer micros:
@@ -283,17 +256,8 @@ def hits_micros(
     plans/iterate.release), so peak cache is two node-sized relations.
     This loop stays outside plans/iterate.fixpoint: a step carries two
     relations and materializes twice, once per half-step."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("page"))
-        .unionByName(e.select(F.col("dst").alias("page")))
-        .distinct()
-        .persist()
-    )
+    e = directed(edges).localCheckpoint(eager=False)
+    nodes = node_ids(e).localCheckpoint(eager=False)
     ckpts: list[DataFrame] = []
 
     def _norm(rel: DataFrame, col: str) -> DataFrame:
@@ -357,10 +321,8 @@ def hits_micros(
             ).limit(topk)
         return out.localCheckpoint(eager=True)
     finally:
-        for c in ckpts:
+        for c in (*ckpts, e, nodes):
             release(c)
-        e.unpersist()
-        nodes.unpersist()
 
 
 def hits_sql_duck(edges_cte_body: str, iters: int = 4, topk: int = 20) -> str:
@@ -414,8 +376,6 @@ ORDER BY a.auth DESC, a.page ASC LIMIT {topk}"""
 def personalized_pagerank_micros(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
     iters: int = 5,
     topk: int | None = None,
 ) -> DataFrame:
@@ -432,17 +392,8 @@ def personalized_pagerank_micros(
     collect). Dangling mass leaks, duplicates dropped — mirrored exactly
     in the unrolled-CTE DuckDB twin. One node-id-keyed shuffle per
     iteration, iterated like the uniform loop."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("page"))
-        .unionByName(e.select(F.col("dst").alias("page")))
-        .distinct()
-        .persist()
-    )
+    e = directed(edges).localCheckpoint(eager=False)
+    nodes = node_ids(e).localCheckpoint(eager=False)
     base_rel = None
     try:
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -478,17 +429,16 @@ def personalized_pagerank_micros(
                 .cast("bigint")
                 .alias("init_micros"),
             )
-            .persist()
+            .localCheckpoint(eager=False)
         )
         return _rank_iterate(
             e, outdeg, "rank_micros DIV d", base_rel, iters, topk,
             "personalized pagerank",
         )
     finally:
-        e.unpersist()
-        nodes.unpersist()
-        if base_rel is not None:
-            base_rel.unpersist()
+        for df in (e, nodes, base_rel):
+            if df is not None:
+                release(df)
 
 
 def personalized_pagerank_sql_duck(

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import undirected
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 
@@ -46,8 +47,6 @@ def _degrees(und: DataFrame) -> DataFrame:
 def kcore(
     edges: DataFrame,
     k: int = 2,
-    src: str = "subj",
-    dst: str = "obj",
     max_rounds: int = 12,
 ) -> DataFrame:
     """Nodes of the k-core of the undirected simple view of `edges`.
@@ -66,13 +65,7 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected(edges).localCheckpoint(eager=True)
 
     def peel(alive: DataFrame) -> DataFrame:
         keep = _degrees(alive).filter(F.col("d") >= k).select("n")

@@ -151,7 +151,6 @@ def token_block_pairs(
     threshold: float = 0.8,
     max_token_df: int = 100,
     num_partitions: int | None = None,
-    exact_fallback: bool = True,
 ) -> DataFrame:
     """(src, dst, jaccard) pairs with exact token-set Jaccard >= threshold,
     via a df-capped inverted index — the SHORT-STRING candidate generator.
@@ -169,8 +168,8 @@ def token_block_pairs(
     Recall accounting (same discipline as `band_join`'s mega-bucket cap): a pair
     whose shared tokens are ALL hot is dropped — for small token sets such
     a pair has high Jaccard only if the strings are (near-)identical, and
-    byte-identical texts are always caught by the `exact_fallback` star
-    join on the full token-sequence hash, which ignores the df cap.
+    byte-identical texts are always caught by the exact star fallback on
+    the full token-sequence hash, which ignores the df cap.
     Long documents use `lsh_candidate_pairs`: their shingle sets are
     large, so an inverted index would explode while banding concentrates.
     """
@@ -207,8 +206,6 @@ def token_block_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("src", "dst", "jaccard")
     )
-    if not exact_fallback:
-        return pairs.dropDuplicates(["src", "dst"])
     # exact star fallback, likewise as one window pass over the hash
     we = Window.partitionBy("eh")
     star = (

@@ -44,34 +44,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import adjacency
+from confluence2md_spark.plans.iterate import release
+
 # 1e12 DIV ln_micros(deg): integer Adamic-Adar contribution of one middle
 _TERM_SQL = "CAST(1000000000000 DIV CAST(floor(1000000 * ln(d)) AS BIGINT) AS BIGINT)"
 
 
 def link_prediction(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    max_degree: int = 64,
-    topk: int = 50,
+    edges: DataFrame, max_degree: int = 64, topk: int = 50
 ) -> DataFrame:
     """(a, b, common_neighbors, aa_micros) for the `topk` non-adjacent
     unordered pairs of the undirected simple graph induced by `edges`,
     ranked by (aa_micros desc, a asc, b asc). Middle nodes with degree
     > `max_degree` contribute to neither score (capped contract)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
+    adj = adjacency(edges).localCheckpoint(eager=False)
     try:
-        adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-            und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-        )
         deg = adj.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
         # d >= 2 BEFORE the term projection: degree-1 nodes can never be
         # wedge middles (a middle touches two distinct neighbors), so the
@@ -96,14 +84,19 @@ def link_prediction(
                 F.count(F.lit(1)).cast("bigint").alias("common_neighbors"),
                 F.sum("term").cast("bigint").alias("aa_micros"),
             )
-            .join(und, ["a", "b"], "left_anti")
+            # the adjacency holds both directions, so (a, b) is an edge
+            # iff it holds (v=a, u=b)
+            .join(
+                adj.select(F.col("v").alias("a"), F.col("u").alias("b")),
+                ["a", "b"],
+                "left_anti",
+            )
             .orderBy(F.desc("aa_micros"), F.asc("a"), F.asc("b"))
             .limit(topk)
         )
-        out = scored.localCheckpoint(eager=True)
+        return scored.localCheckpoint(eager=True)
     finally:
-        und.unpersist()
-    return out
+        release(adj)
 
 
 def link_prediction_sql_duck(

@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import directed, node_ids
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 
@@ -75,22 +76,16 @@ def _unchanged(col: str):
     return probe
 
 
-def scc(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    max_rounds: int = 64,
-) -> DataFrame:
+def scc(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     """(page, scc_id) for every node of the directed simple graph induced
     by `edges`; scc_id is the minimum page id of the component.
     Unordered. Raises RuntimeError if the coloring peel exhausts
     `max_rounds` total inner iterations before the active set empties.
     """
     e_all = (
-        edges.filter(F.col(src) != F.col(dst))
-        .select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .distinct()
-        .persist()
+        directed(edges)
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=False)
     )
     budget = max_rounds
 
@@ -100,14 +95,14 @@ def scc(
         budget -= 1
         cand = (
             e_all.join(
-                color.select(F.col("page").alias("s"), F.col("color").alias("cu")),
-                "s",
+                color.select(F.col("page").alias("src"), F.col("color").alias("cu")),
+                "src",
             )
-            .groupBy("t")
+            .groupBy("dst")
             .agg(F.min("cu").alias("cand"))
         )
         return color.join(
-            cand.withColumnRenamed("t", "page"), "page", "left"
+            cand.withColumnRenamed("dst", "page"), "page", "left"
         ).select(
             "page",
             F.least(F.col("color"), F.coalesce("cand", F.col("color"))).alias(
@@ -122,11 +117,11 @@ def scc(
         cand = (
             e_all.join(
                 mark.filter(F.col("m")).select(
-                    F.col("page").alias("t"), F.col("color").alias("ct")
+                    F.col("page").alias("dst"), F.col("color").alias("ct")
                 ),
-                "t",
+                "dst",
             )
-            .select(F.col("s").alias("page"), F.col("ct").alias("color"))
+            .select(F.col("src").alias("page"), F.col("ct").alias("color"))
             .distinct()
             .withColumn("_hit", F.lit(True))
         )
@@ -139,10 +134,8 @@ def scc(
     labels = None
     try:
         labels = (
-            e_all.select(F.col("s").alias("page"))
-            .unionByName(e_all.select(F.col("t").alias("page")))
-            .distinct()
-            .select("page", F.lit(None).cast(dict(e_all.dtypes)["s"]).alias("scc_id"))
+            node_ids(e_all)
+            .select("page", F.lit(None).cast(dict(e_all.dtypes)["src"]).alias("scc_id"))
             .localCheckpoint(eager=True)
         )
         while True:
@@ -186,7 +179,7 @@ def scc(
     finally:
         if labels is not None:
             release(labels)
-        e_all.unpersist()
+        release(e_all)
 
 
 def scc_sql_duck(edges_cte_body: str) -> str:

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..plans.iterate import release
 from .banding import band_join
 
 
@@ -166,20 +167,26 @@ def _hyperplane_bands(
 ) -> tuple[DataFrame, int]:
     """(id, band, key, v) rows, one per vector and hash table — `key` is
     the vector's sign-pattern bucket in table `band` — and the bits per
-    table used. `dim=None` probes the actual embedding length (one row);
-    an explicit `dim` is asserted against the data. `bits=None` sizes the
-    tables from the corpus count (auto_lsh_bits)."""
+    table used. `dim=None` probes the actual embedding length; an explicit
+    `dim` is asserted against the data. `bits=None` sizes the tables from
+    the corpus count (auto_lsh_bits). Whatever of these is needed comes
+    from one aggregate job."""
+    size = F.size(vec_col)
+    probes = [
+        (F.max(size) if dim is None else F.count(F.when(size != dim, 1))).alias("d")
+    ]
+    if bits is None:
+        probes.append(F.count(F.lit(1)).alias("n"))
+    row = embeddings.agg(*probes).first()
     if dim is None:
-        probe = embeddings.select(F.size(vec_col).alias("d")).first()
-        dim = 1 if probe is None else int(probe["d"])  # empty: any dim works
+        dim = 1 if row["d"] is None else int(row["d"])  # empty: any dim works
     else:
-        n_bad = embeddings.filter(F.size(vec_col) != dim).limit(1).count()
-        assert n_bad == 0, (
+        assert row["d"] == 0, (
             f"lsh_ann_topk: explicit dim={dim} does not match the embedding "
             f"column length — buckets would silently collapse to 0"
         )
     if bits is None:
-        bits = auto_lsh_bits(embeddings.count())
+        bits = auto_lsh_bits(row["n"])
     base = embeddings.repartition(
         embeddings.sparkSession.sparkContext.defaultParallelism
     ).select(
@@ -523,26 +530,38 @@ def embedding_near_dup_lsh(
 
     Bounded driver check: subset of the exact cosine>=threshold pair set +
     recall >= 0.9 (bounded_checks); the recall contract on clusterable data
-    is pinned in pytest."""
+    is pinned in pytest.
+
+    EAGER: the result is a local checkpoint, owned by the caller. The
+    sketched (id, band, key, v) rows are held once as a local checkpoint,
+    so both self-join sides, the cap census and its count read one
+    sketch instead of each re-running the matmul; it is released before
+    returning."""
     import logging
 
     hashed, _ = _hyperplane_bands(
         embeddings, bits, tables, None, seed, id_col, vec_col
     )
-    cand, dropped = band_join(hashed, carry=["v"], max_bucket=max_bucket_size)
-    n_dropped = dropped.count()
-    if n_dropped:
-        logging.getLogger(__name__).warning(
-            "embedding_near_dup_lsh: dropping %d oversized buckets "
-            "(> %d vectors) from the self-join — raise bits or dedup the "
-            "degenerate vectors (e.g. all-zero embeddings) upstream",
-            n_dropped,
-            max_bucket_size,
+    hashed = hashed.localCheckpoint(eager=False)
+    try:
+        cand, dropped = band_join(hashed, carry=["v"], max_bucket=max_bucket_size)
+        n_dropped = dropped.count()
+        if n_dropped:
+            logging.getLogger(__name__).warning(
+                "embedding_near_dup_lsh: dropping %d oversized buckets "
+                "(> %d vectors) from the self-join — raise bits or dedup the "
+                "degenerate vectors (e.g. all-zero embeddings) upstream",
+                n_dropped,
+                max_bucket_size,
+            )
+        cos = F.round(cosine_col(F.col("v_a"), F.col("v_b")), 6)
+        return (
+            cand.select("src", "dst", cos.alias("cosine"))
+            .filter(F.col("cosine") >= threshold)
+            .localCheckpoint(eager=True)
         )
-    cos = F.round(cosine_col(F.col("v_a"), F.col("v_b")), 6)
-    return cand.select("src", "dst", cos.alias("cosine")).filter(
-        F.col("cosine") >= threshold
-    )
+    finally:
+        release(hashed)
 
 
 def embedding_near_dup_sql_duck(emb: str = "embeddings", threshold: float = 0.95) -> str:

@@ -21,9 +21,9 @@ O(sqrt(m)) (a node keeps only edges toward HIGHER-degree neighbors, and
 there can be at most 2*sqrt(m) nodes of degree >= sqrt(m)), so the wedge
 relation is bounded by m^{3/2} instead of sum(deg^2) — the curse-of-the-
 last-reducer hub blowup never happens. All joins shuffle on node ids only;
-nothing is collected to the driver; the oriented edge relation is persisted
-once, reused for wedge-build and wedge-close, and unpersisted before
-returning (contract-driver sessions are long-lived).
+nothing is collected to the driver; the oriented edge relation is held
+once as a local checkpoint, reused for wedge-build and wedge-close, and
+released before returning (contract-driver sessions are long-lived).
 
 Everything is exact integer arithmetic, so a DuckDB oracle can state the
 result bit-for-bit; the local clustering coefficient is reported in micros
@@ -36,10 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import undirected
+from confluence2md_spark.plans.iterate import release
 
-def triangle_participation(
-    edges: DataFrame, src: str = "subj", dst: str = "obj"
-) -> DataFrame:
+
+def triangle_participation(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation over the undirected view of `edges`.
 
     Returns (node, n_tri, degree, cc_micros) for every node in >= 1
@@ -47,12 +48,7 @@ def triangle_participation(
     undirected degree; `cc_micros` is the local clustering coefficient
     floor(2e6 * n_tri / (degree * (degree - 1))) as BIGINT micros.
     """
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-    )
+    und = undirected(edges)
 
     deg = (
         und.select(F.col("a").alias("n"))
@@ -71,7 +67,7 @@ def triangle_participation(
         F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("s"),
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("t"),
         F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dt"),
-    ).persist()
+    ).localCheckpoint(eager=False)
 
     try:
         e1 = e.select(F.col("s"), F.col("t").alias("y"), F.col("dt").alias("dy"))
@@ -102,16 +98,15 @@ def triangle_participation(
                 ),
             )
         )
-        # Materialize before unpersisting e (out's plan reads e twice).
-        out = out.localCheckpoint(eager=True)
+        # Materialize before releasing e (out's plan reads e twice).
+        return out.localCheckpoint(eager=True)
     finally:
-        e.unpersist()
-    return out
+        release(e)
 
 
-def triangle_total(edges: DataFrame, src: str = "subj", dst: str = "obj") -> int:
+def triangle_total(edges: DataFrame) -> int:
     """Global triangle count (each triangle once) — small helper for tests."""
-    rows = triangle_participation(edges, src, dst).agg(
+    rows = triangle_participation(edges).agg(
         F.sum("n_tri").alias("s")
     ).collect()
     s = rows[0]["s"] or 0

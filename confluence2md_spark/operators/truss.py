@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.graphview import undirected
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 
@@ -88,8 +89,6 @@ def _support(alive: DataFrame) -> DataFrame:
 def ktruss(
     edges: DataFrame,
     k: int = 4,
-    src: str = "subj",
-    dst: str = "obj",
     max_rounds: int = 12,
 ) -> DataFrame:
     """Edges of the k-truss of the undirected simple view of `edges`.
@@ -101,13 +100,7 @@ def ktruss(
     """
     if k < 3:
         raise ValueError(f"k must be >= 3, got {k}")
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected(edges).localCheckpoint(eager=True)
 
     def peel(alive: DataFrame) -> DataFrame:
         return (

@@ -21,6 +21,13 @@ no operator hand-rolls them:
   drop every cache the loop read from. When the last state already is
   that checkpoint, it is handed over as is (no second copy).
 
+The relation a loop re-reads every step (its graph view from
+operators/graphview, or a relation built on it) is not the loop state
+and is held by the operator, in the same one way: a local checkpoint,
+freed with `release` in the operator's `finally`. No graph operator
+uses `persist`: a persisted relation keeps its child's plan, and every
+reference to it carries that plan again.
+
 Order within a step: `new = step(state)`, then the checkpoint if one is
 due, then `converged(state, new)` — a convergence probe (usually a
 count) therefore reads the fresh checkpoint instead of recomputing the

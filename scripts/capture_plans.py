@@ -36,7 +36,7 @@ def main() -> int:
     from confluence2md_spark.session import get_spark
     import __spark_entry__ as e
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()  # width from the machine; SPARK_GRAFT_CPUS overrides
     qs = e.queries()
     sections = [
         ("q1_pricing_summary",
@@ -68,7 +68,7 @@ def main() -> int:
          "stats re-enter as broadcasts; text never in an Exchange"),
         ("kg_pagerank",
          "exact-integer power iteration: one node-id-keyed exchange per "
-         "iteration over the persisted distinct edge set"),
+         "iteration over the distinct edge view, held as a local checkpoint"),
         ("events_asof_purchase_view",
          "as-of join as union + carry-forward window: ONE exchange on the "
          "key, no range-join explosion"),

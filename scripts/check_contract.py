@@ -83,7 +83,7 @@ def main():
     from confluence2md_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()  # width from the machine; SPARK_GRAFT_CPUS overrides
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

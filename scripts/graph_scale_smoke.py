@@ -32,7 +32,7 @@ def main() -> int:
     from confluence2md_spark.operators.scc import scc
     from confluence2md_spark.session import get_spark
 
-    spark = get_spark(master="local[16]", shuffle_partitions=32)
+    spark = get_spark()  # width from the machine; SPARK_GRAFT_CPUS overrides
     out: dict = {"n_nodes": n_nodes, "n_edges": n_edges, "n_seeds": n_seeds}
 
     # deterministic digraph: endpoints from xxhash64(i), plus a planted

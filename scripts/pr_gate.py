@@ -55,9 +55,9 @@ def emitted_triples(sf_dir: str) -> set[tuple]:
     from confluence2md_spark.session import get_spark
     from confluence2md_spark.sources.corpus import synth_raw_files
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()  # width from the machine; SPARK_GRAFT_CPUS overrides
     raw = synth_raw_files(spark, sf_dir)
-    pages = convert_pages(raw, num_partitions=8)
+    pages = convert_pages(raw, num_partitions=spark.sparkContext.defaultParallelism)
     triples = extract_all_triples(pages).select("subj", "pred", "obj")
     out = {tuple(r) for r in triples.collect()}
     spark.stop()

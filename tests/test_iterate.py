@@ -21,6 +21,7 @@ from confluence2md_spark.operators.communities import (
     label_propagation,
     modularity_micros,
 )
+from confluence2md_spark.operators.communityrollup import community_pagerank_rollup
 from confluence2md_spark.operators.components import connected_components
 from confluence2md_spark.operators.containment import containment_pairs
 from confluence2md_spark.operators.dedup import (
@@ -34,6 +35,7 @@ from confluence2md_spark.operators.graph import (
     weighted_pagerank_micros,
 )
 from confluence2md_spark.operators.kcore import kcore
+from confluence2md_spark.operators.linkpred import link_prediction
 from confluence2md_spark.operators.portable_dedup import (
     minhash_portable_pairs,
     simhash_portable_pairs,
@@ -43,6 +45,7 @@ from confluence2md_spark.operators.similarity import (
     embedding_near_dup_lsh,
     planted_cluster_vectors,
 )
+from confluence2md_spark.operators.triangles import triangle_participation
 from confluence2md_spark.operators.truss import ktruss
 from confluence2md_spark.plans.iterate import fixpoint, release
 
@@ -68,6 +71,9 @@ _OPS = {
     "kcore": lambda g: kcore(g.edges, k=2),
     "ktruss": lambda g: ktruss(g.edges, k=3),
     "scc": lambda g: scc(g.edges.filter("subj >= 'p'")),
+    "triangles": lambda g: triangle_participation(g.edges),
+    "link_prediction": lambda g: link_prediction(g.edges, topk=20),
+    "community_rollup": lambda g: community_pagerank_rollup(g.edges),
     "cc_distributed": lambda g: connected_components(
         g.edges, src="subj", dst="obj", driver_max_edges=0
     ),
@@ -137,6 +143,43 @@ def test_near_dup_operator_leaves_only_its_result(spark, sf_dir, op):
     out = _NEAR_DUP[op](docs, emb)
     assert len(out.collect()) > 0
     assert _left_behind(spark, marker, out) == []
+
+
+# the modules of the graph operators, and the operators among them that
+# read the KG edge relation (subj, obj) through operators/graphview
+_GRAPH_MODULES = (
+    "betweenness", "bfs", "communities", "communityrollup", "components",
+    "graph", "graphview", "kcore", "linkpred", "scc", "triangles", "truss",
+)
+_VIEW_READERS = {
+    "pagerank_micros", "weighted_pagerank_micros",
+    "personalized_pagerank_micros", "hits_micros", "label_propagation",
+    "modularity_micros", "community_pagerank_rollup", "seed_distance",
+    "kcore", "ktruss", "scc", "triangle_participation", "triangle_total",
+    "link_prediction", "betweenness_micros",
+}
+
+
+def test_graph_operators_hold_one_view_one_way():
+    """The graph operators hold what their loops re-read as local
+    checkpoints (no `.persist(`/`.unpersist(` in their modules), and the
+    ones reading the edge relation take no `src`/`dst` column names."""
+    import ast
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parent.parent / "confluence2md_spark" / "operators"
+    caches, params, seen = [], [], set()
+    for mod in _GRAPH_MODULES:
+        for node in ast.walk(ast.parse((ops / f"{mod}.py").read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in ("persist", "unpersist"):
+                caches.append(f"{mod}.py:{node.lineno}")
+            if isinstance(node, ast.FunctionDef) and node.name in _VIEW_READERS:
+                seen.add(node.name)
+                args = {a.arg for a in node.args.args + node.args.kwonlyargs}
+                params += [f"{node.name}({a})" for a in sorted(args & {"src", "dst"})]
+    assert caches == []
+    assert params == []
+    assert seen == _VIEW_READERS
 
 
 def test_raising_peel_leaves_nothing(spark, graph):
