@@ -1437,9 +1437,8 @@ def _dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _total_order(
-        ngram_jaccard_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
-    )
+    pairs, _ = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
+    return _total_order(pairs, "src", "dst")
 
 
 def _dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1707,9 +1706,8 @@ def _text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS overlap report: pairs sharing >= 5 winnowed fingerprints (24
     pairs at sf0.01 — the sketch-level view of the 25 containment pairs)."""
-    return _total_order(
-        winnow_overlap_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
-    )
+    pairs, _ = winnow_overlap_pairs(_t(spark, sf_dir, "documents"))
+    return _total_order(pairs, "src", "dst")
 
 
 def _nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1782,9 +1780,8 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment near-dup (operators/containment.py):
     inverted-index candidates + exact verify; 50 directed rows at
     sf0.01's planted duplicates."""
-    return _total_order(
-        containment_pairs(_t(spark, sf_dir, "documents")), "src", "dst"
-    )
+    pairs, _ = containment_pairs(_t(spark, sf_dir, "documents"))
+    return _total_order(pairs, "src", "dst")
 
 
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,13 +14,14 @@ have *different* lengths by construction and never share a length block:
 
   1. per-doc distinct word n-grams, hashed to 64-bit at scan time;
   2. document-frequency cap: grams with df > max_df are dropped from the
-     index (stopword-gram cut — at 100 TB the common grams are exactly
-     the ones that would make the co-occurrence join quadratic); docs
-     sharing ONLY ultra-common grams are not containment candidates
-     worth the quadratic term, the same logged-drop trade the LSH
+     index and returned (stopword-gram cut — at 100 TB the common grams
+     are exactly the ones that would make the co-occurrence join
+     quadratic); docs sharing ONLY ultra-common grams are not containment
+     candidates worth the quadratic term, the same trade the LSH
      mega-bucket cap makes;
   3. candidate pairs = pairs sharing >= min_shared surviving grams
-     (groupBy count on the co-occurrence join);
+     (`banding.band_join` over the postings: the cap, the co-occurrence
+     self-join and the per-pair count in one place);
   4. exact verify: full gram sets joined back for candidates only,
      containment stated in both directions as exact floor-micros.
 
@@ -40,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .banding import band_join
 
 NGRAM_N = 3
 CONTAIN_THRESHOLD_MICROS = 800_000
@@ -68,10 +71,12 @@ def containment_pairs(
     threshold_micros: int = CONTAIN_THRESHOLD_MICROS,
     max_df: int = MAX_DF,
     min_shared: int = MIN_SHARED,
-) -> DataFrame:
-    """(src, dst, cont_micros) directed rows, unordered, where src's gram
-    set is >= threshold contained in dst's. Both directions of a candidate
-    pair are tested; a pair of exact duplicates emits two rows."""
+) -> tuple[DataFrame, DataFrame]:
+    """(pairs, dropped): `pairs` is (src, dst, cont_micros) directed rows,
+    unordered, where src's gram set is >= threshold contained in dst's.
+    Both directions of a candidate pair are tested; a pair of exact
+    duplicates emits two rows. `dropped` is the lazy (gram_h, rows)
+    relation of the grams over the df cap."""
     p = docs.sparkSession.sparkContext.defaultParallelism
     # scanned by the index explode AND twice by verify; all three reads
     # share the round-robin exchange (small parquet arrives as 1 partition)
@@ -83,45 +88,31 @@ def containment_pairs(
         "id",
         F.explode(F.transform("grams", lambda g: F.xxhash64(g))).alias("gram_h"),
     )
-    df_counts = idx.groupBy("gram_h").agg(F.count(F.lit(1)).alias("df"))
-    idx_rare = idx.join(
-        df_counts.filter(F.col("df") <= max_df).select("gram_h"), "gram_h"
-    )
-    cand = (
-        idx_rare.alias("a")
-        .join(
-            idx_rare.alias("b"),
-            (F.col("a.gram_h") == F.col("b.gram_h"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"))
-        .agg(F.count(F.lit(1)).alias("shared_rare"))
-        .filter(F.col("shared_rare") >= min_shared)
-    )
+    shared, dropped = band_join(idx, max_bucket=max_df)
+    cand = shared.filter(F.col("n_shared") >= min_shared)
     verified = (
-        cand.join(base.select(F.col("id").alias("ia"), F.col("grams").alias("ga")), "ia")
-        .join(base.select(F.col("id").alias("ib"), F.col("grams").alias("gb")), "ib")
+        cand.join(base.select(F.col("id").alias("src"), F.col("grams").alias("ga")), "src")
+        .join(base.select(F.col("id").alias("dst"), F.col("grams").alias("gb")), "dst")
         .select(
-            "ia",
-            "ib",
+            "src",
+            "dst",
             F.size(F.array_intersect("ga", "gb")).alias("inter"),
             F.size("ga").alias("na"),
             F.size("gb").alias("nb"),
         )
     )
     a_in_b = verified.select(
-        F.col("ia").alias("src"),
-        F.col("ib").alias("dst"),
+        "src",
+        "dst",
         F.expr("CAST(inter AS BIGINT) * 1000000 DIV na").alias("cont_micros"),
     )
     b_in_a = verified.select(
-        F.col("ib").alias("src"),
-        F.col("ia").alias("dst"),
+        F.col("dst").alias("src"),
+        F.col("src").alias("dst"),
         F.expr("CAST(inter AS BIGINT) * 1000000 DIV nb").alias("cont_micros"),
     )
-    return a_in_b.unionByName(b_in_a).filter(
-        F.col("cont_micros") >= threshold_micros
-    )
+    pairs = a_in_b.unionByName(b_in_a).filter(F.col("cont_micros") >= threshold_micros)
+    return pairs, dropped
 
 
 def containment_sql_duck(

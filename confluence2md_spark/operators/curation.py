@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.textstats import TOKENS_SQL_DUCK, tokens_col
-from .dedup import _word_ngrams
+from .linking import shingle_hashes_col
 
 # ------------------------------------------------------- decontamination ---
 
@@ -52,17 +52,18 @@ def decontaminate(
     """(doc_id, n_grams, n_hit_grams, contaminated) — per-document count of
     DISTINCT word n-grams that also appear anywhere in the benchmark set.
 
-    Gram identity is the xxhash64 of the n-token hash slice (same hashed
-    shingle scheme as dedup — grams are never materialized as strings).
+    Gram identity is the xxhash64 of the n-token hash slice
+    (`linking.shingle_hashes_col`, the shingles of the n-gram Jaccard and
+    MinHash paths — grams are never materialized as strings).
     The benchmark gram set is broadcast; Spark's join then stays map-side.
     """
     bench_grams = (
-        bench.select(F.explode(_word_ngrams(F.col(bench_text_col), n)).alias("g"))
+        bench.select(F.explode(shingle_hashes_col(F.col(bench_text_col), n)).alias("g"))
         .distinct()
     )
     doc_grams = docs.select(
         "doc_id",
-        F.explode_outer(_word_ngrams(F.col(text_col), n)).alias("g"),
+        F.explode_outer(shingle_hashes_col(F.col(text_col), n)).alias("g"),
     )
     hit = F.when(F.col("bg.g").isNotNull(), 1).otherwise(0)
     return (

@@ -4,8 +4,8 @@ exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine near-dup.
 Scale shapes:
 * exact — hash-groupBy; map-side combine, one shuffle on the 64-bit hash
   (never on the full text — at 100 TB the text never becomes a shuffle key).
-* n-gram Jaccard — blocked all-pairs: self-join on a cheap blocking key
-  (lang, length bucket) keeps the quadratic term inside small blocks.
+* n-gram Jaccard — gram postings blocked on (lang, length bucket), paired
+  by banding.band_join; the block cap keeps the quadratic term bounded.
 * MinHash+LSH — shingle→minhash→band→bucket equi-join (linking.py machinery).
 * SimHash — 64-bit sign-aggregated token hashes (numpy inside a pandas UDF),
   candidate pairs via 16-bit band blocking (banding.band_join), verify by
@@ -19,12 +19,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .banding import band_join, bit_bands
+from .banding import band_join, bit_bands, cap_groups
 from .components import connected_components
-from .linking import lsh_candidate_pairs
+from .linking import lsh_candidate_pairs, shingle_hashes_col
 
 # ------------------------------------------------------------------ exact --
 
@@ -71,28 +71,6 @@ def exact_dedup_survivors(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 # --------------------------------------------------------- n-gram Jaccard --
 
-def _word_ngrams(text: Column, n: int, hashed: bool = True) -> Column:
-    """Distinct word n-gram shingles; `hashed=True` maps each gram to a
-    64-bit hash — long-array intersects/unions are several times cheaper
-    than string-array ones and shuffle a fraction of the bytes (collision
-    probability at corpus scale is ~0 for Jaccard purposes).
-
-    The hashed path hashes each TOKEN once and hashes the n-long slice of
-    token hashes rather than building the gram string (concat_ws allocation
-    measured 5x slower cold at sf0.1; cardinality is identical modulo
-    64-bit collisions, which hashed Jaccard already assumes)."""
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    if hashed:
-        th = F.transform(toks, lambda x: F.xxhash64(x))
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.xxhash64(F.slice(th, i + 1, n)))
-        )
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -100,33 +78,33 @@ def ngram_jaccard_pairs(
     threshold: float = 0.2,
     length_bucket: int = 64,
     max_block_size: int | None = 2000,
-) -> DataFrame:
-    """(src, dst, jaccard) for same-block pairs with word-n-gram Jaccard
-    >= threshold. Blocking on (lang, length//bucket) bounds the self-join.
+) -> tuple[DataFrame, DataFrame | None]:
+    """(pairs, dropped): `pairs` is (src, dst, jaccard), unordered, for
+    same-block pairs with word-n-gram Jaccard >= threshold. Blocking on
+    (lang, length//bucket) bounds the self-join.
 
     `max_block_size` caps the quadratic term: a block over the cap (at
-    100 TB one (en, common-length) block holds millions of docs) is dropped
-    from the self-join entirely and LOGGED — the same mega-bucket discipline
-    as linking.py. Docs in dropped blocks are not silently "unique": route
-    them through the MinHash/LSH path (minhash_near_dup_pairs), which is
-    sub-quadratic by construction. The DuckDB oracle mirrors the cap
+    100 TB one (en, common-length) block holds millions of docs) is left
+    out of the self-join entirely and returned as `dropped`, the lazy
+    (lang, lb, rows) relation of the over-cap blocks (None when
+    uncapped) — `banding.cap_groups`, the cap `band_join` applies to its
+    buckets. Docs in dropped blocks are not "unique": route them through
+    the MinHash/LSH path (minhash_near_dup_pairs), which is sub-quadratic
+    by construction. The DuckDB oracle mirrors the cap
     (ngram_jaccard_sql_duck takes the same parameter), so the contract
-    stays exact at any scale.
+    stays exact at any scale. Building the plan runs no Spark job.
 
-    Execution shape (r6): inverted-index join, NOT a block all-pairs join.
+    Execution shape: an inverted-index join, NOT a block all-pairs join.
     A pair with jaccard >= threshold > 0 shares >= 1 gram, so candidates
-    are generated by equi-joining the exploded (lang, lb, gram-hash)
-    postings with id< ordering; the per-pair match count IS
-    |grams_a ∩ grams_b| exactly (grams are array_distinct'd per doc), and
-    |union| = ng_a + ng_b − inter, so the jaccard value is bit-identical
-    to the r2 array_intersect/array_union form while never materializing
-    the O(Σ block²) pair relation (sf1.0: 13.6M block pairs × ~50-gram
-    array ops → 1.9M posting-join rows; measured 52.6 s → ~2 s). The
-    quadratic term is now Σ over (block, gram) of df², bounded by the
-    same max_block_size cap; hot grams are rarer than hot blocks (sf1.0
-    max gram df = 19 vs block sizes of 2000)."""
-    import logging
-
+    are the `band_join` of the exploded (lang, lb, gram-hash) postings;
+    its `n_shared` IS |grams_a ∩ grams_b| exactly (grams are distinct per
+    doc), and |union| = ng_a + ng_b − inter, so the jaccard value is
+    bit-identical to the array_intersect/array_union form while never
+    materializing the O(Σ block²) pair relation (sf1.0: 13.6M block
+    pairs × ~50-gram array ops → 1.9M posting-join rows; measured 52.6 s
+    → ~2 s). The quadratic term is Σ over (block, gram) of df², bounded
+    by the same block cap; hot grams are rarer than hot blocks (sf1.0 max
+    gram df = 19 vs block sizes of 2000)."""
     if threshold <= 0:
         raise ValueError(
             "ngram_jaccard_pairs requires threshold > 0 (a zero threshold "
@@ -140,35 +118,12 @@ def ngram_jaccard_pairs(
             F.col("doc_id").alias("id"),
             "lang",
             (F.floor(F.length(text_col) / length_bucket)).alias("lb"),
-            _word_ngrams(F.col(text_col), n).alias("grams"),
+            shingle_hashes_col(F.col(text_col), n).alias("grams"),
         )
     )
+    dropped = None
     if max_block_size is not None:
-        # census on a gram-free projection (cheap); eager so the drop is loud
-        big = (
-            docs.groupBy(
-                "lang", (F.floor(F.length(text_col) / length_bucket)).alias("lb")
-            )
-            .count()
-            .filter(F.col("count") > max_block_size)
-        )
-        dropped = big.collect()
-        if dropped:
-            logging.getLogger(__name__).warning(
-                "ngram_jaccard_pairs: dropping %d oversized blocks "
-                "(> %d docs) from the all-pairs join: %s — route these "
-                "through minhash_near_dup_pairs instead",
-                len(dropped),
-                max_block_size,
-                [(r["lang"], r["lb"], r["count"]) for r in dropped[:10]],
-            )
-            base = base.join(
-                F.broadcast(
-                    docs.sparkSession.createDataFrame(dropped).select("lang", "lb")
-                ),
-                ["lang", "lb"],
-                "left_anti",
-            )
+        base, dropped = cap_groups(base, ["lang", "lb"], max_block_size)
     # explode_outer, not explode: plain explode injects an implicit
     # `size(grams) > 0` filter that Catalyst pushes below the repartition
     # exchange, evaluating the whole gram expression on the (single)
@@ -180,45 +135,18 @@ def ngram_jaccard_pairs(
         "id",
         "lang",
         "lb",
-        F.size("grams").alias("ng"),
         F.explode_outer("grams").alias("g"),
-    ).repartition(p, "lang", "lb", "g")
-    # ^ explicit exchange on the join key + MERGE hint below: both
-    # self-join aliases hash to the same partitioning, so Catalyst reuses
-    # ONE exchange (grams are tokenized/hashed once, not once per side)
-    # and the join needs no further shuffle. Without the hint the planner
-    # broadcasts one side (postings fit under the threshold at bench
-    # scale), which recomputes the gram expression per side and cannot
-    # reuse the exchange; at corpus scale the broadcast is impossible
-    # anyway, so SMJ is also the honest 100-TB shape.
-    a, b = postings.alias("a").hint("merge"), postings.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.lb") == F.col("b.lb"))
-            & (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("src"),
-            F.col("b.id").alias("dst"),
-            F.col("a.ng").alias("ng_a"),
-            F.col("b.ng").alias("ng_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
+        F.size("grams").alias("ng"),
     )
-    # int/int division in the r2 form; long/long here — both promote to
-    # double with identical values, so round(·, 6) is bit-identical.
-    jac = F.col("inter") / (F.col("ng_a") + F.col("ng_b") - F.col("inter"))
-    return (
-        inter.select(
-            "src",
-            "dst",
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    pairs, _ = band_join(postings, carry=["ng"])
+    # long/(int + int - long) promotes to double, as the
+    # array_intersect/array_union form did, so round(·, 6) is bit-identical.
+    inter = F.col("n_shared")
+    jac = inter / (F.col("ng_a") + F.col("ng_b") - inter)
+    result = pairs.select("src", "dst", F.round(jac, 6).alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
+    return result, dropped
 
 
 def ngram_jaccard_sql_duck(
@@ -269,7 +197,7 @@ def ngram_cluster_census(
     union-find / star contraction; components.py). Only docs appearing in >= 1 pair are
     clustered, so every census row has size >= 2; the DuckDB oracle states
     the same census independently via a recursive transitive closure."""
-    pairs = ngram_jaccard_pairs(docs, text_col=text_col, n=n, threshold=threshold)
+    pairs, _ = ngram_jaccard_pairs(docs, text_col=text_col, n=n, threshold=threshold)
     labels = connected_components(pairs, src="src", dst="dst")
     return (
         labels.groupBy("component")

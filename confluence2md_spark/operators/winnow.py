@@ -30,7 +30,8 @@ Scale shape: one posexplode of gram hashes (doc_id, pos, h), one per-doc
 window pass (partitionBy doc_id — the same shuffle key the tokenize
 aggs use), one distinct. No self-joins, no corpus-sized driver state;
 selected-fingerprint volume is ~2/(w+1) of the gram stream by the
-density guarantee.
+density guarantee. The overlap report pairs documents on shared
+fingerprints through `banding.band_join`.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import FINGERPRINT_DUCK, FINGERPRINT_SPARK
+from .banding import band_join
 
 K_GRAM = 3
 W_WINDOW = 4
@@ -129,34 +131,22 @@ def winnow_overlap_pairs(
     w: int = W_WINDOW,
     min_shared: int = MIN_SHARED_FPS,
     max_df: int = 1000,
-) -> DataFrame:
-    """(src, dst, n_shared): document pairs sharing >= min_shared winnowed
-    fingerprint hashes — the MOSS overlap report. Because fingerprints are
-    ~2/(w+1) of grams, this is the sketch-sized version of the all-grams
-    co-occurrence join (operators/containment.py): the same inverted-index
-    shape over a far smaller relation. Fingerprints with corpus df >
-    max_df are dropped before the self-join (the standard stopword-gram
-    cut, mirrored in the twin). The pair set is unordered."""
+) -> tuple[DataFrame, DataFrame]:
+    """(pairs, dropped): `pairs` is (src, dst, n_shared), unordered,
+    document pairs sharing >= min_shared winnowed fingerprint hashes — the
+    MOSS overlap report. Because fingerprints are ~2/(w+1) of grams, this
+    is the sketch-sized version of the all-grams co-occurrence join
+    (operators/containment.py): the same `banding.band_join` over a far
+    smaller relation. Fingerprints with corpus df > max_df are left out of
+    the self-join (the standard stopword-gram cut, mirrored in the twin)
+    and returned as `dropped`, the lazy (fp, rows) relation."""
     fps = (
         winnow_fingerprints(docs, text_col, id_col, k, w)
-        .select(F.col("doc_id"), "fp")
+        .select(F.col("doc_id").alias("id"), "fp")
         .distinct()
     )
-    df_counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-    rare = fps.join(df_counts.filter(F.col("df") <= max_df).select("fp"), "fp")
-    return (
-        rare.alias("a")
-        .join(
-            rare.alias("b"),
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    shared, dropped = band_join(fps, max_bucket=max_df)
+    return shared.filter(F.col("n_shared") >= min_shared), dropped
 
 
 def winnow_overlap_sql_duck(

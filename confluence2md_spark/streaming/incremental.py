@@ -14,9 +14,9 @@ tests and backfills); omit it for continuous micro-batches on a cluster.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.convert import PAGES_SCHEMA, _convert_batches, is_confluence_mime_col
 from pyspark.sql import functions as F
+
+from ..operators.convert import convert_pages
 
 RAW_FILES_DDL = (
     "repo string, path string, commit string, lang string, content string, doc_id long"
@@ -30,10 +30,7 @@ def incremental_pages(spark: SparkSession, source_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
     )
-    conf = raw.filter(is_confluence_mime_col(F.col("content")))
-    return conf.select("doc_id", "repo", "path", "commit", "content").mapInPandas(
-        _convert_batches, schema=PAGES_SCHEMA
-    )
+    return convert_pages(raw)
 
 
 def incremental_triples(spark: SparkSession, source_dir: str) -> DataFrame:

@@ -60,11 +60,11 @@ def banded_signatures(
     bands: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, band, key, sig) — the shared batch/stream banding relation, in
-    `band_join`'s input shape: identical shingles, permutations and band
-    keys to operators/linking.lsh_candidate_pairs, so a batch run over the
-    union of all drops lands every doc in the same buckets the stream
-    did."""
+    """(id, band, key, sig) — the shared batch/stream banding relation
+    (`band_join`'s input once `sig` is dropped, which would otherwise join
+    the bucket): identical shingles, permutations and band keys to
+    operators/linking.lsh_candidate_pairs, so a batch run over the union
+    of all drops lands every doc in the same buckets the stream did."""
     assert k % bands == 0, "k must be divisible by bands"
     sig = minhash_signature_col(shingle_hashes_col(F.col(text_col)), k=k, seed=seed)
     return docs.select(F.col(id_col).alias("id"), sig.alias("sig")).select(

@@ -1,8 +1,7 @@
 """plans/iterate.fixpoint and the graph operators built on it: no cached
 or checkpointed blocks outlive a call except the result's own checkpoint,
 on the converging, fixed-round and raising paths alike. The near-dup
-family (the five band_join callers and containment_pairs) is held to the
-same rule.
+family (the band_join callers) is held to the same rule.
 
 Leftovers are read from the RDD storage info (RDDs created during the
 call that still hold blocks), not from getPersistentRDDs().size(): that
@@ -26,6 +25,7 @@ from confluence2md_spark.operators.components import connected_components
 from confluence2md_spark.operators.containment import containment_pairs
 from confluence2md_spark.operators.dedup import (
     minhash_near_dup_pairs,
+    ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
 from confluence2md_spark.operators.graph import (
@@ -47,6 +47,7 @@ from confluence2md_spark.operators.similarity import (
 )
 from confluence2md_spark.operators.triangles import triangle_participation
 from confluence2md_spark.operators.truss import ktruss
+from confluence2md_spark.operators.winnow import winnow_overlap_pairs
 from confluence2md_spark.plans.iterate import fixpoint, release
 
 # a seeded 120-node random link graph plus a 12-node chain (the chain
@@ -131,7 +132,9 @@ _NEAR_DUP = {
     "embedding_lsh": lambda docs, emb: embedding_near_dup_lsh(
         planted_cluster_vectors(emb), threshold=0.85, tables=16
     ),
-    "containment": lambda docs, emb: containment_pairs(docs),
+    "containment": lambda docs, emb: containment_pairs(docs)[0],
+    "winnow": lambda docs, emb: winnow_overlap_pairs(docs)[0],
+    "ngram_jaccard": lambda docs, emb: ngram_jaccard_pairs(docs)[0],
 }
 
 

@@ -1041,12 +1041,15 @@ def test_bm25_plan_broadcasts_and_never_shuffles_text(spark):
 
 
 def test_ngram_jaccard_inverted_index_matches_quadratic(spark):
-    """r6 internals change: ngram_jaccard_pairs now generates candidates via
-    an inverted-index join (shared-gram count == |A ∩ B| exactly) instead of
-    the block all-pairs array_intersect/array_union form. Pin the new path
-    against a brute-force quadratic recomputation over the same gram arrays
-    — pair set AND jaccard values must match bit-for-bit."""
-    from confluence2md_spark.operators.dedup import _word_ngrams, ngram_jaccard_pairs
+    """ngram_jaccard_pairs generates candidates via an inverted-index join
+    (shared-gram count == |A ∩ B| exactly) instead of the block all-pairs
+    array_intersect/array_union form. Pin it against a brute-force
+    quadratic recomputation over the same gram arrays — pair set AND
+    jaccard values must match bit-for-bit — and pin the block cap: the
+    over-cap block comes back as `dropped`, and building the plan runs no
+    Spark job."""
+    from confluence2md_spark.operators.dedup import ngram_jaccard_pairs
+    from confluence2md_spark.operators.linking import shingle_hashes_col
     import pytest
     from pyspark.sql import functions as F
 
@@ -1064,10 +1067,16 @@ def test_ngram_jaccard_inverted_index_matches_quadratic(spark):
         rows.append((i, "eins zwei drei vier funf sechs sieben acht", "de"))
     docs = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
 
-    got = {
-        (r["src"], r["dst"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, max_block_size=4).collect()
-    }
+    sc = spark.sparkContext
+    sc.setJobGroup("ngram_jaccard_build", "plan only")
+    try:
+        pairs, dropped = ngram_jaccard_pairs(docs, max_block_size=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("ngram_jaccard_build") == []
+    got = {(r["src"], r["dst"]): r["jaccard"] for r in pairs.collect()}
+    assert [tuple(r) for r in dropped.collect()] == [("de", 0, 5)]
 
     # brute force: same gram arrays, same blocks, same cap, python set math
     grams = {
@@ -1076,7 +1085,7 @@ def test_ngram_jaccard_inverted_index_matches_quadratic(spark):
             "doc_id",
             "lang",
             F.floor(F.length("text") / 64).alias("lb"),
-            _word_ngrams(F.col("text"), 3).alias("g"),
+            shingle_hashes_col(F.col("text"), 3).alias("g"),
         ).collect()
     }
     from collections import Counter
@@ -1095,6 +1104,7 @@ def test_ngram_jaccard_inverted_index_matches_quadratic(spark):
             if jac >= 0.2:
                 want[(i, j)] = jac
     assert got == want and len(want) >= 3
+    assert ngram_jaccard_pairs(docs, max_block_size=None)[1] is None
 
     with pytest.raises(ValueError):
         ngram_jaccard_pairs(docs, threshold=0.0)
@@ -1670,7 +1680,7 @@ def test_containment_hand_computed(spark):
         (2, "totally different words with no overlap at all here friend"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = sorted(tuple(r) for r in containment_pairs(docs).collect())
+    got = sorted(tuple(r) for r in containment_pairs(docs)[0].collect())
 
     # all 5 of inner's 3-grams appear in outer -> cont(0 -> 1) = 1.0;
     # outer has 29 grams so cont(1 -> 0) is far below threshold.
@@ -1698,7 +1708,7 @@ def test_containment_matches_duckdb_twin(spark):
     for j, src in ((20, 0), (21, 1)):
         rows.append((j, rows[src][1] + " extra" + str(j) + " more" + str(j)))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = sorted(tuple(r) for r in containment_pairs(docs).collect())
+    got = sorted(tuple(r) for r in containment_pairs(docs)[0].collect())
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
@@ -1930,7 +1940,7 @@ def test_winnow_overlap_matches_duckdb_twin(spark):
     # plant heavy overlap: doc 12 = doc 0 with a new tail
     rows.append((12, rows[0][1] + " tail12 tail13 tail14"))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = sorted(tuple(r) for r in winnow_overlap_pairs(docs, min_shared=3).collect())
+    got = sorted(tuple(r) for r in winnow_overlap_pairs(docs, min_shared=3)[0].collect())
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
@@ -1996,8 +2006,8 @@ def test_operator_outputs_are_unordered(spark):
     )
     outputs = {
         "winnow_fingerprints": winnow_fingerprints(docs),
-        "winnow_overlap_pairs": winnow_overlap_pairs(docs),
-        "containment_pairs": containment_pairs(docs),
+        "winnow_overlap_pairs": winnow_overlap_pairs(docs)[0],
+        "containment_pairs": containment_pairs(docs)[0],
         "minhash_portable_pairs": minhash_portable_pairs(docs),
         "simhash_portable_pairs": simhash_portable_pairs(docs),
         "bloom_decontaminate": bloom_decontaminate(docs, docs.select("text")),

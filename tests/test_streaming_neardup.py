@@ -18,7 +18,7 @@ def _batch_candidate_pairs(docs):
     """All unordered id pairs sharing >= 1 band bucket — the batch
     reference for what the stream must emit when no bucket exceeds the
     cap."""
-    pairs, _ = band_join(banded_signatures(docs))
+    pairs, _ = band_join(banded_signatures(docs).drop("sig"))
     return pairs
 
 
