@@ -203,6 +203,7 @@ from confluence2md_spark.functions.textstats import (
     quality_stats_sql_duck,
     token_stats,
     token_stats_sql_duck,
+    tokens_col,
 )
 from confluence2md_spark.functions.hashembed import (
     hashed_tf,
@@ -1849,7 +1850,6 @@ def _curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     'benchmark' is an 8-token window (tokens 3..10) of every 37th document
     — derivable identically in both engines — so real gram overlaps exist
     by construction and the hit counts are exact."""
-    from confluence2md_spark.functions.textstats import tokens_col
     from confluence2md_spark.operators.curation import decontaminate
 
     docs = _t(spark, sf_dir, "documents")
@@ -1910,7 +1910,7 @@ def _corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_dedup_survivors — document text is never a shuffle key), then one
     per-lang aggregation of the filtered survivors."""
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = tokens_col(F.col("text"))
     n_tok = F.size(toks)
     sw = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_EN)))
     space_ratio = (
@@ -1986,7 +1986,7 @@ def _corpus_final_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
     )
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = tokens_col(F.col("text"))
     n_tok = F.size(toks)
     sw = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_EN)))
     space_ratio = (

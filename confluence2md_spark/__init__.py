@@ -20,7 +20,8 @@ Layout:
   operators/  Spark DataFrame operators (detection, conversion, extraction,
               linking, dedup, similarity, text analysis, multimodal plumbing)
   plans/      pipeline assembly, checkpoint/resume, lineage, skew handling
-  streaming/  Structured Streaming surface (batch time-bucketing + demo stream)
+  streaming/  Structured Streaming: one drop-directory drain (source + append
+              sink) over the pages/triples and stateful stream operators
 """
 
 __version__ = "0.1.0"

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from confluence2md_spark.functions.textstats import (
     FINGERPRINT_DUCK,
     FINGERPRINT_SPARK,
+    tokens_col,
 )
 
 DIM = 64
@@ -50,9 +51,7 @@ def hashed_tf(
     rule."""
     tok = docs.select(
         "doc_id",
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        ).alias("tok"),
+        F.explode(tokens_col(F.col(text_col))).alias("tok"),
     )
     bucket = F.expr(FINGERPRINT_SPARK.format(t="tok")) % dim
     return (

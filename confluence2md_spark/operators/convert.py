@@ -164,8 +164,9 @@ def convert_pages(
 
     `num_partitions` repartitions before the Python stage (a small parquet
     input arrives as one partition and would serialize the UDF onto one
-    core). The pipeline passes None because it pre-balances with
-    salted_repartition (plans/skew.py).
+    core). The pipeline passes None: it salts hot repos with
+    salted_repartition (plans/skew.py) only when the skew census asks,
+    and otherwise keeps the input's layout.
 
     `timeout_s` / `max_bytes`: per-document conversion budget (reference's
     2-minute pandoc timeout, markdown.go:19-20). Defaults (None, None)

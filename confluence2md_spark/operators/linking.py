@@ -22,7 +22,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textstats import MERSENNE31 as _MERSENNE
+from ..functions.textstats import MERSENNE31 as _MERSENNE, tokens_col
 from .banding import band_join, minhash_bands, permutations
 
 
@@ -41,7 +41,7 @@ def shingle_hashes_col(text: Column, n: int = 3) -> Column:
     at sf0.1 vs 0.8 / 0.6 for the token-hash form; identical distinct
     cardinality (injective modulo 64-bit collisions, which is all
     Jaccard-over-hashes ever assumed)."""
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
+    toks = tokens_col(text)
     th = F.transform(toks, lambda x: F.xxhash64(x))
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.array_distinct(
@@ -177,7 +177,7 @@ def token_block_pairs(
 
     if num_partitions is None:
         num_partitions = entities.sparkSession.sparkContext.defaultParallelism
-    toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
+    toks = F.array_distinct(tokens_col(F.col(text_col)))
     base = entities.select(F.col(id_col).alias("id"), toks.alias("tk"))
     # `num_partitions` sizes the token shuffle, where the join work is; the
     # df-cap window and both self-join aliases reuse this one exchange. Not

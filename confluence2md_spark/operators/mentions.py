@@ -105,7 +105,6 @@ def resolve_mentions(
     pages: DataFrame,
     cmap: DataFrame | None = None,
     threshold: float = 0.8,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(doc_id, pos, surface, target_page, method) for every page-link
     mention whose surface resolves to a page title; method 'exact'|'fuzzy'.

@@ -43,6 +43,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# drop-directory schema of (ts, page) events, the columns
+# `streaming_heavy_hitters` reads by default
+HH_EVENTS_DDL = "ts TIMESTAMP, page STRING"
+
 HH_OUTPUT_SCHEMA = StructType(
     [
         StructField("bucket", LongType()),
@@ -159,31 +163,4 @@ def streaming_heavy_hitters(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def run_streaming_heavy_hitters(
-    spark,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    schema_ddl: str = "ts TIMESTAMP, page STRING",
-    m: int = 32,
-    n_buckets: int = 8,
-) -> object:
-    """Drain a drop dir of (ts, page) parquet into the snapshot sink; the
-    max-version rows per bucket form the current summary."""
-    ev = (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-    return (
-        streaming_heavy_hitters(ev, m=m, n_buckets=n_buckets)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

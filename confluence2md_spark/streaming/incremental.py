@@ -1,40 +1,75 @@
 """Incremental KG ingest with Structured Streaming.
 
-`readStream` over a parquet drop-directory of raw_files rows -> the SAME
-detect + convert operators used by the batch pipeline (mapInPandas works
-unchanged on streaming DataFrames) -> append sink partitioned like the batch
-tables. Checkpointing rides Spark's streaming checkpoint (offsets + sink
-commit log), so restart-resume comes for free here, unlike the batch layer's
-manifest protocol (plans/checkpoint.py).
+Every streaming job here is one protocol, written once in `drain`: a
+parquet drop-directory source read with a DDL schema, a streaming
+operator (`DataFrame -> DataFrame`), and an append-mode parquet sink.
+The operators are the batch ones wherever the batch one is stateless
+(detect + convert and triple extraction run unchanged on a stream:
+mapInPandas and explode work on streaming DataFrames), plus the stream-only
+stateful members below. Checkpointing rides Spark's streaming checkpoint
+(offsets + sink commit log), so a second drain on the same checkpoint reads
+only the files that landed since, unlike the batch layer's manifest
+protocol (plans/checkpoint.py).
 
-Trigger policy: `availableNow` drains the backlog exactly once (used in
-tests and backfills); omit it for continuous micro-batches on a cluster.
+Trigger policy: `availableNow` — each drain takes the backlog in
+micro-batches of at most 8 files and stops (backfills, scheduled runs,
+tests). The triples sink is unpartitioned, like the batch `triples_raw`
+table.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.convert import convert_pages
+from ..operators.triples import extract_all_triples
 
 RAW_FILES_DDL = (
     "repo string, path string, commit string, lang string, content string, doc_id long"
 )
+DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 
-def incremental_pages(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Streaming pages DataFrame from a raw_files drop directory."""
-    raw = (
-        spark.readStream.schema(RAW_FILES_DDL)
+def drain(
+    spark: SparkSession,
+    ddl: str,
+    source_dir: str,
+    op: Callable[[DataFrame], DataFrame],
+    out_dir: str,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Drain the parquet drop directory `source_dir` (schema `ddl`) through
+    `op` into an append-mode parquet sink at `out_dir`; returns the query.
+
+    The one streaming source and sink in the package: every family passes
+    its operator (`convert_pages`, `incremental_triples`,
+    `windowed_event_counts`, ...; `functools.partial` binds its options)."""
+    src = (
+        spark.readStream.schema(ddl)
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
     )
-    return convert_pages(raw)
+    return (
+        op(src)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
-def incremental_triples(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Streaming triples from a raw_files drop directory.
+def incremental_triples(raw: DataFrame) -> DataFrame:
+    """Streaming raw triples from streaming raw_files rows.
 
     `extract_all_triples(dedup=False)` is STATELESS (filter + explode +
     union — no join/agg), so the exact batch operator runs unchanged on the
@@ -42,41 +77,7 @@ def incremental_triples(spark: SparkSession, source_dir: str) -> DataFrame:
     over the accumulated triples (CC is a global fixpoint — not a streaming
     op); this split mirrors a production lambda layout: stream appends raw
     triples, a periodic batch job re-canonicalizes."""
-    from ..operators.triples import extract_all_triples
-
-    return extract_all_triples(incremental_pages(spark, source_dir), dedup=False)
-
-
-def run_incremental_build(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    emit: str = "pages",
-):
-    """Drain `source_dir` into a parquet sink; returns the query.
-
-    emit='pages' writes converted pages; emit='triples' writes raw triples
-    partitioned by pred (same layout as the batch triples_raw sink, so the
-    batch canonicalization stage can run over either)."""
-    if emit == "triples":
-        df = incremental_triples(spark, source_dir)
-    elif emit == "pages":
-        df = incremental_pages(spark, source_dir)
-    else:
-        raise ValueError(f"unknown emit={emit!r}")
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if emit == "triples":
-        writer = writer.partitionBy("pred")
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return extract_all_triples(convert_pages(raw), dedup=False)
 
 
 # ------------------------------------------------- windowed aggs + state --
@@ -96,34 +97,6 @@ def windowed_event_counts(
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-
-
-def run_windowed_counts(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark_delay: str = "2 hours",
-):
-    """Drain an events drop dir into finalized-window counts (append mode)."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    return (
-        windowed_event_counts(ev, window, watermark_delay)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -243,36 +216,16 @@ def streaming_sessionize(
     )
 
 
-def run_streaming_sessionize(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_seconds: int = 1800,
-):
-    """Drain an events drop dir into closed-session rows."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    return (
-        streaming_sessionize(ev, gap_seconds=gap_seconds)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # ------------------------------------------------------- streaming dedup --
 
-DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
+def _first_arrival(
+    df: DataFrame, keys: list, watermark_delay: str | None, ts_col: str
+) -> DataFrame:
+    """The first-arrived row per `keys`: `dropDuplicates` (exact forever)
+    without a delay, `dropDuplicatesWithinWatermark` over `ts_col` with one."""
+    if watermark_delay is None:
+        return df.dropDuplicates(keys)
+    return df.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(keys)
 
 
 def streaming_exact_dedup(
@@ -307,34 +260,7 @@ def streaming_exact_dedup(
     keyed = docs.withColumn(
         "content_hash", F.xxhash64(F.col(text_col))
     ).withColumn("content_len", F.length(text_col))
-    if watermark_delay is not None:
-        return keyed.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
-            ["content_hash", "content_len"]
-        )
-    return keyed.dropDuplicates(["content_hash", "content_len"])
-
-
-def run_streaming_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> object:
-    """Drain a documents drop dir into the deduped-survivor parquet sink."""
-    docs = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    return (
-        streaming_exact_dedup(docs)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _first_arrival(keyed, ["content_hash", "content_len"], watermark_delay, ts_col)
 
 
 # ---------------------------------------- streaming paragraph dedup --
@@ -379,43 +305,10 @@ def streaming_paragraph_dedup(
         F.xxhash64("para").alias("para_hash"),
         F.length("para").alias("para_len"),
     )
-    if watermark_delay is not None:
-        return occ.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
-            ["para_hash", "para_len"]
-        )
-    return occ.dropDuplicates(["para_hash", "para_len"])
-
-
-def run_streaming_paragraph_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> object:
-    """Drain a documents drop dir into the kept-paragraph-ledger sink."""
-    docs = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    return (
-        streaming_paragraph_dedup(docs)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _first_arrival(occ, ["para_hash", "para_len"], watermark_delay, ts_col)
 
 
 # ------------------------------------------- stream-stream interval join --
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
 
 def streaming_view_attribution(
     events: DataFrame, max_gap: str = "1 hour", watermark_delay: str = "2 hours"
@@ -463,29 +356,4 @@ def streaming_view_attribution(
         "purchase_id",
         "view_id",
         F.expr("timestampdiff(MICROSECOND, v_ts, p_ts)").alias("gap_us"),
-    )
-
-
-def run_view_attribution(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_gap: str = "1 hour",
-    watermark_delay: str = "2 hours",
-):
-    """Drain an events drop dir into attributed (purchase, view) pairs."""
-    ev = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    return (
-        streaming_view_attribution(ev, max_gap, watermark_delay)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

@@ -141,31 +141,3 @@ def streaming_minhash_candidates(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_streaming_minhash(
-    spark,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_bucket_size: int = 200,
-) -> object:
-    """Drain a documents drop dir into the candidate-pair parquet sink.
-    Pairs may appear once per shared band; the batch compaction (or the
-    reader) dedups on (src, dst)."""
-    from confluence2md_spark.streaming.incremental import DOCS_DDL
-
-    docs = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
-    )
-    return (
-        streaming_minhash_candidates(docs, max_bucket_size=max_bucket_size)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

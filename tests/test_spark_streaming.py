@@ -4,11 +4,18 @@ the batch path, and a second drained run picks up only new files."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
+from confluence2md_spark.operators.convert import convert_pages
 from confluence2md_spark.sources.corpus import synth_raw_files
-from confluence2md_spark.streaming.incremental import run_incremental_build
+from confluence2md_spark.streaming import drain, incremental_triples
+from confluence2md_spark.streaming.incremental import (
+    DOCS_DDL,
+    EVENTS_DDL,
+    RAW_FILES_DDL,
+)
 
 
 def test_incremental_matches_batch(spark, sf_dir, tmp_path):
@@ -20,12 +27,10 @@ def test_incremental_matches_batch(spark, sf_dir, tmp_path):
     first = raw.filter("doc_id < 100")
     first.write.mode("overwrite").parquet(src)
 
-    q = run_incremental_build(spark, src, out, ckpt)
+    q = drain(spark, RAW_FILES_DDL, src, convert_pages, out, ckpt)
     q.awaitTermination(120)
     got = spark.read.parquet(out)
     # batch-equivalent: pages for confluence rows among doc_id < 100
-    from confluence2md_spark.operators.convert import convert_pages
-
     want = convert_pages(first).select("doc_id", "status", "title").collect()
     got_map = {r["doc_id"]: (r["status"], r["title"]) for r in got.collect()}
     assert len(got_map) == len(want)
@@ -34,7 +39,7 @@ def test_incremental_matches_batch(spark, sf_dir, tmp_path):
 
     # incremental: append more files, drain again -> only new docs added
     raw.filter("doc_id >= 100 AND doc_id < 150").write.mode("append").parquet(src)
-    q2 = run_incremental_build(spark, src, out, ckpt)
+    q2 = drain(spark, RAW_FILES_DDL, src, convert_pages, out, ckpt)
     q2.awaitTermination(120)
     got2 = spark.read.parquet(out)
     new_ids = {r["doc_id"] for r in got2.collect()} - set(got_map)
@@ -53,7 +58,7 @@ def test_incremental_triples_match_batch(spark, sf_dir, tmp_path):
     raw = synth_raw_files(spark, sf_dir).filter("doc_id < 80")
     raw.write.mode("overwrite").parquet(src)
 
-    q = run_incremental_build(spark, src, out, ckpt, emit="triples")
+    q = drain(spark, RAW_FILES_DDL, src, incremental_triples, out, ckpt)
     q.awaitTermination(120)
 
     got = {
@@ -70,7 +75,9 @@ def test_incremental_triples_match_batch(spark, sf_dir, tmp_path):
 def test_windowed_counts_respect_watermark(spark, tmp_path):
     """Append-mode windowed agg: a window is emitted only after the
     watermark passes its end, and late-but-inside-delay events count."""
-    from confluence2md_spark.streaming.incremental import run_windowed_counts
+    from confluence2md_spark.streaming.incremental import windowed_event_counts
+
+    counts = partial(windowed_event_counts, window="1 hour", watermark_delay="2 hours")
 
     src = str(tmp_path / "ev")
     out = str(tmp_path / "counts")
@@ -90,7 +97,7 @@ def test_windowed_counts_respect_watermark(spark, tmp_path):
          (2, dt(2025, 1, 1, 10, 30), 1, "click", 1.0, "{}")],
         "overwrite",
     )
-    q = run_windowed_counts(spark, src, out, ckpt, window="1 hour", watermark_delay="2 hours")
+    q = drain(spark, EVENTS_DDL, src, counts, out, ckpt)
     q.awaitTermination(120)
     files = [f for f in os.listdir(out) if f.endswith(".parquet")] if os.path.isdir(out) else []
     n0 = spark.read.parquet(out).count() if files else 0
@@ -103,7 +110,7 @@ def test_windowed_counts_respect_watermark(spark, tmp_path):
          (4, dt(2025, 1, 1, 14, 0), 1, "view", 1.0, "{}")],
         "append",
     )
-    q2 = run_windowed_counts(spark, src, out, ckpt, window="1 hour", watermark_delay="2 hours")
+    q2 = drain(spark, EVENTS_DDL, src, counts, out, ckpt)
     q2.awaitTermination(120)
     rows = {(r["window_start"].hour, r["event_type"]): r["n"] for r in spark.read.parquet(out).collect()}
     assert rows == {(10, "click"): 3}  # late event counted; 14:00 window still open
@@ -112,7 +119,9 @@ def test_windowed_counts_respect_watermark(spark, tmp_path):
 def test_streaming_sessionize_stateful(spark, tmp_path):
     """applyInPandasWithState: sessions close across micro-batches; the
     open session survives in state until a later event closes it."""
-    from confluence2md_spark.streaming.incremental import run_streaming_sessionize
+    from confluence2md_spark.streaming.incremental import streaming_sessionize
+
+    sessions = partial(streaming_sessionize, gap_seconds=1800)
 
     src = str(tmp_path / "ev")
     out = str(tmp_path / "sessions")
@@ -131,14 +140,14 @@ def test_streaming_sessionize_stateful(spark, tmp_path):
          (3, dt(2025, 1, 1, 9, 20), 1, "a", 1.0, "{}")],
         "overwrite",
     )
-    q = run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800)
+    q = drain(spark, EVENTS_DDL, src, sessions, out, ckpt)
     q.awaitTermination(120)
     files = [f for f in os.listdir(out) if f.endswith(".parquet")] if os.path.isdir(out) else []
     assert (spark.read.parquet(out).count() if files else 0) == 0
 
     # batch 2: a gap-crossing event closes session 1 (3 events, 09:00-09:20)
     drop([(4, dt(2025, 1, 1, 12, 0), 1, "a", 1.0, "{}")], "append")
-    q2 = run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800)
+    q2 = drain(spark, EVENTS_DDL, src, sessions, out, ckpt)
     q2.awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
@@ -151,7 +160,9 @@ def test_streaming_sessionize_late_event_merges_into_open_session(spark, tmp_pat
     """A late event (inside the watermark) arriving in a LATER micro-batch
     must merge into the open session without regressing session_end
     (ADVICE r2: the old fold let last_ts regress, then split the session)."""
-    from confluence2md_spark.streaming.incremental import run_streaming_sessionize
+    from confluence2md_spark.streaming.incremental import streaming_sessionize
+
+    sessions = partial(streaming_sessionize, gap_seconds=1800)
 
     src = str(tmp_path / "ev")
     out = str(tmp_path / "sessions")
@@ -169,7 +180,7 @@ def test_streaming_sessionize_late_event_merges_into_open_session(spark, tmp_pat
          (2, dt(2025, 1, 1, 9, 20), 1, "a", 1.0, "{}")],
         "overwrite",
     )
-    run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, sessions, out, ckpt).awaitTermination(120)
 
     # batch 2: LATE event at 09:10 (inside the open session's span) plus a
     # same-batch 09:25 extension. Old code: last_ts regressed to 09:10, then
@@ -180,13 +191,13 @@ def test_streaming_sessionize_late_event_merges_into_open_session(spark, tmp_pat
          (4, dt(2025, 1, 1, 9, 25), 1, "a", 1.0, "{}")],
         "append",
     )
-    run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, sessions, out, ckpt).awaitTermination(120)
 
     # batch 3: gap-crossing event closes the session -> ONE session with all
     # 4 events, end = the true max ts 09:25 (matches the batch sessionizer
     # over the union of drops)
     drop([(5, dt(2025, 1, 1, 12, 0), 1, "a", 1.0, "{}")], "append")
-    run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, sessions, out, ckpt).awaitTermination(120)
 
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
@@ -201,7 +212,9 @@ def test_streaming_sessionize_coalesces_too_old_run(spark, tmp_path):
     batch must emit as ONE late session, as batch semantics would group
     them (ADVICE r3: each was emitted as its own singleton); a too-old
     event beyond the gap still starts its own late session."""
-    from confluence2md_spark.streaming.incremental import run_streaming_sessionize
+    from confluence2md_spark.streaming.incremental import streaming_sessionize
+
+    sessions = partial(streaming_sessionize, gap_seconds=1800)
 
     src = str(tmp_path / "ev")
     out = str(tmp_path / "sessions")
@@ -215,7 +228,7 @@ def test_streaming_sessionize_coalesces_too_old_run(spark, tmp_path):
 
     # batch 1: open session starts at 12:00
     drop([(1, dt(2025, 1, 1, 12, 0), 1, "a", 1.0, "{}")], "overwrite")
-    run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, sessions, out, ckpt).awaitTermination(120)
 
     # batch 2: three too-old events — 08:00 and 08:20 are within the gap of
     # each other (one late session), 05:00 is isolated (its own session);
@@ -227,7 +240,7 @@ def test_streaming_sessionize_coalesces_too_old_run(spark, tmp_path):
          (5, dt(2025, 1, 1, 12, 10), 1, "a", 1.0, "{}")],
         "append",
     )
-    run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, sessions, out, ckpt).awaitTermination(120)
 
     rows = spark.read.parquet(out).collect()
     got = {
@@ -239,7 +252,7 @@ def test_streaming_sessionize_coalesces_too_old_run(spark, tmp_path):
 
     # batch 3: close the open session — it kept both its events
     drop([(6, dt(2025, 1, 1, 18, 0), 1, "a", 1.0, "{}")], "append")
-    run_streaming_sessionize(spark, src, out, ckpt, gap_seconds=1800).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, sessions, out, ckpt).awaitTermination(120)
     rows = spark.read.parquet(out).collect()
     closed = [r for r in rows if r["session_start"].hour == 12]
     assert len(closed) == 1 and closed[0]["n_events"] == 2
@@ -249,7 +262,7 @@ def test_streaming_dedup_matches_batch_survivor_set(spark, sf_dir, tmp_path):
     """Stream-drained exact-dedup survivors == the batch survivor CONTENT
     set on the same drops, and cross-batch duplicates are suppressed by
     state (VERDICT r2 item 6)."""
-    from confluence2md_spark.streaming.incremental import run_streaming_dedup
+    from confluence2md_spark.streaming.incremental import streaming_exact_dedup
 
     src = str(tmp_path / "docs")
     out = str(tmp_path / "deduped")
@@ -257,7 +270,7 @@ def test_streaming_dedup_matches_batch_survivor_set(spark, sf_dir, tmp_path):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.filter("doc_id < 300").write.mode("overwrite").parquet(src)
-    run_streaming_dedup(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_exact_dedup, out, ckpt).awaitTermination(120)
     n1 = spark.read.parquet(out).count()
 
     # batch 2: remaining docs PLUS a re-drop of some batch-1 docs — the
@@ -266,7 +279,7 @@ def test_streaming_dedup_matches_batch_survivor_set(spark, sf_dir, tmp_path):
     docs.filter("doc_id < 50").withColumn(
         "doc_id", F.col("doc_id") + 10_000
     ).write.mode("append").parquet(src)
-    run_streaming_dedup(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_exact_dedup, out, ckpt).awaitTermination(120)
 
     got = spark.read.parquet(out)
     batch_contents = {
@@ -299,18 +312,13 @@ def test_streaming_dedup_watermark_variant_bounds_state(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string, ts timestamp").write.mode(
         "overwrite"
     ).parquet(src)
-    docs = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .parquet(src)
-    )
-    q = (
-        streaming_exact_dedup(docs, watermark_delay="1 hour")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    q = drain(
+        spark,
+        "doc_id long, text string, ts timestamp",
+        src,
+        partial(streaming_exact_dedup, watermark_delay="1 hour"),
+        out,
+        ckpt,
     )
     q.awaitTermination(120)
     got = spark.read.parquet(out)
@@ -330,7 +338,7 @@ def test_view_attribution_matches_batch_interval_join(spark, tmp_path):
     with view_ts in (purchase_ts - 1h, purchase_ts]."""
     from datetime import datetime as dt
 
-    from confluence2md_spark.streaming.incremental import run_view_attribution
+    from confluence2md_spark.streaming.incremental import streaming_view_attribution
 
     src = str(tmp_path / "ev")
     out = str(tmp_path / "attr")
@@ -355,9 +363,9 @@ def test_view_attribution_matches_batch_interval_join(spark, tmp_path):
         (10, dt(2025, 1, 1, 11, 20), 2, "purchase", 9.0, "{}"),  # <- view 3 CROSS-batch
     ]
     spark.createDataFrame(batch1, schema).write.mode("overwrite").parquet(src)
-    run_view_attribution(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, streaming_view_attribution, out, ckpt).awaitTermination(120)
     spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    run_view_attribution(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, EVENTS_DDL, src, streaming_view_attribution, out, ckpt).awaitTermination(120)
 
     import os
 
@@ -393,17 +401,13 @@ def test_view_attribution_matches_batch_interval_join(spark, tmp_path):
 
 def test_streaming_pii_and_quality_match_batch(spark, tmp_path):
     """The curation signal operators are stateless column transforms, so
-    they lift onto a stream unchanged (readStream -> same select ->
-    append sink) and emit byte-identical rows to the batch pass — the
+    they lift onto a stream unchanged (drain the operator itself into an
+    append sink) and emit the same rows as the batch pass — the
     composition a production pipeline uses to score documents on ingest."""
-    from pyspark.sql import functions as F
-
     from confluence2md_spark.functions.textstats import quality_stats
     from confluence2md_spark.operators.pii import pii_signals
 
     src = str(tmp_path / "docs")
-    out = str(tmp_path / "scored")
-    ckpt = str(tmp_path / "ckpt")
     rows = [
         (0, "mail bob@x.org the a and call 555-123-4567 words here"),
         (1, "plain prose with the and a of stopwords spread around"),
@@ -412,48 +416,19 @@ def test_streaming_pii_and_quality_match_batch(spark, tmp_path):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     docs.write.mode("overwrite").parquet(src)
 
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    # pii_signals ends with an orderBy (illegal on streams), so apply the
-    # same stateless column exprs directly and compare as sets
-    from confluence2md_spark.operators.pii import (
-        EMAIL_RE,
-        IPV4_RE,
-        PHONE_RE,
-        redact,
-    )
+    def streamed(op, name):
+        out, ckpt = str(tmp_path / name), str(tmp_path / f"{name}_ckpt")
+        drain(spark, "doc_id bigint, text string", src, op, out, ckpt).awaitTermination(120)
+        return spark.read.parquet(out)
 
-    proj = stream.select(
-        "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(EMAIL_RE), F.lit(0)))
-        .cast("bigint")
-        .alias("n_email"),
-        F.size(F.regexp_extract_all("text", F.lit(PHONE_RE), F.lit(0)))
-        .cast("bigint")
-        .alias("n_phone"),
-        F.size(F.regexp_extract_all("text", F.lit(IPV4_RE), F.lit(0)))
-        .cast("bigint")
-        .alias("n_ipv4"),
-        F.sha2(redact(F.col("text")), 256).alias("red_sha"),
-    )
-    q = (
-        proj.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {tuple(r) for r in spark.read.parquet(out).collect()}
-    want = {
-        tuple(r)
-        for r in pii_signals(docs)
-        .select("doc_id", "n_email", "n_phone", "n_ipv4", "red_sha")
-        .collect()
-    }
+    cols = ["doc_id", "n_email", "n_phone", "n_ipv4", "red_sha"]
+    got = {tuple(r) for r in streamed(pii_signals, "pii").select(*cols).collect()}
+    want = {tuple(r) for r in pii_signals(docs).select(*cols).collect()}
     assert got == want and len(got) == 3
     # quality signals lift the same way
-    qgot = {tuple(r) for r in quality_stats(docs).collect()}
+    qcols = quality_stats(docs).columns
+    qgot = {tuple(r) for r in streamed(quality_stats, "quality").select(*qcols).collect()}
+    assert qgot == {tuple(r) for r in quality_stats(docs).collect()}
     assert len(qgot) == 3
 
 
@@ -464,9 +439,7 @@ def test_streaming_paragraph_dedup_matches_batch_content_set(spark, sf_dir, tmp_
     from confluence2md_spark.operators.paradedup import (
         synthetic_paragraph_expr_sql,
     )
-    from confluence2md_spark.streaming.incremental import (
-        run_streaming_paragraph_dedup,
-    )
+    from confluence2md_spark.streaming.incremental import streaming_paragraph_dedup
 
     src = str(tmp_path / "pdocs")
     out = str(tmp_path / "paras")
@@ -483,7 +456,7 @@ def test_streaming_paragraph_dedup_matches_batch_content_set(spark, sf_dir, tmp_
         )
     )
     docs.filter("doc_id < 250").write.mode("overwrite").parquet(src)
-    run_streaming_paragraph_dedup(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_paragraph_dedup, out, ckpt).awaitTermination(120)
     n1 = spark.read.parquet(out).count()
 
     # batch 2: the rest (same boilerplate footer/header paragraphs — state
@@ -492,7 +465,7 @@ def test_streaming_paragraph_dedup_matches_batch_content_set(spark, sf_dir, tmp_
     docs.filter("doc_id < 40").withColumn(
         "doc_id", F.col("doc_id") + 50_000
     ).write.mode("append").parquet(src)
-    run_streaming_paragraph_dedup(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_paragraph_dedup, out, ckpt).awaitTermination(120)
 
     got = spark.read.parquet(out)
     batch_paras = {
@@ -507,3 +480,26 @@ def test_streaming_paragraph_dedup_matches_batch_content_set(spark, sf_dir, tmp_
     assert n1 <= len(batch_paras)
     # the ledger carries enough to rebuild: occurrence coords + the text
     assert {"doc_id", "idx", "para"} <= set(got.columns)
+
+
+def test_drain_is_the_only_stream_source_and_sink():
+    """`readStream` / `writeStream` are read in one module only — the drain
+    in streaming/incremental.py; every other streaming job, in the package
+    or the tests, passes its operator to `drain`."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    found = set()
+    for d in ("confluence2md_spark", "tests"):
+        for f in sorted((root / d).rglob("*.py")):
+            for node in ast.walk(ast.parse(f.read_text())):
+                if isinstance(node, ast.Attribute) and node.attr in (
+                    "readStream",
+                    "writeStream",
+                ):
+                    found.add((f.relative_to(root).as_posix(), node.attr))
+    assert found == {
+        ("confluence2md_spark/streaming/incremental.py", "readStream"),
+        ("confluence2md_spark/streaming/incremental.py", "writeStream"),
+    }

@@ -6,12 +6,15 @@ from __future__ import annotations
 
 import datetime as dt
 from collections import Counter
+from functools import partial
 
 from pyspark.sql import functions as F
 
+from confluence2md_spark.streaming import drain
 from confluence2md_spark.streaming.heavyhitters import (
-    run_streaming_heavy_hitters,
+    HH_EVENTS_DDL,
     spacesaving_fold,
+    streaming_heavy_hitters,
 )
 
 M = 8
@@ -88,9 +91,8 @@ def test_stream_matches_pure_fold_and_bounds(spark, tmp_path):
     t0 = dt.datetime(2026, 1, 1)
     keys = _zipfish_stream(600)
     _write_events(spark, src, keys, t0)
-    q = run_streaming_heavy_hitters(
-        spark, src, out, ckpt, m=M, n_buckets=N_BUCKETS
-    )
+    hh = partial(streaming_heavy_hitters, m=M, n_buckets=N_BUCKETS)
+    q = drain(spark, HH_EVENTS_DDL, src, hh, out, ckpt)
     q.awaitTermination(120)
     got = _current_summary(spark, out)
 
@@ -120,9 +122,7 @@ def test_stream_matches_pure_fold_and_bounds(spark, tmp_path):
     _write_events(
         spark, src, _zipfish_stream(400), t0 + dt.timedelta(hours=1), mode="append"
     )
-    q2 = run_streaming_heavy_hitters(
-        spark, src, out, ckpt, m=M, n_buckets=N_BUCKETS
-    )
+    q2 = drain(spark, HH_EVENTS_DDL, src, hh, out, ckpt)
     q2.awaitTermination(120)
     got2 = _current_summary(spark, out)
 

@@ -4,12 +4,15 @@ candidate set, and the frozen-mega-bucket cap bounds state."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from confluence2md_spark.operators.banding import band_join
+from confluence2md_spark.streaming import drain
+from confluence2md_spark.streaming.incremental import DOCS_DDL
 from confluence2md_spark.streaming.neardup import (
     banded_signatures,
-    run_streaming_minhash,
     streaming_minhash_candidates,
 )
 
@@ -41,9 +44,9 @@ def test_streaming_minhash_matches_batch_candidates(spark, sf_dir, tmp_path):
     assert max_bucket < 200
 
     docs.filter("doc_id < 250").write.mode("overwrite").parquet(src)
-    run_streaming_minhash(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_minhash_candidates, out, ckpt).awaitTermination(120)
     docs.filter("doc_id >= 250").write.mode("append").parquet(src)
-    run_streaming_minhash(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_minhash_candidates, out, ckpt).awaitTermination(120)
 
     got = spark.read.parquet(out)
     stream_pairs = {
@@ -79,10 +82,11 @@ def test_streaming_minhash_frozen_bucket_caps_state(spark, tmp_path):
     ddl = "doc_id long, text string, lang string, source string, n_chars long"
     df = spark.createDataFrame(rows, ddl)
     df.filter("doc_id <= 2").write.mode("overwrite").parquet(src)
-    run_streaming_minhash(spark, src, out, ckpt, max_bucket_size=2).awaitTermination(120)
+    frozen = partial(streaming_minhash_candidates, max_bucket_size=2)
+    drain(spark, DOCS_DDL, src, frozen, out, ckpt).awaitTermination(120)
     # doc 3 arrives in a later batch: every one of its buckets is full
     df.filter("doc_id = 3").write.mode("append").parquet(src)
-    run_streaming_minhash(spark, src, out, ckpt, max_bucket_size=2).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, frozen, out, ckpt).awaitTermination(120)
 
     got = spark.read.parquet(out)
     pairs = {(r["src"], r["dst"]) for r in got.select("src", "dst").distinct().collect()}
@@ -103,12 +107,12 @@ def test_streaming_minhash_skips_duplicate_delivery(spark, tmp_path):
     spark.createDataFrame(
         [(1, text, "en", "s", len(text)), (2, text, "en", "s", len(text))], ddl
     ).write.mode("overwrite").parquet(src)
-    run_streaming_minhash(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_minhash_candidates, out, ckpt).awaitTermination(120)
     # re-drop doc 1 verbatim
     spark.createDataFrame([(1, text, "en", "s", len(text))], ddl).write.mode(
         "append"
     ).parquet(src)
-    run_streaming_minhash(spark, src, out, ckpt).awaitTermination(120)
+    drain(spark, DOCS_DDL, src, streaming_minhash_candidates, out, ckpt).awaitTermination(120)
 
     got = spark.read.parquet(out).collect()
     assert {(r["src"], r["dst"]) for r in got} == {(1, 2)}
